@@ -26,8 +26,12 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StructField, S
 case class LongPairs(child: Expression)
     extends UnaryExpression with CodegenFallback {
 
+  /** Elements are read with `getLong`, so an array that may hold NULLs
+    * is rejected here rather than paired as garbage. */
   override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(LongType, _) => TypeCheckResult.TypeCheckSuccess
+    case ArrayType(LongType, false) => TypeCheckResult.TypeCheckSuccess
+    case ArrayType(LongType, true) => TypeCheckResult.TypeCheckFailure(
+      "long_pairs requires array<bigint> without NULL elements, got an array that may hold NULLs")
     case t => TypeCheckResult.TypeCheckFailure(
       s"long_pairs requires array<bigint>, got $t")
   }

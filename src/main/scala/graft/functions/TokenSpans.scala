@@ -169,8 +169,11 @@ case class TokenWindows(left: Expression, right: Expression)
 
   override def checkInputDataTypes(): TypeCheckResult =
     (left.dataType, right.dataType) match {
-      case (StringType, IntegerType) if right.foldable =>
-        TypeCheckResult.TypeCheckSuccess
+      case (StringType, IntegerType) if right.foldable => right.eval() match {
+        case n: Int if n >= 1 => TypeCheckResult.TypeCheckSuccess
+        case n => TypeCheckResult.TypeCheckFailure(
+          s"token_windows requires a non-null window n >= 1, got ${if (n == null) "NULL" else n}")
+      }
       case (l, r) => TypeCheckResult.TypeCheckFailure(
         s"token_windows requires (string, foldable int), got $l and $r")
     }

@@ -25,7 +25,11 @@ object HybridRetrieval {
     * counts. Ties rank by `(jaccard DESC, id ASC)`. Queries are a
     * small frame (broadcast); the intersection join is keyed by token,
     * so corpus work is proportional to matching postings, never
-    * all-pairs. Returns `(query_id, neighbor_id, jaccard, rnk)`. */
+    * all-pairs. Returns `(query_id, neighbor_id, jaccard, rnk)`.
+    *
+    * Precondition: `idCol` is unique within `docs` and within
+    * `queries`. Tokens are deduplicated per row, not per id, so rows
+    * sharing an id inflate that id's set size and intersection counts. */
   def jaccardTopK(docs: DataFrame, queries: DataFrame, k: Int,
       idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
     // r17: per-doc-distinct tokens via the native shingles(·, 1)

@@ -7,7 +7,7 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.hadoop.io.compress.{CompressionCodecFactory, SplittableCompressionCodec, SplitCompressionInputStream}
+import org.apache.hadoop.io.compress.{BZip2Codec, CompressionCodecFactory, SplitCompressionInputStream}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
@@ -314,7 +314,8 @@ class MediaWikiScan(requiredSchema: StructType, props: Map[String, String])
     new MediaWikiMicroBatchStream(requiredSchema, props, checkpointLocation)
 
   override def supportedCustomMetrics(): Array[org.apache.spark.sql.connector.metric.CustomMetric] =
-    Array(new PagesReadMetric, new RevisionsReadMetric, new PagesSkippedMetric)
+    Array(new PagesReadMetric, new RevisionsReadMetric, new PagesSkippedMetric,
+      new BytesDecompressedMetric, new Bz2BlocksMetric)
 }
 
 object MediaWikiScan {
@@ -378,7 +379,8 @@ object MediaWikiScan {
       f: Path, maxBytes: Long, props: Map[String, String]): Seq[MediaWikiInputPartition] = {
     val len = fs.getFileStatus(f).getLen
     val codec = codecs.getCodec(f)
-    val splittable = codec == null || codec.isInstanceOf[SplittableCompressionCodec]
+    // bz2 is the one codec the reader splits (Bz2SplitSource)
+    val splittable = codec == null || codec.isInstanceOf[BZip2Codec]
     // For block-compressed files never split below ~4 compression
     // blocks (bz2 max block = 900KB): sub-block splits own no data
     // but still decompress a whole block each to find that out.
@@ -748,6 +750,8 @@ abstract class SumMetric(override val name: String, override val description: St
 class PagesReadMetric extends SumMetric("pagesRead", "pages read")
 class RevisionsReadMetric extends SumMetric("revisionsRead", "revisions read")
 class PagesSkippedMetric extends SumMetric("pagesSkipped", "pages skipped by filters")
+class BytesDecompressedMetric extends SumMetric("bytesDecompressed", "bytes decompressed")
+class Bz2BlocksMetric extends SumMetric("bz2Blocks", "bz2 blocks decoded")
 
 class MediaWikiReaderFactory(schema: StructType, props: Map[String, String],
     hadoopConf: Map[String, String]) extends PartitionReaderFactory {
@@ -757,8 +761,8 @@ class MediaWikiReaderFactory(schema: StructType, props: Map[String, String],
   }
 }
 
-/** Per-task reader: opens the split (plain seek, or codec-adjusted
-  * boundaries for splittable compression — cf. reference
+/** Per-task reader: opens the split (plain seek, or bz2 block
+  * boundaries through [[Bz2SplitSource]] — cf. reference
   * `SeekableInputStream.java:47-74`), then drives [[PageRecordIterator]]. */
 class MediaWikiPartitionReader(
     part: MediaWikiInputPartition, schema: StructType, props: Map[String, String],
@@ -780,15 +784,15 @@ class MediaWikiPartitionReader(
       case null =>
         if (part.start > 0) rawIn.seek(part.start)
         (new CountingByteSource(rawIn, part.start), part.start, part.end, false)
-      case c: SplittableCompressionCodec if part.end < part.fileLen || part.start > 0 =>
-        val s = c.createInputStream(rawIn, c.createDecompressor(), part.start,
-          part.end, SplittableCompressionCodec.READ_MODE.BYBLOCK)
-        // First split owns its leading block inclusively; later splits
-        // exclude the boundary block (owned by their predecessor).
-        val os = if (part.start == 0) -1L else s.getAdjustedStart
-        (new BlockPosByteSource(s), os, s.getAdjustedEnd, true)
+      case _: BZip2Codec =>
+        // in-repo block decoder, blocks decoded ahead on all cores; split
+        // ownership as on Hadoop's BYBLOCK split stream
+        val whole = part.start == 0 && part.end >= part.fileLen
+        val s = new Bz2SplitSource(rawIn, part.path, part.fileLen, part.start,
+          if (whole) Long.MaxValue else part.end)
+        (s, s.ownStart, s.ownEnd, true)
       case c =>
-        // whole-file compressed read
+        // whole-file read through another (non-splittable) codec
         (new CountingByteSource(c.createInputStream(rawIn), 0), 0L, Long.MaxValue, false)
     }
 
@@ -905,15 +909,24 @@ class MediaWikiPartitionReader(
       override def name(): String = n
       override def value(): Long = v
     }
+    val (decompressed, blocks) = source match {
+      case b: Bz2SplitSource => (b.bytesDecoded, b.blocksDecoded)
+      case c: CountingByteSource if codec != null => (c.bytesRead, 0L)
+      case _ => (0L, 0L) // plain XML
+    }
     Array(m("pagesRead", iter.pagesRead),
       m("revisionsRead", iter.revisionsRead),
-      m("pagesSkipped", iter.pagesSkipped))
+      m("pagesSkipped", iter.pagesSkipped),
+      m("bytesDecompressed", decompressed),
+      m("bz2Blocks", blocks))
   }
 }
 
-/** Ownership positions from a block-compressed splittable stream: the
-  * codec reports positions that advance only at block boundaries, and
-  * reports identical adjusted boundaries to adjacent splits.
+/** Ownership positions from Hadoop's block-compressed splittable
+  * stream (the bz2 split path before [[Bz2SplitSource]], kept as the
+  * reference its ownership is checked against): the codec reports
+  * positions that advance only at block boundaries, and reports
+  * identical adjusted boundaries to adjacent splits.
   *
   * Buffered: BYBLOCK-mode reads never span a compression-block boundary,
   * so all bytes of one bulk read share the position the codec reports

@@ -44,6 +44,7 @@ final class CountingByteSource(in: InputStream, startOffset: Long) extends PosBy
   /** file offset of buf(0) */
   private var bufBase = startOffset
   private var lastPos = startOffset - 1
+  private var readTotal = 0L
 
   def read(): Int = {
     if (bufPos >= bufLen && !refill()) return -1
@@ -56,9 +57,12 @@ final class CountingByteSource(in: InputStream, startOffset: Long) extends PosBy
     bufBase += bufLen
     bufLen = in.read(buf)
     bufPos = 0
+    if (bufLen > 0) readTotal += bufLen
     bufLen > 0
   }
   def pos: Long = lastPos
+  /** Bytes read from `in` so far. */
+  def bytesRead: Long = readTotal
   def close(): Unit = in.close()
 
   def bulkFill(): Boolean = bufPos < bufLen || refill()

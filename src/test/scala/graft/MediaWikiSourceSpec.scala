@@ -155,7 +155,35 @@ class MediaWikiSourceSpec extends AnyFunSuite {
       val b = fingerprint("400000")
       val c = fingerprint("100000000")
       assert(a == b && b == c, "split-size-dependent output")
+      // decode metrics: a whole-file read decodes every byte once; split
+      // reads also decode the boundary blocks their last pages run into
+      val raw = dump.getBytes("UTF-8").length.toLong
+      val (wholeBytes, wholeBlocks) = decodeMetrics(spark.read.format("mediawiki")
+        .option("minSplitBytes", "100000000").load(f.getAbsolutePath))
+      assert(wholeBytes == raw, s"whole-file bytesDecompressed $wholeBytes != $raw")
+      assert(wholeBlocks > 10, s"whole-file bz2Blocks $wholeBlocks")
+      val (splitBytes, splitBlocks) = decodeMetrics(df)
+      assert(splitBytes > raw && splitBytes < 2 * raw, s"split bytesDecompressed $splitBytes vs $raw")
+      assert(splitBlocks > wholeBlocks && splitBlocks <= wholeBlocks + 3 * df.rdd.getNumPartitions,
+        s"split bz2Blocks $splitBlocks vs $wholeBlocks whole")
     } finally spark.conf.set("spark.sql.files.maxPartitionBytes", "134217728")
+  }
+
+  /** (bytesDecompressed, bz2Blocks) of the scan after counting `df`. */
+  def decodeMetrics(df: org.apache.spark.sql.DataFrame): (Long, Long) = {
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
+    def scans(p: SparkPlan): Seq[BatchScanExec] = p match {
+      case b: BatchScanExec => Seq(b)
+      case a: AdaptiveSparkPlanExec => scans(a.executedPlan)
+      case q: QueryStageExec => scans(q.plan)
+      case other => other.children.flatMap(scans)
+    }
+    val q = df.select($"curr.rev_id")
+    q.collect()
+    val scan = scans(q.queryExecution.executedPlan).head
+    (scan.metrics("bytesDecompressed").value, scan.metrics("bz2Blocks").value)
   }
 
   test("gzip (non-splittable codec): single-partition plan, whole-file fallback") {
@@ -187,6 +215,8 @@ class MediaWikiSourceSpec extends AnyFunSuite {
           .collect().map(r => (r.getLong(0), r.getLong(1), r.get(2))).toList.sortBy(t => (t._1, t._2))
       assert(fp(f.getAbsolutePath) == fp(plain.getAbsolutePath),
         "gzip whole-file read must equal the uncompressed read")
+      assert(decodeMetrics(spark.read.format("mediawiki").load(f.getAbsolutePath)) ==
+        (dump.getBytes("UTF-8").length.toLong, 0L))
     } finally spark.conf.set("spark.sql.files.maxPartitionBytes", "134217728")
   }
 

@@ -90,6 +90,18 @@ class RelationalSpec extends AnyFunSuite {
     assert(got(4) == Set((5L, 9L)))
   }
 
+  test("long_pairs rejects arrays that may hold NULL elements at analysis") {
+    import spark.implicits._
+    val df = Seq(Seq(1L, 2L)).toDF("ps")
+    val e = intercept[org.apache.spark.sql.AnalysisException](
+      df.selectExpr("long_pairs(array(1L, CAST(NULL AS BIGINT))) AS p"))
+    assert(e.getMessage.contains("without NULL elements"), e.getMessage)
+    intercept[org.apache.spark.sql.AnalysisException](
+      df.selectExpr("long_pairs(transform(ps, x -> IF(x > 1, NULL, x))) AS p"))
+    // a non-null array of bigint still analyses and pairs
+    assert(df.selectExpr("size(long_pairs(ps))").head().getInt(0) == 1)
+  }
+
   test("q122 collect_set+long_pairs shape ≡ the former distinct self-join") {
     import spark.implicits._
     import org.apache.spark.sql.functions.{count, lit}

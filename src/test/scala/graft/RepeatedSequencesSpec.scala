@@ -103,6 +103,16 @@ class RepeatedSequencesSpec extends AnyFunSuite {
     }
   }
 
+  test("token_windows rejects a window n that is not a non-null literal >= 1") {
+    val df = Seq((1L, "a b c")).toDF("doc_id", "text")
+    for (n <- Seq("0", "-2", "CAST(NULL AS INT)")) {
+      val e = intercept[org.apache.spark.sql.AnalysisException](
+        df.selectExpr(s"token_windows(text, $n) AS ws"))
+      assert(e.getMessage.contains("n >= 1"), s"n=$n: ${e.getMessage}")
+    }
+    assert(df.selectExpr("size(token_windows(text, 1))").head().getInt(0) == 3)
+  }
+
   test("empty and single-token documents do not break the scan") {
     val df = Seq(1L -> "", 2L -> "x", 3L -> "x").toDF("doc_id", "text")
     val got = RepeatedSequences.topRepeats(df, "doc_id", "text", window = 4, topK = 10)
