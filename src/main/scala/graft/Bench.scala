@@ -53,7 +53,7 @@ object Bench {
     // vocabulary DOUBLED round-over-round (157 → 335 signature words)
     // — which moves every dense-sweep query by design. Cross-round
     // per-query comparisons are only valid when these match; carrying
-    // them makes the artifact self-adjudicating (bench_last.json only).
+    // them makes the artifact self-adjudicating (artifact file only).
     val dataStats = try {
       val d = spark.read.parquet(s"$sfDir/documents.parquet")
       val r = d.selectExpr("sum(length(text)) AS chars").collect()(0).getLong(0)
@@ -104,7 +104,7 @@ object Bench {
     // sweep) — host steal that starts MID-sweep leaves no trace in the
     // artifact. A ~0.1s single-thread probe every ~30 queries records
     // the host's effective speed across the measurement window itself
-    // (bench_last.json only), so future drift self-adjudicates: flat
+    // (artifact file only), so future drift self-adjudicates: flat
     // series + slower queries = build; elevated series = host.
     // ... and an MT twin: r13's artifact had FLAT single-thread sweep
     // canaries (0.065-0.071) while load_avg sat at 7-8.6 and the quiet-
@@ -138,7 +138,7 @@ object Bench {
     // JVM the notes call ~2× degraded (codegen churn, JIT deopt, GC
     // debt) and ANTI-adjudicated exactly the rows it covered (q180
     // 15.84 vs 7.95 measured). A canary can't see in-JVM degradation —
-    // only a fresh process removes it. Recorded in bench_last.json
+    // only a fresh process removes it. Recorded in the artifact file
     // ONLY; `steady_jvm` says which path produced the numbers, and the
     // child's own edge mini-canaries keep host-steal adjudication for
     // the steady window. Falls back to the old in-JVM third pass
@@ -227,15 +227,18 @@ object Bench {
       .mkString("[", ",", "]")
     // steady_detail: the child's FULL marker body, verbatim — per-query
     // pass walls, per-micro-batch durations, per-query canaries, MT edge
-    // canaries, child load averages. bench_last.json only (unbounded
+    // canaries, child load averages. Artifact file only (unbounded
     // file, not the stdout line); makes steady outliers self-adjudicating
     // without a rerun (r13 verdict #1).
     val json = s"""{"metric":"total","value":${ms(total)},"unit":"sec","engine_total":${ms(engineTotal)},"fixture":$fixturesJson,"queries":$qs,"steady":$steadyJson,"steady_jvm":"$steadyJvm","steady_canary_sec":$steadyCanaryJson,"steady_mem_avail_gb":$steadyMemGb,"steady_hostile":$steadyHostile,"steady_detail":$steadyDetail,"sweep_canary_sec":$sweepCanaryJson,"sweep_canary_mt_sec":$sweepCanaryMtJson,"sf":"$sfDir","table_rows":$tableRowsJson,"data":{$dataStats},"ingest_mbps":$ingest,"ingest_warm_sec":$curve,"ingest_warm_tag":"$warmTag","jvm":"${jvmProfile()}","env":${envOverrides()},"canary_sec":$canary,"canary_mt_sec":$canaryMt,"load_avg":[$loadStart,$loadEnd]}"""
     // a file copy makes the artifact recoverable even if the driver's
     // stdout tail capture truncates (it did, twice: r4/r5 recorded
-    // "parsed": null); cwd is the repo when sbt runs
+    // "parsed": null); cwd is the repo when sbt runs. Only a 32-core
+    // run writes bench_last.json; any other core count writes
+    // bench_c<N>_last.json, so it can never overwrite the 32-core anchor
+    val artifact = if (cpus == "32") "bench_last.json" else s"bench_c${cpus}_last.json"
     try {
-      val pw = new java.io.PrintWriter("bench_last.json")
+      val pw = new java.io.PrintWriter(artifact)
       try pw.println(json) finally pw.close()
     } catch { case _: Throwable => }
     // The stdout line must survive the driver's bounded tail capture
@@ -243,13 +246,13 @@ object Bench {
     // r6's full-name line was ~3.3 KB at 90 queries, and even the
     // "compact qNN twin" hit ~2.2 KB at 142 queries, so "parsed" came
     // up null in ALL SEVEN rounds. The stdout line is now SUMMARY-ONLY
-    // with a fixed-size query section (the 5 slowest, by short key) —
-    // it cannot grow with query count. The full per-query map and warm
-    // curve live in bench_last.json, which the line names.
-    val slowest5 = results.toSeq.sortBy(-_._2).take(5).map { case (k, v) =>
+    // with a fixed-size query section (the 20 slowest, by short key,
+    // ~260 chars) — it cannot grow with query count. The full per-query
+    // map and warm curve live in the artifact file, which the line names.
+    val slowest = results.toSeq.sortBy(-_._2).take(20).map { case (k, v) =>
       "\"" + k.takeWhile(_ != '_') + "\":" + ms(v)
     }.mkString("{", ",", "}")
-    val jsonShort = s"""{"metric":"total","value":${ms(total)},"unit":"sec","n_queries":${results.size},"queries":$slowest5,"queries_note":"slowest 5 of ${results.size}; full map in bench_last.json","per_query":"bench_last.json","sf":"$sfDir","ingest_mbps":$ingest,"ingest_warm_tag":"$warmTag","jvm":"${jvmProfile()}","env":${envOverrides()},"canary_sec":$canary,"canary_mt_sec":$canaryMt,"load_avg":[$loadStart,$loadEnd]}"""
+    val jsonShort = s"""{"metric":"total","value":${ms(total)},"unit":"sec","n_queries":${results.size},"queries":$slowest,"queries_note":"slowest 20 of ${results.size}; full map in $artifact","per_query":"$artifact","sf":"$sfDir","ingest_mbps":$ingest,"ingest_warm_tag":"$warmTag","jvm":"${jvmProfile()}","env":${envOverrides()},"canary_sec":$canary,"canary_mt_sec":$canaryMt,"load_avg":[$loadStart,$loadEnd]}"""
     // hard guarantee: the line fits the driver's capture window with
     // headroom for the capture's own framing. The query section is
     // fixed-size, so this can only trip if a pathological env value

@@ -4,29 +4,38 @@ import scala.collection.mutable
 
 import org.apache.spark.unsafe.types.UTF8String
 
+/** One diff operation: `action` ∈ {-1 remove, +1 add}; `position` is the
+  * running offset that advances by `content.length` (UTF-16 units) for
+  * equal and add ops (reference semantics: `python/revision_differ.py:78-84`).
+  * The row shape of the typed diffdb facade (`MediaWiki.DiffRow`). */
+case class DiffOp(position: Int, action: Int, content: String)
+
 /** One diff operation over UTF-8 byte content. `position` counts
-  * UTF-16 units (identical to [[DiffOp]]'s `content.length` accounting,
-  * so byte-path and String-path positions agree on any input). */
+  * UTF-16 units, exactly [[DiffOp]]'s `content.length` accounting. */
 case class DiffOpU8(position: Int, action: Int, content: UTF8String)
 
-/** Byte-native twin of [[DiffKernel]]: tokenize, intern, and diff
-  * directly over UTF-8 bytes (`UTF8String`), with no intermediate
-  * `java.lang.String`. This is the ingest hot path — the String form
-  * paid two full charset decodes per row (`UTF8String.toString` for
-  * both sides of `wiki_diff_safe`) plus per-token `char` access at
-  * twice the memory traffic of bytes.
+/** The token-level text diff kernel — the Spark-native re-expression of
+  * the reference's differ (`python/revision_differ.py:30-84`): wikitext
+  * tokenization, token interning, and a Myers O(ND) diff ([[Myers]]),
+  * all directly over UTF-8 bytes (`UTF8String`) with no intermediate
+  * `java.lang.String`. Every diff in the engine runs here:
+  * `wiki_diff_safe` (the diffdb column), `wiki_diff`, `wiki_tokenize`
+  * and `wiki_edit_distance`.
   *
-  * Semantics are pinned to the String kernel by a differential spec
-  * (DiffKernelU8Spec): identical op content and positions. Token
-  * classes mirror `DiffKernel.tokenBounds` (the reference's
-  * tokenization, `python/revision_differ.py:30-50`); all class-defining
-  * characters are ASCII, so byte comparison is exact. One deliberate
-  * divergence: a supplementary character (4-byte UTF-8 sequence) is ONE
-  * token here, where the UTF-16 scanner yields two surrogate-half
-  * tokens. Positions are unaffected (accounting is UTF-16-length
-  * based); op CONTENT can differ only if an edit boundary falls between
-  * two astral code points that share a high surrogate — not
-  * representable in well-formed UTF-8 output anyway.
+  * Token classes and their leftmost-first alternation order are the
+  * reference's (`python/revision_differ.py:30-50`), including its quirks
+  * (the `{{{`/`}}}` branches are dead because `{{`/`}}` precede them);
+  * all class-defining characters are ASCII, so byte comparison is exact.
+  * A differential spec (DiffKernelU8Spec) pins tokens, op content and
+  * positions to a String kernel that runs the reference's regex. One
+  * deliberate divergence from a UTF-16 scanner: a supplementary
+  * character (4-byte UTF-8 sequence) is ONE token here, not two
+  * surrogate-half tokens, so op content is always whole code points.
+  * Positions count UTF-16 units either way.
+  *
+  * The diff runs over `Int` token ids, not hashed UTF-16 chars, removing
+  * the reference's 65,535-distinct-token cap (`unichr` in
+  * `revision_differ.py:52-63`) with no behavior change below the cap.
   */
 object DiffKernelU8 {
 
@@ -55,9 +64,9 @@ object DiffKernelU8 {
   }
 
   /** Token boundary scanner over UTF-8 bytes [from, until): flat
-    * (start, end) pairs, same alternation-order behavior as
-    * `DiffKernel.tokenBounds`. (Allocating wrapper over
-    * [[tokenBoundsInto]] — the hot path reuses per-thread buffers.) */
+    * (start, end) pairs, every token a contiguous region. (Allocating
+    * wrapper over [[tokenBoundsInto]] — the hot path reuses per-thread
+    * buffers.) */
   private[graft] def tokenBounds(b: Array[Byte], from: Int, until: Int): Array[Int] = {
     val (buf, n) = tokenBoundsInto(b, from, until, new Array[Int](16))
     java.util.Arrays.copyOf(buf, n)
@@ -118,6 +127,15 @@ object DiffKernelU8 {
     (out, n)
   }
 
+  /** Tokens of `text` as owned `UTF8String`s; NULL tokenizes as "". */
+  def tokenize(text: UTF8String): Array[UTF8String] = {
+    if (text == null) return Array.empty
+    val b = text.getBytes
+    val bounds = tokenBounds(b, 0, b.length)
+    Array.tabulate(bounds.length / 2)(k =>
+      UTF8String.fromBytes(java.util.Arrays.copyOfRange(b, bounds(2 * k), bounds(2 * k + 1))))
+  }
+
   /** UTF-16 length of a UTF-8 byte region: one unit per non-continuation
     * byte, plus one extra unit per 4-byte lead (surrogate pair). */
   private def utf16Len(b: Array[Byte], from: Int, until: Int): Int = {
@@ -131,9 +149,12 @@ object DiffKernelU8 {
     n
   }
 
-  /** Open-addressing byte-region interner (the byte twin of
-    * [[DiffKernel.Interner]]): a token allocates its byte copy only the
-    * first time it is seen; UTF-16 lengths are cached per token for the
+  /** Open-addressing byte-region interner shared by both texts (the
+    * reference shares its dict the same way, `revision_differ.py:68-70`),
+    * keyed by a region hash so lookups compare in place: a token
+    * allocates its byte copy only the first time it is seen. Full hashes
+    * sit beside the slot ids so a probe chain skips mismatched entries
+    * without a byte compare; UTF-16 lengths are cached per token for the
     * position accounting. */
   private[graft] final class InternerU8 {
     val tokens = mutable.ArrayBuffer.empty[Array[Byte]]
@@ -206,12 +227,15 @@ object DiffKernelU8 {
   }
 
   /** Per-thread context: persistent interner + one-entry memo of the
-    * last tokenized text (the byte twin of `DiffKernel.DiffContext`).
-    * In the ingest pipeline each revision text arrives twice — as
-    * `curr` of one row, then `prev` of the next — and the reader shares
-    * ONE `UTF8String` object between the two rows, so the memo usually
-    * hits on reference identity; an UnsafeRow copy downstream still
-    * hits via `UTF8String.equals` (memcmp). */
+    * last tokenized text. In the ingest pipeline each revision text
+    * arrives twice — as `curr` of one row, then `prev` of the next — and
+    * the reader shares ONE `UTF8String` object between the two rows, so
+    * the memo usually hits on reference identity; an UnsafeRow copy
+    * downstream still hits via `UTF8String.equals` (memcmp). Sharing the
+    * interner across calls is behavior-neutral — diff output depends
+    * only on id-equality ⇔ token-byte equality, which any interner
+    * preserves — and the context resets once the dictionary tops
+    * `MaxDictTokens`, bounding memory on long-lived executor threads. */
   private final class Ctx {
     var interner = new InternerU8
     // The memo key is ALWAYS the owned copy `lastStr`: a foreign
@@ -326,7 +350,7 @@ object DiffKernelU8 {
     val interner = ctx.interner
     val aIds = ctx.ids(if (oldText == null) EMPTY else oldText)
     val bIds = ctx.ids(if (newText == null) EMPTY else newText)
-    val runs = DiffKernel.computeRuns(aIds, bIds)
+    val runs = Myers.computeRuns(aIds, bIds)
     val acts = runs.acts
     val los = runs.los
     val his = runs.his
@@ -387,7 +411,7 @@ object DiffKernelU8 {
       }
       if (insN > 0) {
         // UTF-16-unit accounting (NOT numChars, which counts code
-        // points): parity with the String path's content.length
+        // points): the reference's content.length
         if (reportAdd) out += DiffOpU8(position, 1, build(ins, insN, bIds))
         position += len16Of(ins, insN, bIds)
         insN = 0
@@ -414,4 +438,155 @@ object DiffKernelU8 {
     flushEq()
     out.toArray
   }
+
+  /** Token-level edit distance: the UTF-16 length of the removed plus
+    * the added content (NULL reads as ""). */
+  def editDistance(oldText: UTF8String, newText: UTF8String): Long = {
+    val ops = diffOps(oldText, newText)
+    var d = 0L
+    var i = 0
+    while (i < ops.length) {
+      val b = ops(i).content.getBytes
+      d += utf16Len(b, 0, b.length)
+      i += 1
+    }
+    d
+  }
+}
+
+/** Myers O(ND) diff over int token ids with linear-space middle-snake
+  * bisection (Myers 1986, "An O(ND) Difference Algorithm" — the
+  * published algorithm the reference's bundled diff library also
+  * implements, `python/diff_match_patch.py:254-355`). Produces region
+  * runs; [[DiffKernelU8.diffOps]] canonicalizes them into ops. */
+private[functions] object Myers {
+
+  /** Diff runs as parallel (act, lo, hi) region arrays — equal and
+    * delete runs index into `a`, insert runs into `b`. The bisection
+    * recursion appends regions in output order; nothing is sliced or
+    * boxed on the hot path. */
+  final class Runs {
+    var acts = new Array[Int](16)
+    var los = new Array[Int](16)
+    var his = new Array[Int](16)
+    var size = 0
+    def add(act: Int, lo: Int, hi: Int): Unit = {
+      if (hi <= lo) return
+      if (size == acts.length) {
+        acts = java.util.Arrays.copyOf(acts, size * 2)
+        los = java.util.Arrays.copyOf(los, size * 2)
+        his = java.util.Arrays.copyOf(his, size * 2)
+      }
+      acts(size) = act; los(size) = lo; his(size) = hi
+      size += 1
+    }
+  }
+
+  def computeRuns(a: Array[Int], b: Array[Int]): Runs = {
+    val out = new Runs
+    compute(a, 0, a.length, b, 0, b.length, out)
+    out
+  }
+
+  /** Trim common prefix/suffix, then bisect on the middle of an optimal
+    * edit path and recurse on the halves — all on index ranges of the
+    * two original arrays (no sub-array copies). */
+  private def compute(a: Array[Int], aLo: Int, aHi: Int,
+                      b: Array[Int], bLo: Int, bHi: Int, out: Runs): Unit = {
+    // trim common prefix/suffix
+    var p = 0
+    val maxP = math.min(aHi - aLo, bHi - bLo)
+    while (p < maxP && a(aLo + p) == b(bLo + p)) p += 1
+    var s = 0
+    val maxS = maxP - p
+    while (s < maxS && a(aHi - 1 - s) == b(bHi - 1 - s)) s += 1
+    if (p > 0) out.add(0, aLo, aLo + p)
+    val amLo = aLo + p; val amHi = aHi - s
+    val bmLo = bLo + p; val bmHi = bHi - s
+    if (amLo >= amHi && bmLo >= bmHi) ()
+    else if (amLo >= amHi) out.add(1, bmLo, bmHi)
+    else if (bmLo >= bmHi) out.add(-1, amLo, amHi)
+    else {
+      val xy = middleSnake(a, amLo, amHi, b, bmLo, bmHi)
+      val x = (xy >> 32).toInt
+      val y = xy.toInt
+      val n = amHi - amLo
+      val m = bmHi - bmLo
+      val degenerate = (x <= 0 && y <= 0) || (x >= n && y >= m)
+      if (x < 0 || degenerate) { out.add(-1, amLo, amHi); out.add(1, bmLo, bmHi) }
+      else {
+        compute(a, amLo, amLo + x, b, bmLo, bmLo + y, out)
+        compute(a, amLo + x, amHi, b, bmLo + y, bmHi, out)
+      }
+    }
+    if (s > 0) out.add(0, aHi - s, aHi)
+  }
+
+  /** Find a split point (x, y) on an optimal edit path: forward and
+    * reverse D-paths are advanced in lockstep until they overlap
+    * (Myers 1986, "An O(ND) Difference Algorithm", linear-space
+    * refinement — the same published algorithm behind the reference's
+    * bundled diff library). Coordinates are relative to (aLo, bLo),
+    * packed as (x << 32 | y); returns (-1, -1) only for degenerate
+    * input. */
+  private def middleSnake(a: Array[Int], aLo: Int, aHi: Int,
+                          b: Array[Int], bLo: Int, bHi: Int): Long = {
+    val n = aHi - aLo
+    val m = bHi - bLo
+    val maxD = (n + m + 1) / 2
+    val vOff = maxD
+    val vSize = 2 * maxD + 2
+    val v1 = Array.fill(vSize)(-1)
+    val v2 = Array.fill(vSize)(-1)
+    v1(vOff + 1) = 0
+    v2(vOff + 1) = 0
+    val delta = n - m
+    val front = delta % 2 != 0
+    var d = 0
+    while (d <= maxD) {
+      // forward pass
+      var k = -d
+      while (k <= d) {
+        val ki = vOff + k
+        var x =
+          if (k == -d || (k != d && v1(ki - 1) < v1(ki + 1))) v1(ki + 1)
+          else v1(ki - 1) + 1
+        var y = x - k
+        while (x < n && y < m && a(aLo + x) == b(bLo + y)) { x += 1; y += 1 }
+        v1(ki) = x
+        if (front) {
+          val k2i = vOff + delta - k
+          if (k2i >= 0 && k2i < vSize && v2(k2i) != -1) {
+            if (x >= n - v2(k2i)) return pack(x, y) // paths overlap
+          }
+        }
+        k += 2
+      }
+      // reverse pass
+      k = -d
+      while (k <= d) {
+        val ki = vOff + k
+        var x =
+          if (k == -d || (k != d && v2(ki - 1) < v2(ki + 1))) v2(ki + 1)
+          else v2(ki - 1) + 1
+        var y = x - k
+        while (x < n && y < m && a(aLo + n - x - 1) == b(bLo + m - y - 1)) { x += 1; y += 1 }
+        v2(ki) = x
+        if (!front) {
+          val k1i = vOff + delta - k
+          if (k1i >= 0 && k1i < vSize && v1(k1i) != -1) {
+            val x1 = v1(k1i)
+            val y1 = x1 - (delta - k)
+            if (x1 >= n - x) return pack(x1, y1) // paths overlap
+          }
+        }
+        k += 2
+      }
+      d += 1
+    }
+    pack(-1, -1)
+  }
+
+  @inline private def pack(x: Int, y: Int): Long =
+    (x.toLong << 32) | (y.toLong & 0xffffffffL)
 }

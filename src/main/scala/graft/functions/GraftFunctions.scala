@@ -1,38 +1,64 @@
 package graft.functions
 
+import scala.reflect.{ClassTag, classTag}
+
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.ColumnBridge
 
 /** SQL/Column exposure of the graft function surface.
   *
-  * `register(spark)` installs them for `spark.sql(...)`:
+  * [[sqlFunctions]] is the one table of graft's native SQL functions.
+  * `GraftExtensions` injects it into every session it builds;
+  * `register(spark)` installs the same table into a session built
+  * without the extensions. Among them:
   *  - `wiki_tokenize(text) -> array<string>`
   *  - `wiki_diff(old, new) -> array<struct<position int, action int, content string>>`
   *  - `wiki_edit_distance(old, new) -> bigint` (token-level)
+  *  - `wiki_diff_safe(old, new) -> struct<diffs, error>` (the diffdb column)
   *  - `doc_fingerprint64(text) -> bigint` (rolling min-hash fingerprint)
   *
-  * Title normalization (reference `revision_differ.py:141-142`) needs a
-  * namespaces map, so it is exposed as `normalizeTitleUdf(nsMap)`
-  * rather than a fixed SQL registration.
+  * [[diffdb]] builds its expressions directly, so it needs neither.
   */
 object GraftFunctions {
 
-  val tokenizeUdf = udf((s: String) => if (s == null) Array.empty[String] else DiffKernel.tokenize(s))
+  type FunctionDescription = (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)
 
-  val diffUdf = udf((a: String, b: String) => DiffKernel.diffOps(a, b))
+  private def fn[E <: Expression: ClassTag](name: String, arity: Int)(
+      build: Seq[Expression] => E): FunctionDescription =
+    (FunctionIdentifier(name), new ExpressionInfo(classTag[E].runtimeClass.getName, name),
+      (children: Seq[Expression]) => {
+        require(children.length == arity,
+          s"$name expects exactly $arity argument${if (arity == 1) "" else "s"}")
+        build(children)
+      })
 
-  /** Error-capturing diff (the reference's per-record failure rows,
-    * `revision_differ.py:167-170`): a kernel failure yields an error
-    * message instead of killing the job — a hard requirement at dump
-    * scale. Returns (ops, error) with exactly one side set. */
-  val diffSafeUdf = udf { (a: String, b: String) =>
-    try (DiffKernel.diffOps(a, b), null: String)
-    catch { case e: Throwable => (Array.empty[DiffOp], s"${e.getClass.getSimpleName}: ${e.getMessage}") }
-  }
+  /** (name, arity, builder) of every native SQL function. */
+  val sqlFunctions: Seq[FunctionDescription] = Seq(
+    fn("float_dot", 2)(c => FloatDot(c(0), c(1))),
+    fn("float_sub", 2)(c => FloatSub(c(0), c(1))),
+    fn("shingles", 2)(c => TokenShingles(c(0), c(1))),
+    fn("token_spans", 2)(c => TokenSpans(c(0), c(1))),
+    fn("token_windows", 2)(c => TokenWindows(c(0), c(1))),
+    fn("token_chunks", 2)(c => TokenChunks(c(0), c(1))),
+    fn("cut_spans", 3)(c => CutSpans(c(0), c(1), c(2))),
+    fn("long_pairs", 1)(c => LongPairs(c(0))),
+    fn("doc_fingerprint64", 1)(c => DocFingerprint64(c(0))),
+    fn("int8_quantize", 1)(c => Int8Quantize(c(0))),
+    fn("hashed_margin", 3)(c => HashedMargin(c(0), c(1), c(2))),
+    fn("bpe_merge", 3)(c => BpeMerge(c(0), c(1), c(2))),
+    fn("normalize_title", 2)(c => NormalizeTitle(c(0), c(1))),
+    fn("wiki_diff_safe", 2)(c => WikiDiffSafe(c(0), c(1))),
+    fn("wiki_tokenize", 1)(c => WikiTokenize(c(0))),
+    fn("wiki_diff", 2)(c => WikiDiff(c(0), c(1))),
+    fn("wiki_edit_distance", 2)(c => WikiEditDistance(c(0), c(1))))
 
-  val editDistanceUdf = udf { (a: String, b: String) =>
-    DiffKernel.diffOps(a, b).iterator.map(_.content.length.toLong).sum
-  }
+  /** Install [[sqlFunctions]] into `spark` — for sessions built without
+    * `GraftExtensions`, which already carry them. */
+  def register(spark: SparkSession): Unit =
+    ColumnBridge.registerFunctions(spark, sqlFunctions)
 
   /** 64-bit document fingerprint: minimum FNV-1a rolling hash over
     * char 8-grams (winnowing-style content fingerprint — robust to
@@ -59,11 +85,8 @@ object GraftFunctions {
     h & Long.MaxValue // keep non-negative for readability
   }
 
-  val fingerprint64Udf = udf((s: String) => rollingFingerprint(s))
-
-  def wikiTokenize(c: Column): Column = tokenizeUdf(c)
-  def wikiDiff(oldC: Column, newC: Column): Column = diffUdf(oldC, newC)
-  def wikiEditDistance(oldC: Column, newC: Column): Column = editDistanceUdf(oldC, newC)
+  private def native(e: Expression): Column = ColumnBridge.column(e)
+  private def expression(c: Column): Expression = ColumnBridge.expression(c)
 
   /** Title namespace resolution against a (lowercased name → id) map;
     * default namespace 0 when no recognized prefix. Underscores are
@@ -81,49 +104,20 @@ object GraftFunctions {
     } else (0, t)
   }
 
-  def normalizeTitleUdf(nsByName: Map[String, Int]) =
-    udf((t: String) => normalizeTitle(t, nsByName))
-
-  def register(spark: SparkSession): Unit = {
-    spark.udf.register("wiki_tokenize", tokenizeUdf)
-    spark.udf.register("wiki_diff", diffUdf)
-    spark.udf.register("wiki_edit_distance", editDistanceUdf)
-    // only a fallback for sessions built WITHOUT GraftExtensions —
-    // registering unconditionally would shadow the injected native
-    // codegen expression with the slower UDF
-    if (!spark.catalog.functionExists("doc_fingerprint64"))
-      spark.udf.register("doc_fingerprint64", fingerprint64Udf)
-  }
-
   /** The reference's end product: the diffdb dataset
     * (`fileformat.rst:4-27`) as a DataFrame — one row per revision with
     * nested diff ops (ArrayType replaces the reference's trailing TSV
     * columns), computed from a mediawiki-source DataFrame with
     * `prev`/`curr` columns. */
   def diffdb(revisions: DataFrame, nsByName: Map[String, Int] = Map.empty): DataFrame = {
-    // native codegen expressions when the session carries
-    // GraftExtensions (no encoder round trip per revision; the ns map
-    // rides the plan as a foldable literal), with a UDF fallback so
-    // diffdb keeps working on a vanilla SparkSession — the natives are
-    // session-registered functions, and depending on them
-    // unconditionally would silently narrow diffdb's session contract
-    val sess = revisions.sparkSession
-    val normCol =
-      if (sess.catalog.functionExists("normalize_title"))
-        call_function("normalize_title",
-          col("title"), lit(NormalizeTitle.encodeMap(nsByName)))
-      else {
-        val u = normalizeTitleUdf(nsByName)(col("title"))
-        struct(u.getField("_1").as("ns"), u.getField("_2").as("title"))
-      }
-    val diffCol =
-      if (sess.catalog.functionExists("wiki_diff_safe"))
-        expr("wiki_diff_safe(coalesce(prev.text, ''), coalesce(curr.text, ''))")
-      else {
-        val d = diffSafeUdf(coalesce(col("prev.text"), lit("")),
-          coalesce(col("curr.text"), lit("")))
-        struct(d.getField("_1").as("diffs"), d.getField("_2").as("error"))
-      }
+    // the native expressions are built directly, not looked up by name:
+    // the plan, and so the output, is the same on every session (the
+    // ns map rides the plan as a foldable literal)
+    val normCol = native(NormalizeTitle(expression(col("title")),
+      expression(lit(NormalizeTitle.encodeMap(nsByName)))))
+    val diffCol = native(WikiDiffSafe(
+      expression(coalesce(col("prev.text"), lit(""))),
+      expression(coalesce(col("curr.text"), lit("")))))
     revisions
       .withColumn("__norm", normCol)
       .select(

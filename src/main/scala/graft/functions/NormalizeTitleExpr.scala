@@ -9,11 +9,9 @@ import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Native title-namespace resolution: `normalize_title(title, nsEnc)`
-  * → `struct<ns int, title string>` — the codegen replacement for the
-  * closure UDF that was the one interpreted dispatch left on the
-  * diffdb flagship path (semantics: the reference resolves page
-  * namespaces from the dump's own `<siteinfo>` map before grouping,
-  * `python/example.py:87-92`).
+  * → `struct<ns int, title string>`, the diffdb title column
+  * (semantics: the reference resolves page namespaces from the dump's
+  * own `<siteinfo>` map before grouping, `python/example.py:87-92`).
   *
   * `nsEnc` must be a FOLDABLE string encoding of the (lowercased
   * namespace name → id) map, `nameidnameid…`

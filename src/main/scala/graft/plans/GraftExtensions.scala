@@ -1,12 +1,11 @@
 package graft.plans
 
 import org.apache.spark.sql.SparkSessionExtensions
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
-import graft.functions.{BpeMerge, CutSpans, DocFingerprint64, FloatDot, HashedMargin, Int8Quantize, NormalizeTitle, TokenChunks, TokenShingles, TokenSpans, TokenWindows, WikiDiffSafe}
+import graft.functions.GraftFunctions
 
-/** Session extensions registering graft's native Catalyst expressions.
+/** Session extensions registering graft's native Catalyst expressions
+  * ([[GraftFunctions.sqlFunctions]]).
   *
   * Use programmatically:
   * {{{ SparkSession.builder().withExtensions(GraftExtensions) }}}
@@ -14,107 +13,8 @@ import graft.functions.{BpeMerge, CutSpans, DocFingerprint64, FloatDot, HashedMa
   * {{{ --conf spark.sql.extensions=graft.plans.GraftSparkSessionExtensions }}}
   */
 object GraftExtensions extends (SparkSessionExtensions => Unit) {
-
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((
-      FunctionIdentifier("float_dot"),
-      new ExpressionInfo(classOf[FloatDot].getName, "float_dot"),
-      (children: Seq[Expression]) => {
-        require(children.length == 2, "float_dot expects exactly 2 arguments")
-        FloatDot(children(0), children(1))
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("float_sub"),
-      new ExpressionInfo(classOf[graft.functions.FloatSub].getName, "float_sub"),
-      (children: Seq[Expression]) => {
-        require(children.length == 2, "float_sub expects exactly 2 arguments")
-        graft.functions.FloatSub(children(0), children(1))
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("shingles"),
-      new ExpressionInfo(classOf[TokenShingles].getName, "shingles"),
-      (children: Seq[Expression]) => {
-        require(children.length == 2, "shingles expects exactly 2 arguments")
-        TokenShingles(children(0), children(1))
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("token_spans"),
-      new ExpressionInfo(classOf[TokenSpans].getName, "token_spans"),
-      (children: Seq[Expression]) => {
-        require(children.length == 2, "token_spans expects exactly 2 arguments")
-        TokenSpans(children(0), children(1))
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("token_windows"),
-      new ExpressionInfo(classOf[TokenWindows].getName, "token_windows"),
-      (children: Seq[Expression]) => {
-        require(children.length == 2, "token_windows expects exactly 2 arguments")
-        TokenWindows(children(0), children(1))
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("token_chunks"),
-      new ExpressionInfo(classOf[TokenChunks].getName, "token_chunks"),
-      (children: Seq[Expression]) => {
-        require(children.length == 2, "token_chunks expects exactly 2 arguments")
-        TokenChunks(children(0), children(1))
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("cut_spans"),
-      new ExpressionInfo(classOf[CutSpans].getName, "cut_spans"),
-      (children: Seq[Expression]) => {
-        require(children.length == 3, "cut_spans expects exactly 3 arguments")
-        CutSpans(children(0), children(1), children(2))
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("long_pairs"),
-      new ExpressionInfo(classOf[graft.functions.LongPairs].getName, "long_pairs"),
-      (children: Seq[Expression]) => {
-        require(children.length == 1, "long_pairs expects exactly 1 argument")
-        graft.functions.LongPairs(children(0))
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("doc_fingerprint64"),
-      new ExpressionInfo(classOf[DocFingerprint64].getName, "doc_fingerprint64"),
-      (children: Seq[Expression]) => {
-        require(children.length == 1, "doc_fingerprint64 expects exactly 1 argument")
-        DocFingerprint64(children(0))
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("int8_quantize"),
-      new ExpressionInfo(classOf[Int8Quantize].getName, "int8_quantize"),
-      (children: Seq[Expression]) => {
-        require(children.length == 1, "int8_quantize expects exactly 1 argument")
-        Int8Quantize(children(0))
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("hashed_margin"),
-      new ExpressionInfo(classOf[HashedMargin].getName, "hashed_margin"),
-      (children: Seq[Expression]) => {
-        require(children.length == 3, "hashed_margin expects exactly 3 arguments")
-        HashedMargin(children(0), children(1), children(2))
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("bpe_merge"),
-      new ExpressionInfo(classOf[BpeMerge].getName, "bpe_merge"),
-      (children: Seq[Expression]) => {
-        require(children.length == 3, "bpe_merge expects exactly 3 arguments")
-        BpeMerge(children(0), children(1), children(2))
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("normalize_title"),
-      new ExpressionInfo(classOf[NormalizeTitle].getName, "normalize_title"),
-      (children: Seq[Expression]) => {
-        require(children.length == 2, "normalize_title expects exactly 2 arguments")
-        NormalizeTitle(children(0), children(1))
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("wiki_diff_safe"),
-      new ExpressionInfo(classOf[WikiDiffSafe].getName, "wiki_diff_safe"),
-      (children: Seq[Expression]) => {
-        require(children.length == 2, "wiki_diff_safe expects exactly 2 arguments")
-        WikiDiffSafe(children(0), children(1))
-      }))
-  }
+  override def apply(ext: SparkSessionExtensions): Unit =
+    GraftFunctions.sqlFunctions.foreach(ext.injectFunction)
 }
 
 /** Config-route entry point (`spark.sql.extensions` needs a class with

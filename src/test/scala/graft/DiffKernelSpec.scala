@@ -2,9 +2,18 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.functions.{DiffKernel, DiffOp}
+import org.apache.spark.unsafe.types.UTF8String
+
+import graft.functions.{DiffKernel, DiffKernelU8, DiffOp}
 
 class DiffKernelSpec extends AnyFunSuite {
+
+  /** The production byte kernel and its String oracle, both as
+    * (old, new) → ops: the diff cases below run on each. */
+  private val kernels: Seq[(String, (String, String) => Seq[DiffOp])] = Seq(
+    "DiffKernel" -> ((a, b) => DiffKernel.diffOps(a, b).toSeq),
+    "DiffKernelU8" -> ((a, b) => DiffKernelU8.diffOps(UTF8String.fromString(a),
+      UTF8String.fromString(b)).map(o => DiffOp(o.position, o.action, o.content.toString)).toSeq))
 
   test("tokenizer classes and ordering") {
     assert(DiffKernel.tokenize("foo bar").toList == List("foo", " ", "bar"))
@@ -48,41 +57,44 @@ class DiffKernelSpec extends AnyFunSuite {
     }
     // revision-stream order (prev = last curr: hits the memo), then the
     // same pairs reversed and interleaved with unrelated diffs (misses)
-    val inOrder = pairs.map { case (a, b) => DiffKernel.diffOps(a, b).toList }
-    val reversed = pairs.reverse.map { case (a, b) =>
-      DiffKernel.diffOps(mk(), mk())  // pollute the memo + dictionary
-      DiffKernel.diffOps(a, b).toList
-    }.reverse
-    assert(inOrder == reversed)
-    // and on a fresh thread (fresh context)
-    var fresh: Seq[List[DiffOp]] = null
-    val t = new Thread(() => fresh = pairs.map { case (a, b) => DiffKernel.diffOps(a, b).toList })
-    t.start(); t.join()
-    assert(inOrder == fresh)
+    for ((kernel, diff) <- kernels) {
+      val inOrder = pairs.map { case (a, b) => diff(a, b).toList }
+      val reversed = pairs.reverse.map { case (a, b) =>
+        diff(mk(), mk())  // pollute the memo + dictionary
+        diff(a, b).toList
+      }.reverse
+      assert(inOrder == reversed, kernel)
+      // and on a fresh thread (fresh context)
+      var fresh: Seq[List[DiffOp]] = null
+      val t = new Thread(() => fresh = pairs.map { case (a, b) => diff(a, b).toList })
+      t.start(); t.join()
+      assert(inOrder == fresh, kernel)
+    }
   }
 
   test("simple diffs") {
-    // identical → no reported ops
-    assert(DiffKernel.diffOps("same text", "same text").isEmpty)
-    // pure insert at end
-    val ins = DiffKernel.diffOps("a b", "a b c")
-    assert(ins.forall(_.action == 1))
-    assert(ins.map(_.content).mkString == " c")
-    // pure delete
-    val del = DiffKernel.diffOps("a b c", "a b")
-    assert(del.forall(_.action == -1))
-    // from empty
-    val fromEmpty = DiffKernel.diffOps("", "new page")
-    assert(fromEmpty.toList == List(DiffOp(0, 1, "new page")))
-    // to empty
-    assert(DiffKernel.diffOps("gone", "").toList == List(DiffOp(0, -1, "gone")))
+    for ((kernel, diff) <- kernels) {
+      // identical → no reported ops
+      assert(diff("same text", "same text").isEmpty, kernel)
+      // pure insert at end
+      val ins = diff("a b", "a b c")
+      assert(ins.forall(_.action == 1), kernel)
+      assert(ins.map(_.content).mkString == " c", kernel)
+      // pure delete
+      val del = diff("a b c", "a b")
+      assert(del.forall(_.action == -1), kernel)
+      // from empty
+      assert(diff("", "new page").toList == List(DiffOp(0, 1, "new page")), kernel)
+      // to empty
+      assert(diff("gone", "").toList == List(DiffOp(0, -1, "gone")), kernel)
+    }
   }
 
   test("position semantics: advances over equal and add, not remove") {
     // old: "x y z", new: "x q z" → remove "y" at pos 2, add "q" at pos 2
-    val ops = DiffKernel.diffOps("x y z", "x q z").toList
-    assert(ops.map(o => (o.position, o.action, o.content)).toSet ==
-      Set((2, -1, "y"), (2, 1, "q")))
+    for ((kernel, diff) <- kernels)
+      assert(diff("x y z", "x q z").map(o => (o.position, o.action, o.content)).toSet ==
+        Set((2, -1, "y"), (2, 1, "q")), kernel)
   }
 
   test("replay invariant on hand cases") {
@@ -94,10 +106,8 @@ class DiffKernelSpec extends AnyFunSuite {
       ("line1\nline2\nline3", "line1\nline2a\nline3\nline4"),
       ("''italic'' and '''bold'''", "'''bold''' and ''italic''"),
       ("== Header ==\ntext &amp; more", "== Header2 ==\ntext &lt; more"))
-    for ((o, n) <- cases) {
-      val ops = DiffKernel.diffOps(o, n)
-      assert(DiffKernel.replay(o, ops.toIndexedSeq) == n, s"replay failed for ($o, $n)")
-    }
+    for ((o, n) <- cases; (kernel, diff) <- kernels)
+      assert(DiffKernel.replay(o, diff(o, n)) == n, s"$kernel replay failed for ($o, $n)")
   }
 
   test("replay invariant (property): random wikitext-ish strings") {
@@ -108,8 +118,8 @@ class DiffKernelSpec extends AnyFunSuite {
       Seq.fill(rnd.nextInt(40))(vocab(rnd.nextInt(vocab.length))).mkString
     for (_ <- 1 to 500) {
       val o = gen(); val n = gen()
-      val ops = DiffKernel.diffOps(o, n)
-      assert(DiffKernel.replay(o, ops.toIndexedSeq) == n, s"replay failed: o=$o n=$n")
+      for ((kernel, diff) <- kernels)
+        assert(DiffKernel.replay(o, diff(o, n)) == n, s"$kernel replay failed: o=$o n=$n")
     }
   }
 
@@ -123,22 +133,33 @@ class DiffKernelSpec extends AnyFunSuite {
       val del = rnd.nextInt(math.min(10, words.length - at))
       val ins = Seq.fill(rnd.nextInt(5))("w" + rnd.nextInt(100))
       val edited = (words.take(at) ++ ins ++ words.drop(at + del)).mkString(" ")
-      val ops = DiffKernel.diffOps(base, edited)
-      assert(DiffKernel.replay(base, ops.toIndexedSeq) == edited)
+      for ((kernel, diff) <- kernels)
+        assert(DiffKernel.replay(base, diff(base, edited)) == edited, kernel)
     }
   }
 
   test("many distinct tokens (beyond the reference's 65k unichr cap)") {
-    val o = (1 to 70000).map(i => s"tok$i").mkString(" ")
-    val n = (1 to 70000).map(i => if (i == 35000) "CHANGED" else s"tok$i").mkString(" ")
-    val ops = DiffKernel.diffOps(o, n)
-    assert(ops.length == 2)
-    assert(DiffKernel.replay(o, ops.toIndexedSeq) == n)
+    // one pair, then a chain of 20 pairs with disjoint vocabularies: 1.4M
+    // distinct tokens on one thread, past the per-thread dictionary's 2^20
+    // reset, which must not change any pair's ops
+    for ((kernel, diff) <- kernels; p <- "" +: (1 to 20).map(j => s"p$j")) {
+      val o = (1 to 70000).map(i => s"${p}tok$i").mkString(" ")
+      val n = (1 to 70000).map(i => if (i == 35000) "CHANGED" else s"${p}tok$i").mkString(" ")
+      val ops = diff(o, n)
+      val at = o.indexOf(s" ${p}tok35000 ") + 1
+      assert(ops == Seq(DiffOp(at, -1, s"${p}tok35000"), DiffOp(at, 1, "CHANGED")), kernel)
+      assert(DiffKernel.replay(o, ops) == n, kernel)
+    }
   }
 
   test("edit distance is symmetric-ish and zero for identical") {
     assert(DiffKernel.diffOps("abc", "abc").map(_.content.length).sum == 0)
     val d1 = DiffKernel.diffOps("a b c", "a x c").map(_.content.length).sum
     assert(d1 == 2) // "b" removed + "x" added
+    // the byte kernel's distance (wiki_edit_distance) counts UTF-16 units too
+    def u(t: String) = UTF8String.fromString(t)
+    assert(DiffKernelU8.editDistance(u("abc"), u("abc")) == 0)
+    assert(DiffKernelU8.editDistance(u("a b c"), u("a x c")) == 2)
+    assert(DiffKernelU8.editDistance(u("a é b"), u("a 😀 b")) == 3)
   }
 }

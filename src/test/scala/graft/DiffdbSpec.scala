@@ -105,6 +105,75 @@ class DiffdbSpec extends AnyFunSuite {
     assert(toks == Seq("[[", "link", "]]", " ", "text"))
   }
 
+  /** A two-page dump: one page whose revisions edit one astral code
+    * point into another sharing its high surrogate (U+1F600 → U+1F601,
+    * both D83D), and a ns-less Talk: page whose namespace comes from the
+    * title. */
+  private lazy val astralDump: String = {
+    def page(title: String, id: Int, texts: Seq[String]) =
+      s"<page><title>$title</title><id>$id</id>" + texts.zipWithIndex.map { case (t, i) =>
+        s"<revision><id>${id * 10 + i}</id><timestamp>2020-01-0${i + 1}T00:00:00Z</timestamp>" +
+          s"<contributor><username>U</username></contributor><text>$t</text></revision>"
+      }.mkString + "</page>"
+    val xml = "<mediawiki xml:lang=\"en\">" +
+      page("Astral", 1, Seq("a 😀 b", "a 😁 b", "a 😁 b c")) +
+      page("Talk:Beta_Decay", 2, Seq("x y", "x q y")) + "</mediawiki>"
+    val f = java.io.File.createTempFile("astral", ".xml")
+    f.deleteOnExit()
+    java.nio.file.Files.write(f.toPath, xml.getBytes("UTF-8"))
+    f.getAbsolutePath
+  }
+
+  test("diffdb rows are identical on a session without GraftExtensions") {
+    val bare = org.apache.spark.sql.graft.BareSession.of(spark)
+    assert(!bare.catalog.functionExists("wiki_diff_safe"))
+    def rows(s: org.apache.spark.sql.SparkSession, path: String) =
+      GraftFunctions.diffdb(s.read.format("mediawiki").load(path), Map("talk" -> 1))
+        .orderBy("rev_id").collect().toSeq
+    assert(rows(bare, Main.sampleDumpPath()) == rows(spark, Main.sampleDumpPath()))
+    val astral = rows(bare, astralDump)
+    assert(astral == rows(spark, astralDump))
+    // the shared-high-surrogate edit keeps whole code points
+    val r11 = astral.find(_.getAs[Long]("rev_id") == 11L).get
+    assert(r11.getSeq[Row](r11.fieldIndex("diffs")) == Seq(Row(2, -1, "😀"), Row(2, 1, "😁")))
+    val talk = astral.find(_.getAs[Long]("rev_id") == 20L).get
+    assert(talk.getAs[Int]("namespace") == 1 && talk.getAs[String]("title") == "Beta Decay")
+    // the SQL functions come with register(spark)
+    GraftFunctions.register(bare)
+    assert(bare.sql("SELECT size(wiki_diff('a b c', 'a x c'))").head().getInt(0) == 2)
+    assert(bare.sql("SELECT wiki_tokenize('[[link]] text')").head().getSeq[String](0) ==
+      Seq("[[", "link", "]]", " ", "text"))
+  }
+
+  private def analysisError(sql: String): String =
+    intercept[org.apache.spark.sql.AnalysisException](spark.sql(sql)).getMessage
+
+  test("wiki_tokenize: NULL tokenizes as empty; a non-string fails analysis") {
+    assert(spark.sql("SELECT wiki_tokenize(NULL)").head().getSeq[String](0).isEmpty)
+    assert(spark.sql("SELECT wiki_tokenize(CAST(NULL AS STRING))").head().getSeq[String](0).isEmpty)
+    assert(spark.sql("SELECT wiki_tokenize('a 😀')").head().getSeq[String](0) == Seq("a", " ", "😀"))
+    val e = analysisError("SELECT wiki_tokenize(42)")
+    assert(e.contains("wiki_tokenize requires string arguments"), e)
+  }
+
+  test("wiki_diff: NULL reads as empty; a non-string fails analysis") {
+    def ops(sql: String) = spark.sql(sql).head().getSeq[Row](0)
+    assert(ops("SELECT wiki_diff(NULL, 'x')") == Seq(Row(0, 1, "x")))
+    assert(ops("SELECT wiki_diff('x', CAST(NULL AS STRING))") == Seq(Row(0, -1, "x")))
+    assert(ops("SELECT wiki_diff(NULL, NULL)").isEmpty)
+    val e = analysisError("SELECT wiki_diff('a', array('b'))")
+    assert(e.contains("wiki_diff requires string arguments"), e)
+  }
+
+  test("wiki_edit_distance: NULL reads as empty; a non-string fails analysis") {
+    def dist(sql: String) = spark.sql(sql).head().getLong(0)
+    assert(dist("SELECT wiki_edit_distance(NULL, 'a b')") == 3L)
+    assert(dist("SELECT wiki_edit_distance('a b c', 'a x c')") == 2L)
+    assert(dist("SELECT wiki_edit_distance(NULL, NULL)") == 0L)
+    val e = analysisError("SELECT wiki_edit_distance(1, 'a')")
+    assert(e.contains("wiki_edit_distance requires string arguments"), e)
+  }
+
   test("writeDiffdb: namespace-partitioned, (page_id, rev_id)-sorted sink") {
     val out = java.nio.file.Files.createTempDirectory("diffdb-sink").toString
     val db = SparkEntry.entry(spark)

@@ -3,21 +3,15 @@ package graft.functions
 import java.util.regex.Pattern
 import scala.collection.mutable
 
-/** One diff operation: `action` ∈ {-1 remove, +1 add}; `position` is the
-  * running offset that advances by `content.length` for equal and add
-  * ops (reference semantics: `python/revision_differ.py:78-84`). */
-case class DiffOp(position: Int, action: Int, content: String)
-
-/** Token-level text diff kernel — the Spark-native re-expression of the
-  * reference's differ (`python/revision_differ.py:30-84`):
-  * wikitext tokenization, token interning, and a Myers O(ND) diff with
-  * linear-space bisection (the published algorithm the reference's
-  * bundled diff library also implements, `python/diff_match_patch.py:254-355`).
-  *
-  * Differences by design: the diff runs over `Int` token ids, not
-  * hashed UTF-16 chars, removing the reference's 65,535-distinct-token
-  * cap (`unichr` in `revision_differ.py:52-63`) with no behavior change
-  * below the cap.
+/** The String (UTF-16) form of the token diff kernel, kept as the
+  * differential oracle for the byte kernel [[DiffKernelU8]]: the
+  * reference's tokenizer regex (`python/revision_differ.py:30-50`), a
+  * hand-rolled char scanner pinned to it, a char-region interner, and
+  * op emission with the reference's position accounting
+  * (`revision_differ.py:78-84`) over the same [[Myers]] core. Also the
+  * home of [[replay]], the reconstruction invariant every diff spec
+  * checks. A supplementary character is two surrogate-half tokens
+  * here and one token in the byte kernel.
   */
 object DiffKernel {
 
@@ -57,11 +51,10 @@ object DiffKernel {
   @inline private def isWordChar(c: Char): Boolean =
     (c >= 'a' && c <= 'z') || (c >= 'A' && c <= 'Z') || (c >= '0' && c <= '9') || c == '_'
 
-  /** Token boundary scanner — the single source of truth for token
-    * semantics (exactly the alternation-order behavior of the regex,
-    * verified by a differential property test; ~10× faster than
-    * java.util.regex on wikitext). Every token is a contiguous region
-    * of `content`; returns flat (start, end) pairs. */
+  /** Token boundary scanner over UTF-16 chars: exactly the
+    * alternation-order behavior of the regex (verified by a differential
+    * property test). Every token is a contiguous region of `content`;
+    * returns flat (start, end) pairs. */
   private def tokenBounds(content: String): Array[Int] = {
     val n = content.length
     val out = new mutable.ArrayBuilder.ofInt
@@ -110,22 +103,6 @@ object DiffKernel {
     Array.tabulate(b.length / 2)(k => content.substring(b(2 * k), b(2 * k + 1)))
   }
 
-  /** Tokenize + intern in one pass: a token already in the dictionary
-    * never allocates a substring (region-keyed probe). On revision
-    * pairs — where the second text repeats most of the first — this
-    * removes the majority of per-token allocations. */
-  private[graft] def internTokenize(content: String, interner: Interner): Array[Int] = {
-    if (content == null) return Array.empty
-    val b = tokenBounds(content)
-    val out = new Array[Int](b.length / 2)
-    var k = 0
-    while (k < out.length) {
-      out(k) = interner.internRegion(content, b(2 * k), b(2 * k + 1))
-      k += 1
-    }
-    out
-  }
-
   /** Intern tokens to ids using a shared dictionary across both texts
     * (the reference shares its dict the same way,
     * `revision_differ.py:68-70`). Open-addressing table keyed by a
@@ -133,7 +110,7 @@ object DiffKernel {
     * allocated only the first time a token is seen. Full hashes are
     * stored beside the slot ids so a probe chain skips mismatched
     * entries without a char-by-char compare. */
-  private[graft] final class Interner {
+  private final class Interner {
     val tokens = mutable.ArrayBuffer.empty[String]
     private var mask = (1 << 12) - 1
     private var ids = Array.fill(mask + 1)(-1)
@@ -197,182 +174,11 @@ object DiffKernel {
     }
   }
 
-  /** Diff runs as parallel (act, lo, hi) region arrays — equal and
-    * delete runs index into `a`, insert runs into `b`. The bisection
-    * recursion appends regions in output order; nothing is sliced or
-    * boxed on the hot path. */
-  private[functions] final class Runs {
-    var acts = new Array[Int](16)
-    var los = new Array[Int](16)
-    var his = new Array[Int](16)
-    var size = 0
-    def add(act: Int, lo: Int, hi: Int): Unit = {
-      if (hi <= lo) return
-      if (size == acts.length) {
-        acts = java.util.Arrays.copyOf(acts, size * 2)
-        los = java.util.Arrays.copyOf(los, size * 2)
-        his = java.util.Arrays.copyOf(his, size * 2)
-      }
-      acts(size) = act; los(size) = lo; his(size) = hi
-      size += 1
-    }
-  }
-
-  /** Myers diff over int arrays: list of (action, tokenIds) runs with
-    * action ∈ {-1, 0, +1}, deletes emitted before inserts at the same
-    * point. Linear-space via middle-snake bisection. (Spec-level API;
-    * the ingest hot path consumes the region runs directly without
-    * materializing the arrays.) */
-  def diffInts(a: Array[Int], b: Array[Int]): List[(Int, Array[Int])] = {
-    val runs = computeRuns(a, b)
-    val mat = (0 until runs.size).iterator.map { i =>
-      val src = if (runs.acts(i) == 1) b else a
-      (runs.acts(i), java.util.Arrays.copyOfRange(src, runs.los(i), runs.his(i)))
-    }.toList
-    merge(mat)
-  }
-
-  private[functions] def computeRuns(a: Array[Int], b: Array[Int]): Runs = {
-    val out = new Runs
-    compute(a, 0, a.length, b, 0, b.length, out)
-    out
-  }
-
-  /** Trim common prefix/suffix, then bisect on the middle of an optimal
-    * edit path and recurse on the halves — all on index ranges of the
-    * two original arrays (no sub-array copies). */
-  private def compute(a: Array[Int], aLo: Int, aHi: Int,
-                      b: Array[Int], bLo: Int, bHi: Int, out: Runs): Unit = {
-    // trim common prefix/suffix
-    var p = 0
-    val maxP = math.min(aHi - aLo, bHi - bLo)
-    while (p < maxP && a(aLo + p) == b(bLo + p)) p += 1
-    var s = 0
-    val maxS = maxP - p
-    while (s < maxS && a(aHi - 1 - s) == b(bHi - 1 - s)) s += 1
-    if (p > 0) out.add(0, aLo, aLo + p)
-    val amLo = aLo + p; val amHi = aHi - s
-    val bmLo = bLo + p; val bmHi = bHi - s
-    if (amLo >= amHi && bmLo >= bmHi) ()
-    else if (amLo >= amHi) out.add(1, bmLo, bmHi)
-    else if (bmLo >= bmHi) out.add(-1, amLo, amHi)
-    else {
-      val xy = middleSnake(a, amLo, amHi, b, bmLo, bmHi)
-      val x = (xy >> 32).toInt
-      val y = xy.toInt
-      val n = amHi - amLo
-      val m = bmHi - bmLo
-      val degenerate = (x <= 0 && y <= 0) || (x >= n && y >= m)
-      if (x < 0 || degenerate) { out.add(-1, amLo, amHi); out.add(1, bmLo, bmHi) }
-      else {
-        compute(a, amLo, amLo + x, b, bmLo, bmLo + y, out)
-        compute(a, amLo + x, amHi, b, bmLo + y, bmHi, out)
-      }
-    }
-    if (s > 0) out.add(0, aHi - s, aHi)
-  }
-
-  /** Find a split point (x, y) on an optimal edit path: forward and
-    * reverse D-paths are advanced in lockstep until they overlap
-    * (Myers 1986, "An O(ND) Difference Algorithm", linear-space
-    * refinement — the same published algorithm behind the reference's
-    * bundled diff library). Coordinates are relative to (aLo, bLo),
-    * packed as (x << 32 | y); returns (-1, -1) only for degenerate
-    * input. */
-  private def middleSnake(a: Array[Int], aLo: Int, aHi: Int,
-                          b: Array[Int], bLo: Int, bHi: Int): Long = {
-    val n = aHi - aLo
-    val m = bHi - bLo
-    val maxD = (n + m + 1) / 2
-    val vOff = maxD
-    val vSize = 2 * maxD + 2
-    val v1 = Array.fill(vSize)(-1)
-    val v2 = Array.fill(vSize)(-1)
-    v1(vOff + 1) = 0
-    v2(vOff + 1) = 0
-    val delta = n - m
-    val front = delta % 2 != 0
-    var d = 0
-    while (d <= maxD) {
-      // forward pass
-      var k = -d
-      while (k <= d) {
-        val ki = vOff + k
-        var x =
-          if (k == -d || (k != d && v1(ki - 1) < v1(ki + 1))) v1(ki + 1)
-          else v1(ki - 1) + 1
-        var y = x - k
-        while (x < n && y < m && a(aLo + x) == b(bLo + y)) { x += 1; y += 1 }
-        v1(ki) = x
-        if (front) {
-          val k2i = vOff + delta - k
-          if (k2i >= 0 && k2i < vSize && v2(k2i) != -1) {
-            if (x >= n - v2(k2i)) return pack(x, y) // paths overlap
-          }
-        }
-        k += 2
-      }
-      // reverse pass
-      k = -d
-      while (k <= d) {
-        val ki = vOff + k
-        var x =
-          if (k == -d || (k != d && v2(ki - 1) < v2(ki + 1))) v2(ki + 1)
-          else v2(ki - 1) + 1
-        var y = x - k
-        while (x < n && y < m && a(aLo + n - x - 1) == b(bLo + m - y - 1)) { x += 1; y += 1 }
-        v2(ki) = x
-        if (!front) {
-          val k1i = vOff + delta - k
-          if (k1i >= 0 && k1i < vSize && v1(k1i) != -1) {
-            val x1 = v1(k1i)
-            val y1 = x1 - (delta - k)
-            if (x1 >= n - x) return pack(x1, y1) // paths overlap
-          }
-        }
-        k += 2
-      }
-      d += 1
-    }
-    pack(-1, -1)
-  }
-
-  @inline private def pack(x: Int, y: Int): Long =
-    (x.toLong << 32) | (y.toLong & 0xffffffffL)
-
-  /** Canonicalize runs: within every maximal region of non-equal ops,
-    * emit one merged delete followed by one merged insert (the order the
-    * reference's diff library also normalizes to); adjacent equal runs
-    * merge too. Segment-wise so a delete…insert…delete region collapses
-    * to a single delete+insert pair rather than interleaved fragments. */
-  private def merge(ops: List[(Int, Array[Int])]): List[(Int, Array[Int])] = {
-    val out = mutable.ListBuffer.empty[(Int, Array[Int])]
-    val dels = mutable.ArrayBuffer.empty[Int]
-    val ins = mutable.ArrayBuffer.empty[Int]
-    def flush(): Unit = {
-      if (dels.nonEmpty) { out += ((-1, dels.toArray)); dels.clear() }
-      if (ins.nonEmpty) { out += ((1, ins.toArray)); ins.clear() }
-    }
-    for ((act, toks) <- ops if toks.nonEmpty) act match {
-      case 0 =>
-        flush()
-        out.lastOption match {
-          case Some((0, t0)) => out.update(out.length - 1, (0, t0 ++ toks))
-          case _ => out += ((0, toks))
-        }
-      case -1 => dels ++= toks
-      case 1 => ins ++= toks
-    }
-    flush()
-    out.toList
-  }
-
   /** Per-thread diff context: a persistent interner plus a one-entry
     * memo of the last tokenized text. In the ingest pipeline every
     * revision text is diffed twice — as `curr` of one pair, then as
     * `prev` of the next — and rows arrive page-ordered within a task,
-    * so the memo halves tokenization work (the dominant ingest cost:
-    * 23 of ~36 ms/MB single-threaded, Scratch SCRATCH_PARSE profile).
+    * so the memo halves tokenization work.
     * Sharing the interner across calls is behavior-neutral — diff
     * output depends only on id-equality ⇔ token-string equality, which
     * any interner preserves — and the context resets once the
@@ -471,7 +277,7 @@ object DiffKernel {
     // `old` — only the edit region touches the dictionary
     val aIds = ctx.ids(if (oldText == null) "" else oldText)
     val bIds = ctx.ids(if (newText == null) "" else newText)
-    val runs = computeRuns(aIds, bIds)
+    val runs = Myers.computeRuns(aIds, bIds)
     val acts = runs.acts
     val los = runs.los
     val his = runs.his
