@@ -2,10 +2,12 @@ package graft
 import org.apache.spark.sql.SparkSession
 object Bench {
   /** THE bench session config — one definition for Bench's main
-    * session, the in-JVM steady fallback, and [[SteadyBench]]'s child
-    * (whose Scaladoc contract is "same session config as Bench"): a
-    * config added in one place and not the others would make
-    * steady-vs-measured deltas adjudicate as phantom engine drift.
+    * session, the in-JVM steady fallback, [[SteadyBench]]'s child
+    * (whose Scaladoc contract is "same session config as Bench"),
+    * [[Verify]], [[Explain]] and [[Probe]]: a config added in one place
+    * and not the others would make steady-vs-measured deltas adjudicate
+    * as phantom engine drift. `SessionDriftSpec` keeps it the only
+    * session builder besides [[Main]]'s.
     * codegen.cache.maxEntries: the default 100-entry cache thrashes on
     * a 50+-query sweep — r3 recorded q32 at 12.4s vs 0.83s because the
     * "measurement" timed Janino recompilation. */
@@ -15,6 +17,8 @@ object Bench {
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")
+      // events.parquet may carry TIMESTAMP(NANOS), which Spark 4 rejects
+      // unless read as raw nanos longs (queries normalize to µs themselves)
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
       .config("spark.sql.codegen.cache.maxEntries", "2000")
@@ -497,79 +501,127 @@ object Bench {
     }
   }
 
-  private def ingestMbps0(spark: SparkSession): (Double, Seq[Double], String) = {
+  private def ingestMbps0(spark: SparkSession): (Double, Seq[Double], String) =
     // 384MB: the kernel got fast enough that a 192MB pass finished in
     // ~0.5s, where scheduler jitter is ±10% of the measurement
-    val f = synthDump(384L * 1024 * 1024)
-    val sizeMb = f.length() / 1e6
-    def pass(): Double = {
-      val t0 = System.nanoTime()
-      graft.functions.GraftFunctions.diffdb(
-        spark.read.format("mediawiki").load(f.getAbsolutePath))
-        .selectExpr("sum(size(diffs))").collect()
-      (System.nanoTime() - t0) / 1e9
+    withSynthDump(384L * 1024 * 1024) { f =>
+      val sizeMb = f.length() / 1e6
+      // early passes pay lazy JIT of the parser/diff hot loops and
+      // measure compilation, not throughput (measured on a fresh JVM:
+      // 4.3s, 1.6s, 1.1s, then ~0.65s steady — C2 wants >1GB of
+      // profile); the steady state is what a long-running ingest
+      // sustains. A FIXED warm count is run-to-run unstable (C2 lands
+      // on pass 3 in one run, pass 6 in another — observed 0.55s vs
+      // 1.7s "steady" from the same build), so warm ADAPTIVELY: keep
+      // going while the curve still improves >10%, then measure until
+      // two consecutive passes agree within 10% and report the best of
+      // those settled passes.
+      val times = scala.collection.mutable.ArrayBuffer[Double]()
+      // The warm curve has TWO drops: a C1 plateau around pass 3-9, then
+      // a second C2/allocation-sink drop landing anywhere in passes
+      // 10-16 (measured 511→689 MB/s across passes 3→15 in one probe) —
+      // a 7-pass settle stops on the first plateau and under-records by
+      // ~20%. So: minimum 12 passes, stop early only when the last three
+      // sit within 8% of the best (fully flat), cap 16. Measured = the
+      // MINIMUM over all passes: the work is fixed and interference
+      // (GC, scheduler, compilation) only ever adds time, so the fastest
+      // pass is the least-noise estimate of steady state — the standard
+      // min-of-N benchmark estimator.
+      def settled = times.length >= 12 &&
+        times.takeRight(3).forall(_ <= times.min * 1.08)
+      while (times.length < 16 && !settled) times += ingestPass(spark, f)
+      val sec = times.min
+      val tag = if (settled) "settled" else "flat-cap"
+      System.err.println(s"[bench] ingest warm=${times.map(t => f"$t%.2f").mkString(",")} measured=${sec}s $tag")
+      (math.round(sizeMb / sec * 10.0) / 10.0, times.toSeq, tag)
     }
-    // early passes pay lazy JIT of the parser/diff hot loops and
-    // measure compilation, not throughput (measured on a fresh JVM:
-    // 4.3s, 1.6s, 1.1s, then ~0.65s steady — C2 wants >1GB of
-    // profile); the steady state is what a long-running ingest
-    // sustains. A FIXED warm count is run-to-run unstable (C2 lands
-    // on pass 3 in one run, pass 6 in another — observed 0.55s vs
-    // 1.7s "steady" from the same build), so warm ADAPTIVELY: keep
-    // going while the curve still improves >10%, then measure until
-    // two consecutive passes agree within 10% and report the best of
-    // those settled passes.
-    val times = scala.collection.mutable.ArrayBuffer[Double]()
-    // The warm curve has TWO drops: a C1 plateau around pass 3-9, then
-    // a second C2/allocation-sink drop landing anywhere in passes
-    // 10-16 (measured 511→689 MB/s across passes 3→15 in one probe) —
-    // a 7-pass settle stops on the first plateau and under-records by
-    // ~20%. So: minimum 12 passes, stop early only when the last three
-    // sit within 8% of the best (fully flat), cap 16. Measured = the
-    // MINIMUM over all passes: the work is fixed and interference
-    // (GC, scheduler, compilation) only ever adds time, so the fastest
-    // pass is the least-noise estimate of steady state — the standard
-    // min-of-N benchmark estimator.
-    def settled = times.length >= 12 &&
-      times.takeRight(3).forall(_ <= times.min * 1.08)
-    while (times.length < 16 && !settled) times += pass()
-    val sec = times.min
-    val tag = if (settled) "settled" else "flat-cap"
-    System.err.println(s"[bench] ingest warm=${times.map(t => f"$t%.2f").mkString(",")} measured=${sec}s $tag")
-    f.delete()
-    (math.round(sizeMb / sec * 10.0) / 10.0, times.toSeq, tag)
+
+  /** One timed dump → diffdb pass, in seconds: the unit of work Bench's
+    * ingest and `Probe ingest` measure. */
+  private[graft] def ingestPass(spark: SparkSession, f: java.io.File): Double = {
+    val t0 = System.nanoTime()
+    graft.functions.GraftFunctions.diffdb(
+      spark.read.format("mediawiki").load(f.getAbsolutePath))
+      .selectExpr("sum(size(diffs))").collect()
+    (System.nanoTime() - t0) / 1e9
   }
 
-  private def synthDump(targetBytes: Long): java.io.File = {
-    val dir = java.nio.file.Files.createTempDirectory("bench-dump")
+  /** Lends a fresh temp directory to `body` and deletes it, with
+    * everything in it, afterwards — also when `body` throws. */
+  private[graft] def withTempDir[A](prefix: String)(body: java.nio.file.Path => A): A = {
+    val dir = java.nio.file.Files.createTempDirectory(prefix)
+    try body(dir)
+    finally {
+      val paths = java.nio.file.Files.walk(dir)
+      try paths.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
+        .forEach(p => java.nio.file.Files.deleteIfExists(p))
+      finally paths.close()
+    }
+  }
+
+  /** One giant page: `revs` revisions of ~`revMb` MB of word tokens,
+    * each revision rewriting a 40-word window at a random position — a
+    * large page with a small per-revision delta, the realistic shape
+    * of a long wiki history. */
+  private[graft] case class Giant(revs: Int, revMb: Int)
+
+  /** The one dump synthesizer: writes a full-history dump into a fresh
+    * temp directory, lends the file to `body`, and deletes the file and
+    * its directory afterwards, also when `body` throws.
+    *
+    * Small pages carry 1 + (page id % 7) revisions; each revision
+    * replaces 10 tokens of a 300-token text with 20 new ones, so diffs
+    * are non-trivial. They are written until `targetBytes` are out. With
+    * `giant`, that page is written once half the target is out (first,
+    * for a target of 0), and small pages then fill the rest. */
+  private[graft] def withSynthDump[A](targetBytes: Long, giant: Option[Giant] = None)(
+      body: java.io.File => A): A = withTempDir("bench-dump") { dir =>
     val f = dir.resolve("dump.xml").toFile
     val w = new java.io.BufferedWriter(new java.io.FileWriter(f), 1 << 20)
+    var written = 0L
+    def put(s: String): Unit = { w.write(s); written += s.length }
     val rnd = new scala.util.Random(5)
-    w.write("<mediawiki>\n")
     var revId = 0
     var page = 0
-    while (f.length() < targetBytes || page < 100) {
+    def revision(user: Int)(text: => Unit): Unit = {
+      revId += 1
+      put(s"<revision><id>$revId</id><timestamp>2021-01-01T00:00:00Z</timestamp>" +
+        s"<contributor><username>u$user</username><id>$user</id></contributor>" +
+        "<text xml:space=\"preserve\">")
+      text
+      put("</text></revision>\n")
+    }
+    def smallPagesUntil(limit: Long): Unit = while (written < limit) {
       page += 1
-      w.write(s"<page><title>Page $page</title><ns>0</ns><id>$page</id>\n")
-      var r = 0
-      val revs = 1 + page % 7
+      put(s"<page><title>Page $page</title><ns>0</ns><id>$page</id>\n")
       var text = Array.fill(300)("w" + rnd.nextInt(5000)).mkString(" ")
-      while (r < revs) {
-        r += 1
-        revId += 1
-        // evolve the text so diffs are non-trivial
+      for (r <- 1 to 1 + page % 7) {
         val words = text.split(" ")
         val at = rnd.nextInt(words.length)
         text = (words.take(at) ++ Array.fill(20)("w" + rnd.nextInt(5000)) ++ words.drop(at + 10)).mkString(" ")
-        w.write(s"<revision><id>$revId</id><timestamp>2021-01-01T00:00:00Z</timestamp>")
-        w.write(s"<contributor><username>u${r % 50}</username><id>${r % 50}</id></contributor>")
-        w.write(s"<text xml:space=\"preserve\">$text</text></revision>\n")
+        revision(r)(put(text))
       }
-      w.write("</page>\n")
-      if (page % 50 == 0) w.flush()
+      put("</page>\n")
     }
-    w.write("</mediawiki>\n")
-    w.close()
-    f
+    try {
+      put("<mediawiki>\n")
+      smallPagesUntil(if (giant.isDefined) targetBytes / 2 else targetBytes)
+      giant.foreach { g =>
+        page += 1
+        put(s"<page><title>Giant</title><ns>0</ns><id>$page</id>\n")
+        val grnd = new scala.util.Random(7)
+        val nWords = g.revMb * 1024 * 1024 / 6 // ~"w1234 " per word
+        val words = Array.fill(nWords)("w" + grnd.nextInt(50000))
+        for (r <- 1 to g.revs) {
+          val at = grnd.nextInt(nWords - 50)
+          for (i <- at until at + 40) words(i) = "e" + r + "x" + grnd.nextInt(50000)
+          revision(1)(words.indices.foreach { i => if (i > 0) put(" "); put(words(i)) })
+        }
+        put("</page>\n")
+      }
+      smallPagesUntil(targetBytes)
+      put("</mediawiki>\n")
+    } finally w.close()
+    body(f)
   }
 }

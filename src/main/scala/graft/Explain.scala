@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan-inspection CLI: prints the formatted physical plan of the named
   * queries (default: a representative set) — the `.explain` feedback
   * loop for partitioning/broadcast/pushdown review.
@@ -10,12 +8,7 @@ import org.apache.spark.sql.SparkSession
   */
 object Explain {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().withExtensions(graft.plans.GraftExtensions).master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Bench.benchSession("4")
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
     val names = if (args.nonEmpty) args.toSeq
       else Seq("q2_revenue_by_nation", "q6_forecast", "q1_pricing_summary", "q13_asof_join")

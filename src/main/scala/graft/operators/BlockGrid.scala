@@ -28,7 +28,7 @@ import scala.collection.mutable.ArrayBuffer
   *    same n²/2·words the regime costs out — spread over B(B+1)/2
   *    tasks instead of one driver broadcast.
   */
-private[operators] object BlockGrid {
+private[graft] object BlockGrid {
 
   /** Upper bound on the grid size. The group key is Long arithmetic
     * (`lo.toLong * nBlocks + hi`) so overflow is not the binding
@@ -58,17 +58,17 @@ private[operators] object BlockGrid {
     def shouldLog(sweepKey: String): Boolean = last.getAndSet(sweepKey) != sweepKey
   }
 
-  /** Grid sizing shared with the probes (SweepProbe's recorded grid
-    * shape must be THE grid the sweep runs). */
-  private[operators] def nBlocksFor(nDocs: Long, nWords: Long,
+  /** Grid sizing shared with `Probe sweep` (its recorded grid shape
+    * must be THE grid the sweep runs). */
+  private[graft] def nBlocksFor(nDocs: Long, nWords: Long,
       targetBlockBytes: Long): Int = {
     val ideal = math.max(1,
       math.ceil(nDocs.toDouble * nWords * 8 / targetBlockBytes).toInt)
     math.min(ideal, MaxBlocks)
   }
 
-  /** Block assignment shared with the probes. */
-  private[operators] def blockOf(id: Long, nBlocks: Int): Int =
+  /** Block assignment shared with `Probe sweep`. */
+  private[graft] def blockOf(id: Long, nBlocks: Int): Int =
     ((id % nBlocks + nBlocks) % nBlocks).toInt
 
   /** Run the grid sweep. `emit` is called once per unordered candidate

@@ -43,7 +43,7 @@ object ConnectedComponents {
     * labels (spec-pinned). 16 splits the regimes: near-dup cluster
     * graphs (diameter 2-5) converge far below it, while a
     * deeper-than-16 graph is better off in the O(log² n) path
-    * immediately — the GraphScale probe measured 50 wasted
+    * immediately — `Probe graph` measured 50 wasted
     * propagation rounds costing ~½ of CC's 169 s on a
     * diameter-Θ(m/d) graph before the r9 change. */
   def labels(vertices: DataFrame, edges: DataFrame,

@@ -51,7 +51,7 @@ object KCore {
     * the remaining rounds — each of which is a full Spark job (degree
     * shuffle + two joins + lineage cut + count) whose cost at this
     * size is pure scheduling overhead, multiplied by the cascade
-    * depth (a graph property, unbounded by the plan — GraphScale's
+    * depth (a graph property, unbounded by the plan — `Probe graph`'s
     * harmonic graph peels ONE layer per round). The k-core is the
     * unique maximal subgraph with min degree ≥ k, so peel order
     * cannot change the result: driver and distributed paths are
@@ -68,7 +68,7 @@ object KCore {
     *
     * Rounds are bounded by the peel cascade's depth — a GRAPH property,
     * not a plan defect: a near-critical construction can peel exactly
-    * one layer per round (GraphScale's harmonic graph does), so
+    * one layer per round (`Probe graph`'s harmonic graph does), so
     * `maxRounds` is reachable on adversarial inputs at ANY scale. An
     * exit before the fixpoint would return a SUPERSET of the true
     * k-core (survivors still filtered by deg >= k); since a

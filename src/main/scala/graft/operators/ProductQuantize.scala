@@ -404,7 +404,7 @@ object ProductQuantize {
     * shuffle carries n reduced rows, not the n·C unreduced dot stream
     * a row_number window would sort (measured: the window form made
     * 1M-vector ivf_adc SLOWER than the flat sweep it exists to beat —
-    * VectorScale r16). probe > 1 (the query side, top-nProbe) keeps
+    * `Probe vector`, r16). probe > 1 (the query side, top-nProbe) keeps
     * the window — Spark's WindowGroupLimit prunes it map-side, and
     * query batches are small. */
   def coarseAssign(df: DataFrame, cents: DataFrame, outId: String, probe: Int,

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
@@ -163,6 +163,37 @@ object RepeatedSequences {
         StructField("seq", StringType, nullable = true))))
   }
 
+  /** Every token position's next-`window`-token suffix window:
+    * `(doc_id, p, ws)` with 1-based position `p` and the window's
+    * space-joined text `ws` — the rows [[topRepeats]]' distributed path
+    * sorts. Built by the native token_windows expression: one eval per
+    * DOCUMENT emitting every suffix window as a byte-range copy of the
+    * text, replacing the declarative split → posexplode → slice →
+    * array_join chain that carried the full token array through the
+    * Generate and paid a fresh slice array + join string per POSITION
+    * (byte-identical output; pinned by RepeatedSequencesSpec's
+    * expression-parity fuzz). The alias sits in its own projection
+    * BELOW the generate (ExtractGenerator hoists same-select aliases
+    * above it — r5). */
+  private[graft] def windows(docs: DataFrame, idCol: String, textCol: String,
+                             window: Int): DataFrame =
+    docs
+      .select(col(idCol).cast("long").as("doc_id"),
+        org.apache.spark.sql.graft.ColumnBridge.column(
+          graft.functions.TokenWindows(
+            org.apache.spark.sql.graft.ColumnBridge.expression(col(textCol)),
+            org.apache.spark.sql.catalyst.expressions.Literal(window))).as("wins"))
+      .select(col("doc_id"), posexplode(col("wins")))
+      .select(col("doc_id"), (col("pos") + 1).as("p"), col("col").as("ws"))
+
+  /** The key-range bucket (0 until `n`) of each [[windows]] row, cut
+    * by (ws, doc_id, p): [[PrefixSum]]'s cut-point literals, a pure
+    * function of the data. */
+  private[graft] def windowBucket(win: DataFrame, n: Int): Column = {
+    val ordCols = Seq("ws", "doc_id", "p")
+    PrefixSum.bucketExpr(ordCols, PrefixSum.deterministicCuts(win, ordCols, n))
+  }
+
   /** Top-`topK` distinct repeated sequences: `(lcp, seq)` = token
     * length and text of a maximal-up-to-`window` repeated prefix
     * shared by at least two corpus positions, ordered by
@@ -213,28 +244,10 @@ object RepeatedSequences {
         return t("scan")(driverTopRepeats(s, ws, topK))
       }
     }
-    // distributed two-phase path: windows built by the native
-    // token_windows expression — one eval per DOCUMENT emitting every
-    // suffix window as a byte-range copy of the text, replacing the
-    // declarative split → posexplode → slice → array_join chain that
-    // carried the full token array through the Generate and paid a
-    // fresh slice array + join string per POSITION (byte-identical
-    // output; pinned by RepeatedSequencesSpec's expression-parity
-    // fuzz). The alias sits in its own projection BELOW the generate
-    // (ExtractGenerator hoists same-select aliases above it — r5).
-    val win = docs
-      .select(col(idCol).cast("long").as("doc_id"),
-        org.apache.spark.sql.graft.ColumnBridge.column(
-          graft.functions.TokenWindows(
-            org.apache.spark.sql.graft.ColumnBridge.expression(col(textCol)),
-            org.apache.spark.sql.catalyst.expressions.Literal(window))).as("wins"))
-      .select(col("doc_id"), posexplode(col("wins")))
-      .select(col("doc_id"), (col("pos") + 1).as("p"), col("col").as("ws"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    // distributed two-phase path
+    val win = windows(docs, idCol, textCol, window).persist(StorageLevel.MEMORY_AND_DISK)
     try {
-      val ordCols = Seq("ws", "doc_id", "p")
-      val cuts = PrefixSum.deterministicCuts(win, ordCols, n)
-      val bucket = PrefixSum.bucketExpr(ordCols, cuts)
+      val bucket = windowBucket(win, n)
       val sorted = win.withColumn("__b", bucket)
         .repartition(n, col("__b"))
         .sortWithinPartitions(col("__b"), col("ws"), col("doc_id"), col("p"))

@@ -407,8 +407,8 @@ class MediaWikiWriterFactory(schema: StructType, opts: MediaWikiWriterOpts,
   * `assumeGrouped` — where page order is arbitrary — keeps a revisit
   * set, a primitive long set at ~11 bytes/page.
   * The READER's signature property (one revision pair per task,
-  * GiantPageSmoke) holds symmetrically on the write side
-  * (GiantPageWriteSmoke; a whole-page `StringBuilder` here held
+  * `Probe giant read`) holds symmetrically on the write side
+  * (`Probe giant write`; a whole-page `StringBuilder` here held
   * multi-GB char[] for GB-scale revision histories — r14 verdict #1).
   * A page group is still ONE complete bz2 stream: bzip2 compresses in
   * fixed blocks, so incremental `write()` granularity cannot change

@@ -67,7 +67,7 @@ class KCoreSpec extends AnyFunSuite {
     // planted deep cascade: a path 0-1-…-11 at k=2 peels exactly its two
     // endpoints per round (degree-1 ends fall, exposing new ends) — 6
     // rounds to empty, so maxRounds=3 stops mid-cascade. This is the
-    // small-m stand-in for GraphScale's harmonic near-critical graph
+    // small-m stand-in for `Probe graph`'s harmonic near-critical graph
     // (one layer per round at any scale). driverPeelLimit = 0 keeps the
     // DISTRIBUTED loop under test — the driver path cannot stop early.
     val path = (0L until 11L).map(i => i -> (i + 1)).toDF("src", "dst")

@@ -99,7 +99,7 @@ texts = tb.column("text").to_pylist()
 # found the pinned-10x bigram vocab DOUBLED r9->r10 purely from base
 # drift. Assert against the committed fingerprint; on mismatch, proceed
 # (the rehearsal is still useful within-round) but stamp the outdir so
-# SweepProbe/SCALING records carry the invalidation.
+# `graft.Probe sweep`/SCALING records carry the invalidation.
 import hashlib, json
 _h = hashlib.sha256()
 for _t in texts:
@@ -122,7 +122,7 @@ if not _match:
     print(f"*   committed: {_want}")
     print(f"*   actual:    {_fp}")
     print("* 10x numbers from this build are NOT comparable to prior")
-    print("* rounds' SweepProbe/SCALING rows. Outdir stamped with")
+    print("* rounds' Probe sweep/SCALING rows. Outdir stamped with")
     print("* BASE_FINGERPRINT.json (match: false).")
     print("*" * 72)
 else:
