@@ -128,7 +128,7 @@ object EntryOracle {
     target.toString
   }
 
-  /** Write the same dump bz2-COMPRESSED (Hadoop's codec, recognized by
+  /** Write the same dump bz2-COMPRESSED (one stream, recognized by
     * extension) so the flagship oracle can also drive the compressed
     * reader path end-to-end. */
   private[graft] def ensureDumpBz2(): String = {
@@ -138,12 +138,9 @@ object EntryOracle {
     val tmp = java.nio.file.Files.createTempFile(dir, "graft_entry_oracle", ".xml.bz2")
     val fos = new java.io.FileOutputStream(tmp.toFile)
     try {
-      // Hadoop's CBZip2OutputStream expects the caller to write the
-      // two-byte magic itself (the codec strips it on read)
-      fos.write('B'); fos.write('Z')
-      val out = new org.apache.hadoop.io.compress.bzip2.CBZip2OutputStream(fos, 1)
-      out.write(dumpXml.getBytes("UTF-8"))
-      out.close()
+      val z = new graft.sources.Bz2OutputStream(fos, 1)
+      z.write(dumpXml.getBytes("UTF-8"))
+      z.finish()
     } finally fos.close()
     java.nio.file.Files.move(tmp, target,
       java.nio.file.StandardCopyOption.REPLACE_EXISTING,
@@ -261,7 +258,7 @@ object EntryOracle {
 
   // ---------------------------------------------------------------- q163
   /** The same flagship oracle through the bz2-COMPRESSED reader: the
-    * identical dump compressed with the Hadoop codec, identical
+    * identical dump bz2-compressed, identical
     * expected VALUES — so the compressed-stream scan path sits inside
     * the correctness gate, not only the specs. */
   def q163EntryDiffdbBz2(s: SparkSession, dir: String): DataFrame =

@@ -79,6 +79,7 @@ final class Bz2BlockDecoder {
   private var live = 0
 
   private var tt = new Array[Int](0)
+  private var seq = new Array[Int](0) // a randomised block in output order
   private val unzftab = new Array[Int](256)
   private val cftab = new Array[Int](257)
   private val seqToUnseq = new Array[Byte](256)
@@ -140,8 +141,7 @@ final class Bz2BlockDecoder {
     val magic = (getBits(24).toLong << 24) | getBits(24)
     if (magic != BlockMagic) fail(f"no block magic (found 0x$magic%012x)")
     blockCrc = getBits(32)
-    if (getBits(1) != 0)
-      fail("randomized block (written by bzip2 before 0.9.5) is not supported")
+    val randomised = getBits(1) != 0
     val origPtr = getBits(24)
 
     // symbol map
@@ -200,7 +200,7 @@ final class Bz2BlockDecoder {
     if (consumed > inLen.toLong * 8)
       throw new Bz2TruncatedException("block header runs past the end of the input")
 
-    decodeSymbols(nInUse, alphaSize, nSelectors, maxBlock, origPtr)
+    decodeSymbols(nInUse, alphaSize, nSelectors, maxBlock, origPtr, randomised)
   }
 
   /** Canonical code assignment (shorter codes first, then by symbol):
@@ -243,7 +243,7 @@ final class Bz2BlockDecoder {
   }
 
   private def decodeSymbols(nInUse: Int, alphaSize: Int, nSelectors: Int,
-      maxBlock: Int, origPtr: Int): Unit = {
+      maxBlock: Int, origPtr: Int, randomised: Boolean): Unit = {
     if (this.tt.length < maxBlock) this.tt = new Array[Int](maxBlock)
     val tt = this.tt
     val unz = unzftab
@@ -350,12 +350,14 @@ final class Bz2BlockDecoder {
     if (endBit > inLen.toLong * 8)
       throw new Bz2TruncatedException("block runs past the end of the input")
     if (origPtr >= n) fail(s"origin pointer $origPtr outside block of $n bytes")
-    inverseBwt(n, origPtr)
+    inverseBwt(n, origPtr, randomised)
   }
 
   /** Inverse BWT through the fused array (byte in the low 8 bits, next
-    * index above), undoing RLE1 and computing the CRC as bytes come out. */
-  private def inverseBwt(n: Int, origPtr: Int): Unit = {
+    * index above), undoing RLE1 and computing the CRC as bytes come out.
+    * A randomised block is first put in output order (see
+    * [[derandomise]]), which the same loop then reads front to back. */
+  private def inverseBwt(n: Int, origPtr: Int, randomised: Boolean): Unit = {
     val tt = this.tt
     val cf = cftab
     cf(0) = 0
@@ -373,7 +375,7 @@ final class Bz2BlockDecoder {
     if (o.length < n) o = new Array[Byte](n)
     val crcT = CrcTable
     var crc = -1
-    var pos = tt(origPtr) >>> 8
+    var pos = if (randomised) derandomise(n, origPtr) else tt(origPtr) >>> 8
     var last = -1
     var same = 0
     var w = 0
@@ -402,5 +404,28 @@ final class Bz2BlockDecoder {
     out = o
     outLen = w
     if (~crc != blockCrc) fail(f"block CRC mismatch: stored 0x$blockCrc%08x, computed 0x${~crc}%08x")
+  }
+
+  /** Rewrite the linked array of a randomised block (bzip2 before 0.9.5
+    * and Hadoop's pure-Java `CBZip2OutputStream` write them) as its
+    * output sequence, each entry linking to the next, with bzip2's
+    * pseudo-random bit flips (`rNums`) undone; returns the start, 0. */
+  private def derandomise(n: Int, origPtr: Int): Int = {
+    if (seq.length < n) seq = new Array[Int](tt.length)
+    val rNums = org.apache.hadoop.io.compress.bzip2.BZip2Constants.rNums
+    var pos = tt(origPtr) >>> 8
+    var toGo = 0
+    var at = 0
+    var i = 0
+    while (i < n) {
+      val e = tt(pos)
+      pos = e >>> 8
+      if (toGo == 0) { toGo = rNums(at); at = (at + 1) & 511 }
+      toGo -= 1
+      seq(i) = ((i + 1) << 8) | ((e & 0xff) ^ (if (toGo == 1) 1 else 0))
+      i += 1
+    }
+    System.arraycopy(seq, 0, tt, 0, n)
+    0
   }
 }

@@ -207,7 +207,7 @@ final class Bz2SplitSource(in: FSDataInputStream, file: String, fileLen: Long,
           atEof = inputDone && upTo == winBase + winLen, spare.pollFirst())
         pendingCand = c
         tasks.addLast(t)
-        pool.execute(t)
+        Bz2Pool.pool.execute(t)
         return true
       }
       pendingCand = c
@@ -385,46 +385,60 @@ object Bz2SplitSource {
     f
   }
 
-  private val threads = new AtomicInteger()
-  /** One decode thread per available core, shared by all sources. */
-  lazy val pool: ExecutorService =
-    Executors.newFixedThreadPool(Runtime.getRuntime.availableProcessors, (r: Runnable) => {
-      val t = new Thread(r, s"graft-bz2-decode-${threads.incrementAndGet()}")
-      t.setDaemon(true)
-      t
-    })
-
   /** One block decode: `data` holds file bytes from `dataBase`, the
-    * magic at absolute bit `startBit`. Runs once, on a pool thread or
-    * inline in [[await]], whichever claims it first. */
+    * magic at absolute bit `startBit`. */
   private final class BlockTask(val startBit: Long, val data: Array[Byte], val dataBase: Long,
-      val atEof: Boolean, outBuf: Array[Byte]) extends Runnable {
-    private val state = new AtomicInteger(0) // 0 queued, 1 claimed, 2 cancelled
-    private val done = new CountDownLatch(1)
+      val atEof: Boolean, outBuf: Array[Byte]) extends Bz2Pool.Task {
     var out: Array[Byte] = outBuf
     var outLen = 0
     var blockCrc = 0
     var endBit = 0L
-    var error: Throwable = _
 
     def covers(bit: Long, n: Int): Boolean =
       bit >= dataBase * 8 && bit + n <= (dataBase + data.length) * 8
 
-    def run(): Unit = if (state.compareAndSet(0, 1)) {
-      try {
-        val d = Bz2BlockDecoder.forThread
-        out = d.decode(data, data.length, startBit - dataBase * 8, out)
-        outLen = d.outLen
-        blockCrc = d.blockCrc
-        endBit = d.endBit + dataBase * 8
-      } catch {
-        case e: Throwable => error = e
-      } finally done.countDown()
+    protected def compute(): Unit = {
+      val d = Bz2BlockDecoder.forThread
+      out = d.decode(data, data.length, startBit - dataBase * 8, out)
+      outLen = d.outLen
+      blockCrc = d.blockCrc
+      endBit = d.endBit + dataBase * 8
+    }
+  }
+}
+
+/** The JVM-wide daemon pool that decodes and encodes bz2 blocks: one
+  * thread per available core, shared by every reader and writer. */
+private[sources] object Bz2Pool {
+  private val threads = new AtomicInteger()
+  lazy val pool: ExecutorService =
+    Executors.newFixedThreadPool(Runtime.getRuntime.availableProcessors, (r: Runnable) => {
+      val t = new Thread(r, s"graft-bz2-${threads.incrementAndGet()}")
+      t.setDaemon(true)
+      t
+    })
+
+  /** Work that runs once, on a pool thread or inline in [[await]],
+    * whichever claims it first, so a caller waiting on a busy pool
+    * never stalls. A failure is kept in [[error]]. */
+  abstract class Task extends Runnable {
+    private val state = new AtomicInteger(0) // 0 queued, 1 claimed, 2 cancelled
+    private val done = new CountDownLatch(1)
+    var error: Throwable = _
+
+    protected def compute(): Unit
+
+    final def run(): Unit = if (state.compareAndSet(0, 1)) {
+      try compute()
+      catch { case e: Throwable => error = e }
+      finally done.countDown()
     }
 
-    def cancel(): Unit = state.compareAndSet(0, 2)
+    final def cancel(): Unit = state.compareAndSet(0, 2)
 
-    def await(): Unit = {
+    final def isDone: Boolean = done.getCount == 0
+
+    final def await(): Unit = {
       run()
       done.await()
     }

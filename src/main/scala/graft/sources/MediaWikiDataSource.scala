@@ -752,6 +752,17 @@ class RevisionsReadMetric extends SumMetric("revisionsRead", "revisions read")
 class PagesSkippedMetric extends SumMetric("pagesSkipped", "pages skipped by filters")
 class BytesDecompressedMetric extends SumMetric("bytesDecompressed", "bytes decompressed")
 class Bz2BlocksMetric extends SumMetric("bz2Blocks", "bz2 blocks decoded")
+/** One task's value of a [[SumMetric]]. */
+object TaskMetric {
+  def apply(n: String, v: Long): org.apache.spark.sql.connector.metric.CustomTaskMetric =
+    new org.apache.spark.sql.connector.metric.CustomTaskMetric {
+      override def name(): String = n
+      override def value(): Long = v
+    }
+}
+class XmlBytesWrittenMetric extends SumMetric("xmlBytesWritten", "XML bytes written")
+class Bz2BytesWrittenMetric extends SumMetric("bz2BytesWritten", "bz2 bytes written")
+class Bz2BlocksWrittenMetric extends SumMetric("bz2BlocksWritten", "bz2 blocks written")
 
 class MediaWikiReaderFactory(schema: StructType, props: Map[String, String],
     hadoopConf: Map[String, String]) extends PartitionReaderFactory {
@@ -905,20 +916,16 @@ class MediaWikiPartitionReader(
   override def close(): Unit = iter.close()
 
   override def currentMetricsValues(): Array[org.apache.spark.sql.connector.metric.CustomTaskMetric] = {
-    def m(n: String, v: Long) = new org.apache.spark.sql.connector.metric.CustomTaskMetric {
-      override def name(): String = n
-      override def value(): Long = v
-    }
     val (decompressed, blocks) = source match {
       case b: Bz2SplitSource => (b.bytesDecoded, b.blocksDecoded)
       case c: CountingByteSource if codec != null => (c.bytesRead, 0L)
       case _ => (0L, 0L) // plain XML
     }
-    Array(m("pagesRead", iter.pagesRead),
-      m("revisionsRead", iter.revisionsRead),
-      m("pagesSkipped", iter.pagesSkipped),
-      m("bytesDecompressed", decompressed),
-      m("bz2Blocks", blocks))
+    Array(TaskMetric("pagesRead", iter.pagesRead),
+      TaskMetric("revisionsRead", iter.revisionsRead),
+      TaskMetric("pagesSkipped", iter.pagesSkipped),
+      TaskMetric("bytesDecompressed", decompressed),
+      TaskMetric("bz2Blocks", blocks))
   }
 }
 

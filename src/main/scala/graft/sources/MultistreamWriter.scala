@@ -31,16 +31,12 @@ private[graft] object MultistreamWriter {
     val offsets = scala.collection.mutable.ArrayBuffer[Long]()
     val fos = new java.io.FileOutputStream(dump)
     try {
+      val z = new Bz2OutputStream(fos, 1)
       for ((from, to) <- cuts.init.zip(cuts.tail)) {
-        offsets += fos.getChannel.position()
-        // Hadoop's CBZip2OutputStream expects the caller to write the
-        // two-byte magic itself (the codec strips it on read)
-        fos.write('B'); fos.write('Z')
-        val out = new org.apache.hadoop.io.compress.bzip2.CBZip2OutputStream(fos, 1)
-        val bytes = xml.substring(from, to).getBytes("UTF-8")
-        out.write(bytes)
-        out.finish()
+        z.startStream(offsets += _)
+        z.write(xml.substring(from, to).getBytes("UTF-8"))
       }
+      z.finish()
     } finally fos.close()
     val pw = new java.io.PrintWriter(index, "UTF-8")
     try starts.indices.foreach { i =>

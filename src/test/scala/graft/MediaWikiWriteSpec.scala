@@ -366,4 +366,102 @@ class MediaWikiWriteSpec extends AnyFunSuite {
     assert(offsets.head > 0, "header stream must precede the first page stream")
     assert(canon(noPrev(out.getAbsolutePath)) == canon(src))
   }
+
+  /** A dump of near-identical ~20 KB revisions, the text Hadoop's
+    * encoder wrote randomised blocks for. */
+  private def historyDump(pages: Int, revs: Int): String = {
+    val f = Files.createTempFile("mwwhist", ".xml")
+    Files.write(f, graft.sources.Bz2Fixtures.historyXml(pages, revs).getBytes("UTF-8"))
+    f.toString
+  }
+
+  private def files(dir: File, suffix: String): Seq[File] =
+    dir.listFiles().filter(_.getName.endsWith(suffix)).sortBy(_.getName).toSeq
+
+  test("near-identical 20 KB revisions write without randomised blocks and read back exactly") {
+    val src = noPrev(historyDump(1, 44))
+    val out = Files.createTempDirectory("mwwrand").toFile
+    src.write.format("mediawiki").option("assumeGrouped", "true")
+      .mode("append").save(out.getAbsolutePath)
+    val dumps = files(out, ".xml.bz2")
+    assert(dumps.nonEmpty)
+    for (d <- dumps) {
+      val bytes = Files.readAllBytes(d.toPath)
+      assert(graft.sources.Bz2Fixtures.magics(bytes).size > 1, s"${d.getName}: one block only")
+      assert(graft.sources.Bz2Fixtures.randomised(bytes).isEmpty, s"${d.getName}: randomised block")
+    }
+    assert(canon(noPrev(out.getAbsolutePath)) == canon(src))
+  }
+
+  /** The executed plan of the one command `run` executes. */
+  private def executed(run: => Unit): org.apache.spark.sql.execution.SparkPlan = {
+    val seen = new java.util.concurrent.LinkedBlockingQueue[org.apache.spark.sql.execution.SparkPlan]()
+    val l = new org.apache.spark.sql.util.QueryExecutionListener {
+      def onSuccess(f: String, qe: org.apache.spark.sql.execution.QueryExecution, ns: Long): Unit =
+        seen.add(qe.executedPlan)
+      def onFailure(f: String, qe: org.apache.spark.sql.execution.QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(l)
+    try {
+      run
+      val p = seen.poll(60, java.util.concurrent.TimeUnit.SECONDS)
+      assert(p != null, "no executed plan reported")
+      p
+    } finally spark.listenerManager.unregister(l)
+  }
+
+  test("the write node reports XML bytes, bz2 bytes and bz2 blocks written") {
+    val src = noPrev(historyDump(3, 12)).union(noPrev(fixture))
+    val out = Files.createTempDirectory("mwwmetrics").toFile
+    val plan = executed(src.write.format("mediawiki").option("assumeGrouped", "true")
+      .option("bz2BlockSize", "1").mode("append").save(out.getAbsolutePath))
+    val node = plan.collectFirst { case p if p.metrics.contains("bz2BytesWritten") => p }
+      .getOrElse(fail(s"no write metrics in\n$plan"))
+    def metric(n: String) = node.metrics(n).value
+    val dumps = files(out, ".xml.bz2").map(f => Files.readAllBytes(f.toPath))
+    assert(dumps.size == 2)
+    val xml = dumps.map { b =>
+      val in = new org.apache.commons.compress.compressors.bzip2.BZip2CompressorInputStream(
+        new java.io.ByteArrayInputStream(b), true)
+      try in.readAllBytes().length.toLong finally in.close()
+    }.sum
+    assert(metric("xmlBytesWritten") == xml)
+    assert(metric("bz2BytesWritten") == dumps.map(_.length.toLong).sum)
+    val blocks = dumps.map(b => graft.sources.Bz2Fixtures.magics(b).size.toLong).sum
+    assert(blocks > dumps.size * 3L, s"$blocks blocks")
+    assert(metric("bz2BlocksWritten") == blocks)
+  }
+
+  test("the same frame writes byte-identical archives; every index offset is its page's stream") {
+    val src = noPrev(historyDump(4, 30)).union(noPrev(fixture))
+    def write(): File = {
+      val out = Files.createTempDirectory("mwwdet").toFile
+      src.write.format("mediawiki").option("assumeGrouped", "true")
+        .option("bz2BlockSize", "1").option("multistreamPagesPerStream", "2")
+        .mode("append").save(out.getAbsolutePath)
+      out
+    }
+    val (a, b) = (write(), write())
+    for (suffix <- Seq(".xml.bz2", "-index.txt")) {
+      val (fa, fb) = (files(a, suffix), files(b, suffix))
+      assert(fa.size == 2 && fb.size == fa.size)
+      for ((x, y) <- fa.zip(fb))
+        assert(java.util.Arrays.equals(Files.readAllBytes(x.toPath), Files.readAllBytes(y.toPath)),
+          s"${x.getName} and ${y.getName} differ")
+    }
+    for ((dump, idx) <- files(a, ".xml.bz2").zip(files(a, "-index.txt"))) {
+      val bytes = Files.readAllBytes(dump.toPath)
+      val lines = scala.io.Source.fromFile(idx, "UTF-8").getLines().map(_.split(":", 3)).toList
+      val starts = (lines.map(_(0).toLong) :+ bytes.length.toLong).distinct
+      for (l <- lines) {
+        val off = l(0).toInt
+        assert(new String(bytes, off, 3, "US-ASCII") == "BZh", s"${idx.getName}: offset $off")
+        val end = starts(starts.indexOf(off.toLong) + 1).toInt
+        val in = new org.apache.commons.compress.compressors.bzip2.BZip2CompressorInputStream(
+          new java.io.ByteArrayInputStream(bytes, off, end - off), false)
+        val stream = try new String(in.readAllBytes(), "UTF-8") finally in.close()
+        assert(stream.contains(s"<id>${l(1)}</id>"), s"${idx.getName}: page ${l(1)} not in the stream at $off")
+      }
+    }
+  }
 }

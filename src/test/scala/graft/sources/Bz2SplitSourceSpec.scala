@@ -171,6 +171,17 @@ class Bz2SplitSourceSpec extends AnyFunSuite {
     assertSameAsCommons(f)
   }
 
+  test("decodes randomised blocks (Hadoop's CBZip2OutputStream on near-identical revisions)") {
+    // pages of near-identical ~20 KB revisions push Hadoop's block sort
+    // past its work limit, and it randomises the block
+    val bytes = hadoopBz2(Bz2Fixtures.historyXml(12, 20).getBytes("UTF-8"), 9)
+    val randomised = Bz2Fixtures.randomised(bytes)
+    assert(randomised.nonEmpty, "the fixture holds no randomised block")
+    val f = file("randomised.bz2", bytes)
+    assertSameAsCommons(f)
+    assertSplitParity(f, new scala.util.Random(13), 12)
+  }
+
   /** Bit offsets of the real block magics, from a whole-file read. */
   private def magics(bytes: Array[Byte]): Seq[Long] =
     (0L until bytes.length * 8L - 48).filter(b =>
