@@ -7,8 +7,9 @@ object Bz2BlockEncoder {
 
   private val local = ThreadLocal.withInitial[Bz2BlockEncoder](() => new Bz2BlockEncoder)
 
-  /** This thread's encoder: its scratch arrays (~7 MB at level 9) are
-    * reused by every block the thread encodes. */
+  /** This thread's encoder: its scratch arrays (~8 MB at level 9: the
+    * rotated block's bytes and two ints per byte) are reused by every
+    * block the thread encodes. */
   def forThread: Bz2BlockEncoder = local.get()
 
   private val MaxGroups = 6
@@ -26,7 +27,8 @@ object Bz2BlockEncoder {
   * The BWT sorts the rotations of the block's least rotation `w`
   * (found in linear time). `w` is `u^m` for a Lyndon word `u`, and the
   * suffix order of a Lyndon word is its rotation order, so one SA-IS
-  * suffix sort of `u` orders every rotation: near-linear on any input,
+  * suffix sort of `u` ([[Sais]], straight from the bytes of `w`, with no
+  * type bits) orders every rotation: near-linear on any input,
   * repetitive text included, and never randomised. */
 final class Bz2BlockEncoder {
   import Bz2BlockEncoder._
@@ -41,8 +43,9 @@ final class Bz2BlockEncoder {
   private var acc = 0L
   private var live = 0
 
-  private var text = new Array[Int](0) // w as ints (types in the sign bit); then the MTF values (≤ n + 1)
+  private var rot = new Array[Byte](0) // w, the block's least rotation
   private var sa = new Array[Int](0)
+  private var text = new Array[Int](0) // the MTF values (≤ n + 1)
   private val buckets = new Array[Int](512)
   private val inUse = new Array[Boolean](256)
   private val seqOf = new Array[Int](256)
@@ -65,8 +68,9 @@ final class Bz2BlockEncoder {
   def encode(block: Array[Byte], n: Int, dst: Array[Byte]): Array[Byte] = {
     require(n > 0, "a bz2 block holds at least one byte")
     if (sa.length < n) {
-      text = new Array[Int](n + 1)
+      rot = new Array[Byte](n)
       sa = new Array[Int](n)
+      text = new Array[Int](n + 1)
     }
     blockCrc = crcOf(block, n)
     val origPtr = sortRotations(block, n)
@@ -135,18 +139,17 @@ final class Bz2BlockEncoder {
     * block itself (bzip2's `origPtr`). */
   private def sortRotations(b: Array[Byte], n: Int): Int = {
     val k0 = leastRotation(b, n)
-    val t = text
-    var i = 0
-    var x = k0
-    while (i < n) { t(i) = b(x) & 0xff; x += 1; if (x == n) x = 0; i += 1 }
+    val w = rot
+    System.arraycopy(b, k0, w, 0, n - k0)
+    System.arraycopy(b, 0, w, n - k0, k0)
     // Duval: the first Lyndon factor of w = u^m is u
     var j = 1
     var k = 0
-    while (j < n && t(k) <= t(j)) { if (t(k) < t(j)) k = 0 else k += 1; j += 1 }
+    while (j < n && (w(k) & 0xff) <= (w(j) & 0xff)) { if (w(k) == w(j)) k += 1 else k = 0; j += 1 }
     val p = j - k
     val m = n / p
     if (m * p != n) throw new IllegalStateException(s"least rotation of period $p does not tile $n bytes")
-    Sais.sort(t, 0, sa, p, 256, buckets, 0)
+    Sais.sort(w, p, sa, buckets)
     // rows s + q*p (q < m) of w are equal rotations; each ends in u(s - 1)
     val self = (n - k0) % n % p
     val rows = sa
@@ -157,7 +160,7 @@ final class Bz2BlockEncoder {
     while (r < p) {
       val s = rows(r)
       if (s == self) orig = r * m
-      val c = t(if (s == 0) p - 1 else s - 1).toByte // the low byte: the symbol
+      val c = w(if (s == 0) p - 1 else s - 1)
       if (m == 1) { last(o) = c; o += 1 }
       else { java.util.Arrays.fill(last, o, o + m, c); o += m }
       r += 1
@@ -474,143 +477,335 @@ final class Bz2BlockEncoder {
 }
 
 /** Suffix sorting by induced sorting (SA-IS, Nong, Zhang and Chan
-  * 2009) with a virtual sentinel smaller than every symbol. Each
-  * suffix's type (S or L) is kept in its symbol's sign bit, so the
-  * induce passes load one array entry per suffix. */
+  * 2009) with a virtual sentinel smaller than every symbol, in the form
+  * of Yuta Mori's sais-lite: no S/L type is stored. A suffix's type is
+  * read off its neighbours' symbols as the induce passes place it, and
+  * each entry goes into `sa` as `j` when its predecessor still has to
+  * be induced in this pass, else as `~j`. The pointer into the current
+  * bucket stays in a local until the symbol changes.
+  *
+  * Level 0 reads byte text; the reduced levels read int text held in
+  * `sa` itself. The two are the same algorithm, written once per text
+  * type so the byte level's loops stay free of a text-type branch. */
 private[sources] object Sais {
-  private val Sym = 0x7fffffff
-
-  /** Suffix array of the `n` symbols of `s` from `so` (in `[0, k)`)
-    * into `sa(0 until n)`, using `bk` from `bko` for `2k` bucket
-    * counters. Sets the sign bit of every S-type symbol of `s`. The
-    * reduced problem's text, suffix array and (when they fit) counters
-    * live in `sa`. */
-  def sort(s: Array[Int], so: Int, sa: Array[Int], n: Int, k: Int, bk: Array[Int], bko: Int): Unit = {
-    if (n == 1) { sa(0) = 0; return }
-    // types right to left; the last suffix, before the sentinel, is L
+  /** Suffix array of the unsigned bytes `t(0 until n)` (`n` ≥ 1) into
+    * `sa(0 until n)`; the rest of `sa` is scratch for the reduced
+    * levels, and `bk` holds the 512 bucket counters. */
+  def sort(t: Array[Byte], n: Int, sa: Array[Int], bk: Array[Int]): Unit = {
+    val k = 256
+    counts(t, n, bk)
+    ends(bk, 0, k, k)
+    java.util.Arrays.fill(sa, 0, n, 0)
+    // seed the LMS suffixes at their bucket ends; s is 1 while i + 1 is S-type
     var i = n - 2
-    var next = s(so + n - 1)
+    var s = 0
+    var c1 = t(n - 1) & 0xff
     while (i >= 0) {
-      val a = s(so + i)
-      if (a < (next & Sym) || (a == (next & Sym) && next < 0)) s(so + i) = a | ~Sym
-      next = s(so + i)
+      val c0 = t(i) & 0xff
+      if (c0 < c1 + s) s = 1
+      else if (s != 0) { bk(k + c1) -= 1; sa(bk(k + c1)) = i + 1; s = 0 }
+      c1 = c0
       i -= 1
     }
-    def lms(p: Int): Boolean = s(so + p) < 0 && s(so + p - 1) >= 0
-    val bo = bko + k // bucket heads after the k counts
-    java.util.Arrays.fill(bk, bko, bo, 0)
-    i = 0
-    while (i < n) { bk(bko + (s(so + i) & Sym)) += 1; i += 1 }
+    induce(t, n, sa, bk)
 
-    // sort the LMS substrings: seed LMS suffixes at their bucket ends
-    java.util.Arrays.fill(sa, 0, n, -1)
-    ends(bk, bko, k)
-    i = 1
-    while (i < n) {
-      if (lms(i)) { val c = bo + (s(so + i) & Sym); bk(c) -= 1; sa(bk(c)) = i }
-      i += 1
-    }
-    induce(s, so, sa, n, k, bk, bko)
-
-    // name them in sorted order: equal substrings (symbols and types) share a name
-    var n1 = 0
+    // the LMS substrings in sorted order into sa(0 until m): p is LMS
+    // when p - 1 is L and the first symbol after p's run is larger
+    var m = 0
     i = 0
     while (i < n) {
       val p = sa(i)
-      if (p > 0 && lms(p)) { sa(n1) = p; n1 += 1 }
-      i += 1
-    }
-    java.util.Arrays.fill(sa, n1, n, -1)
-    var names = 0
-    var prev = -1
-    i = 0
-    while (i < n1) {
-      val p = sa(i)
-      var diff = prev < 0
-      var d = 0
-      var going = !diff
-      while (going) {
-        val a = p + d
-        val b = prev + d
-        if (a == n || b == n || s(so + a) != s(so + b)) { diff = true; going = false }
-        else if (d > 0 && (lms(a) || lms(b))) going = false
-        d += 1
+      if (p > 0) {
+        val c0 = t(p) & 0xff
+        if ((t(p - 1) & 0xff) > c0) {
+          var j = p + 1
+          while (j < n && (t(j) & 0xff) == c0) j += 1
+          if (j < n && (t(j) & 0xff) > c0) { sa(m) = p; m += 1 }
+        }
       }
-      if (diff) { names += 1; prev = p }
-      sa(n1 + (p >> 1)) = names - 1
       i += 1
     }
-    // the names in text order: the reduced text, at the end of sa
-    var j = n - 1
-    i = n - 1
-    while (i >= n1) { if (sa(i) >= 0) { sa(j) = sa(i); j -= 1 }; i -= 1 }
-
-    // order the LMS suffixes into sa(0 until n1): recurse while names
-    // repeat, with the counters in sa's free middle when they fit
-    val r = n - n1
-    if (names < n1) {
-      if (r - n1 >= 2 * names) sort(sa, r, sa, n1, names, sa, n1)
-      else sort(sa, r, sa, n1, names, new Array[Int](2 * names), 0)
-    } else { i = 0; while (i < n1) { sa(sa(r + i)) = i; i += 1 } }
-    j = r
-    i = 1
-    while (i < n) { if (lms(i)) { sa(j) = i; j += 1 }; i += 1 }
-    i = 0
-    while (i < n1) { sa(i) = sa(r + sa(i)); i += 1 }
+    // each LMS substring's length, to the next LMS symbol inclusive, at sa(m + p/2)
+    java.util.Arrays.fill(sa, m, m + (n >> 1), 0)
+    i = n - 2
+    s = 0
+    c1 = t(n - 1) & 0xff
+    var next = n - 1
+    while (i >= 0) {
+      val c0 = t(i) & 0xff
+      if (c0 < c1 + s) s = 1
+      else if (s != 0) { sa(m + ((i + 1) >> 1)) = next - i; next = i + 1; s = 0 }
+      c1 = c0
+      i -= 1
+    }
+    // name them: equal length and symbols give equal types, so one name.
+    // The last substring, cut by the sentinel, may share a name with
+    // others of equal symbols: its reduced suffix is then a prefix of
+    // theirs and still sorts first, as the sentinel does.
+    val names = {
+      var name = 0
+      var q = n
+      var qlen = 0
+      i = 0
+      while (i < m) {
+        val p = sa(i)
+        val plen = sa(m + (p >> 1))
+        var diff = true
+        if (plen == qlen) {
+          var j = 0
+          while (j < plen && t(p + j) == t(q + j)) j += 1
+          if (j == plen) diff = false
+        }
+        if (diff) { name += 1; q = p; qlen = plen }
+        sa(m + (p >> 1)) = name
+        i += 1
+      }
+      name
+    }
+    if (names < m) {
+      val r = reduce(sa, n, m, sa.length)
+      sort(sa, r, m, names)
+      // the LMS positions in text order replace the reduced text
+      i = n - 2
+      var j = r + m - 1
+      s = 0
+      c1 = t(n - 1) & 0xff
+      while (i >= 0) {
+        val c0 = t(i) & 0xff
+        if (c0 < c1 + s) s = 1
+        else if (s != 0) { sa(j) = i + 1; j -= 1; s = 0 }
+        c1 = c0
+        i -= 1
+      }
+      i = 0
+      while (i < m) { sa(i) = sa(r + sa(i)); i += 1 }
+    }
 
     // induce every suffix from the sorted LMS suffixes
-    java.util.Arrays.fill(sa, n1, n, -1)
-    ends(bk, bko, k)
-    i = n1 - 1
+    counts(t, n, bk)
+    ends(bk, 0, k, k)
+    java.util.Arrays.fill(sa, m, n, 0)
+    i = m - 1
     while (i >= 0) {
-      val p = sa(i)
-      sa(i) = -1
-      val c = bo + (s(so + p) & Sym)
+      val j = sa(i)
+      sa(i) = 0
+      val c = k + (t(j) & 0xff)
       bk(c) -= 1
-      sa(bk(c)) = p
+      sa(bk(c)) = j
       i -= 1
     }
-    induce(s, so, sa, n, k, bk, bko)
+    induce(t, n, sa, bk)
   }
 
-  /** Bucket ends into `bk(bko + k until bko + 2k)` from the counts before them. */
-  private def ends(bk: Array[Int], bko: Int, k: Int): Unit = {
-    var sum = 0
-    var c = 0
-    while (c < k) { sum += bk(bko + c); bk(bko + k + c) = sum; c += 1 }
+  /** Suffix array of the `n` ints `sa(t until t + n)` (`n` ≥ 1), each in
+    * `[0, k)`, into `sa(0 until n)`; `sa(n until t)` is scratch. */
+  def sort(sa: Array[Int], t: Int, n: Int, k: Int): Unit = {
+    // counters and bucket pointers in the free space when they fit
+    val (bk, co, bo) = if (t - n >= 2 * k) (sa, n, n + k) else (new Array[Int](2 * k), 0, k)
+    counts(sa, t, n, bk, co, k)
+    ends(bk, co, bo, k)
+    java.util.Arrays.fill(sa, 0, n, 0)
+    var i = n - 2
+    var s = 0
+    var c1 = sa(t + n - 1)
+    while (i >= 0) {
+      val c0 = sa(t + i)
+      if (c0 < c1 + s) s = 1
+      else if (s != 0) { bk(bo + c1) -= 1; sa(bk(bo + c1)) = i + 1; s = 0 }
+      c1 = c0
+      i -= 1
+    }
+    induce(sa, t, n, bk, co, bo, k)
+
+    var m = 0
+    i = 0
+    while (i < n) {
+      val p = sa(i)
+      if (p > 0) {
+        val c0 = sa(t + p)
+        if (sa(t + p - 1) > c0) {
+          var j = p + 1
+          while (j < n && sa(t + j) == c0) j += 1
+          if (j < n && sa(t + j) > c0) { sa(m) = p; m += 1 }
+        }
+      }
+      i += 1
+    }
+    java.util.Arrays.fill(sa, m, m + (n >> 1), 0)
+    i = n - 2
+    s = 0
+    c1 = sa(t + n - 1)
+    var next = n - 1
+    while (i >= 0) {
+      val c0 = sa(t + i)
+      if (c0 < c1 + s) s = 1
+      else if (s != 0) { sa(m + ((i + 1) >> 1)) = next - i; next = i + 1; s = 0 }
+      c1 = c0
+      i -= 1
+    }
+    val names = {
+      var name = 0
+      var q = n
+      var qlen = 0
+      i = 0
+      while (i < m) {
+        val p = sa(i)
+        val plen = sa(m + (p >> 1))
+        var diff = true
+        if (plen == qlen) {
+          var j = 0
+          while (j < plen && sa(t + p + j) == sa(t + q + j)) j += 1
+          if (j == plen) diff = false
+        }
+        if (diff) { name += 1; q = p; qlen = plen }
+        sa(m + (p >> 1)) = name
+        i += 1
+      }
+      name
+    }
+    if (names < m) {
+      val r = reduce(sa, n, m, t)
+      sort(sa, r, m, names)
+      i = n - 2
+      var j = r + m - 1
+      s = 0
+      c1 = sa(t + n - 1)
+      while (i >= 0) {
+        val c0 = sa(t + i)
+        if (c0 < c1 + s) s = 1
+        else if (s != 0) { sa(j) = i + 1; j -= 1; s = 0 }
+        c1 = c0
+        i -= 1
+      }
+      i = 0
+      while (i < m) { sa(i) = sa(r + sa(i)); i += 1 }
+    }
+
+    counts(sa, t, n, bk, co, k)
+    ends(bk, co, bo, k)
+    java.util.Arrays.fill(sa, m, n, 0)
+    i = m - 1
+    while (i >= 0) {
+      val j = sa(i)
+      sa(i) = 0
+      val c = bo + sa(t + j)
+      bk(c) -= 1
+      sa(bk(c)) = j
+      i -= 1
+    }
+    induce(sa, t, n, bk, co, bo, k)
   }
 
-  private def starts(bk: Array[Int], bko: Int, k: Int): Unit = {
+  /** The names at `sa(m until m + n/2)`, less one, in text order into
+    * `sa(end - m until end)`; returns that offset. */
+  private def reduce(sa: Array[Int], n: Int, m: Int, end: Int): Int = {
+    val r = end - m
+    var j = r + m - 1
+    var i = m + (n >> 1) - 1
+    while (i >= m) { if (sa(i) != 0) { sa(j) = sa(i) - 1; j -= 1 }; i -= 1 }
+    r
+  }
+
+  private def counts(t: Array[Byte], n: Int, bk: Array[Int]): Unit = {
+    java.util.Arrays.fill(bk, 0, 256, 0)
+    var i = 0
+    while (i < n) { bk(t(i) & 0xff) += 1; i += 1 }
+  }
+
+  private def counts(sa: Array[Int], t: Int, n: Int, bk: Array[Int], co: Int, k: Int): Unit = {
+    java.util.Arrays.fill(bk, co, co + k, 0)
+    var i = 0
+    while (i < n) { bk(co + sa(t + i)) += 1; i += 1 }
+  }
+
+  /** Bucket ends into `bk(bo until bo + k)` from the counts at `bk(co until co + k)`. */
+  private def ends(bk: Array[Int], co: Int, bo: Int, k: Int): Unit = {
     var sum = 0
     var c = 0
-    while (c < k) { bk(bko + k + c) = sum; sum += bk(bko + c); c += 1 }
+    while (c < k) { sum += bk(co + c); bk(bo + c) = sum; c += 1 }
+  }
+
+  private def starts(bk: Array[Int], co: Int, bo: Int, k: Int): Unit = {
+    var sum = 0
+    var c = 0
+    while (c < k) { bk(bo + c) = sum; sum += bk(co + c); c += 1 }
   }
 
   /** L-type suffixes left to right from bucket starts (the sentinel
-    * first induces `n - 1`), then S-type right to left from bucket ends. */
-  private def induce(s: Array[Int], so: Int, sa: Array[Int], n: Int, k: Int, bk: Array[Int], bko: Int): Unit = {
-    val bo = bko + k
-    starts(bk, bko, k)
-    var c = bo + s(so + n - 1)
-    sa(bk(c)) = n - 1
-    bk(c) += 1
+    * first induces `n - 1`), then S-type right to left from bucket ends.
+    * A placed L suffix `j`'s predecessor is L iff its symbol is not
+    * smaller; a placed S suffix's is S iff its symbol is not larger. */
+  private def induce(t: Array[Byte], n: Int, sa: Array[Int], bk: Array[Int]): Unit = {
+    val k = 256
+    starts(bk, 0, k, k)
+    var j = n - 1
+    var c1 = t(j) & 0xff
+    var b = bk(k + c1)
+    sa(b) = if (j > 0 && (t(j - 1) & 0xff) < c1) ~j else j
+    b += 1
     var i = 0
     while (i < n) {
-      val j = sa(i) - 1
-      if (j >= 0) {
-        val v = s(so + j)
-        if (v >= 0) { c = bo + v; sa(bk(c)) = j; bk(c) += 1 }
+      j = sa(i)
+      sa(i) = ~j
+      if (j > 0) {
+        j -= 1
+        val c0 = t(j) & 0xff
+        if (c0 != c1) { bk(k + c1) = b; c1 = c0; b = bk(k + c1) }
+        sa(b) = if (j > 0 && (t(j - 1) & 0xff) < c1) ~j else j
+        b += 1
       }
       i += 1
     }
-    ends(bk, bko, k)
+    ends(bk, 0, k, k)
+    c1 = 0
+    b = bk(k)
     i = n - 1
     while (i >= 0) {
-      val j = sa(i) - 1
-      if (j >= 0) {
-        val v = s(so + j)
-        if (v < 0) { c = bo + (v & Sym); bk(c) -= 1; sa(bk(c)) = j }
+      j = sa(i)
+      if (j > 0) {
+        j -= 1
+        val c0 = t(j) & 0xff
+        if (c0 != c1) { bk(k + c1) = b; c1 = c0; b = bk(k + c1) }
+        b -= 1
+        sa(b) = if (j == 0 || (t(j - 1) & 0xff) > c1) ~j else j
+      } else sa(i) = ~j
+      i -= 1
+    }
+  }
+
+  private def induce(sa: Array[Int], t: Int, n: Int, bk: Array[Int], co: Int, bo: Int, k: Int): Unit = {
+    starts(bk, co, bo, k)
+    var j = n - 1
+    var c1 = sa(t + j)
+    var b = bk(bo + c1)
+    sa(b) = if (j > 0 && sa(t + j - 1) < c1) ~j else j
+    b += 1
+    var i = 0
+    while (i < n) {
+      j = sa(i)
+      sa(i) = ~j
+      if (j > 0) {
+        j -= 1
+        val c0 = sa(t + j)
+        if (c0 != c1) { bk(bo + c1) = b; c1 = c0; b = bk(bo + c1) }
+        sa(b) = if (j > 0 && sa(t + j - 1) < c1) ~j else j
+        b += 1
       }
+      i += 1
+    }
+    ends(bk, co, bo, k)
+    c1 = 0
+    b = bk(bo)
+    i = n - 1
+    while (i >= 0) {
+      j = sa(i)
+      if (j > 0) {
+        j -= 1
+        val c0 = sa(t + j)
+        if (c0 != c1) { bk(bo + c1) = b; c1 = c0; b = bk(bo + c1) }
+        b -= 1
+        sa(b) = if (j == 0 || sa(t + j - 1) > c1) ~j else j
+      } else sa(i) = ~j
       i -= 1
     }
   }

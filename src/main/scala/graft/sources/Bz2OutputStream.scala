@@ -29,6 +29,9 @@ final class Bz2OutputStream(out: OutputStream, level: Int) extends OutputStream 
   var bytesIn: Long = 0L
   /** Blocks spliced onto `out`. */
   var blocksOut: Long = 0L
+  /** Nanoseconds spent encoding those blocks, on whichever threads ran
+    * them. */
+  var encodeNanos: Long = 0L
   /** Compressed bytes spliced onto `out` (its offset from the start of
     * this writer's output). */
   def bytesOut: Long = sink.count
@@ -177,6 +180,7 @@ final class Bz2OutputStream(out: OutputStream, level: Int) extends OutputStream 
       if (spareBits.size * cap < LookaheadBytes) spareBits.addLast(t.bits)
       streamCrc = Bz2BlockDecoder.combineCrc(streamCrc, t.crc)
       blocksOut += 1
+      encodeNanos += t.nanos
     case End =>
       sink.put(24, (Bz2BlockDecoder.EosMagic >>> 24).toInt)
       sink.put(24, Bz2BlockDecoder.EosMagic.toInt)
@@ -200,12 +204,15 @@ object Bz2OutputStream {
     var bits: Array[Byte] = _
     var nBits = 0L
     var crc = 0
+    var nanos = 0L
 
     protected def compute(): Unit = {
+      val t0 = System.nanoTime()
       val e = Bz2BlockEncoder.forThread
       bits = e.encode(data, len, dst)
       nBits = e.nBits
       crc = e.blockCrc
+      nanos = System.nanoTime() - t0
     }
   }
 

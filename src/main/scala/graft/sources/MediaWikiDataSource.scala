@@ -763,6 +763,7 @@ object TaskMetric {
 class XmlBytesWrittenMetric extends SumMetric("xmlBytesWritten", "XML bytes written")
 class Bz2BytesWrittenMetric extends SumMetric("bz2BytesWritten", "bz2 bytes written")
 class Bz2BlocksWrittenMetric extends SumMetric("bz2BlocksWritten", "bz2 blocks written")
+class Bz2EncodeTimeMetric extends SumMetric("bz2EncodeTime", "bz2 block encode time (ms)")
 
 class MediaWikiReaderFactory(schema: StructType, props: Map[String, String],
     hadoopConf: Map[String, String]) extends PartitionReaderFactory {

@@ -163,7 +163,8 @@ class MediaWikiWrite(schema: StructType, props: Map[String, String])
   /** Per task, for the dump file: uncompressed XML bytes, compressed
     * bytes and bz2 blocks. */
   override def supportedCustomMetrics(): Array[org.apache.spark.sql.connector.metric.CustomMetric] =
-    Array(new XmlBytesWrittenMetric, new Bz2BytesWrittenMetric, new Bz2BlocksWrittenMetric)
+    Array(new XmlBytesWrittenMetric, new Bz2BytesWrittenMetric, new Bz2BlocksWrittenMetric,
+      new Bz2EncodeTimeMetric)
 
   override def toBatch: BatchWrite = new MediaWikiBatchWrite(schema, props)
 
@@ -715,9 +716,10 @@ class MediaWikiDataWriter(schema: StructType, opts: MediaWikiWriterOpts,
   }
 
   override def currentMetricsValues(): Array[org.apache.spark.sql.connector.metric.CustomTaskMetric] = {
-    val (xml, bz2, blocks) = if (z == null) (0L, 0L, 0L) else (z.bytesIn, z.bytesOut, z.blocksOut)
+    val (xml, bz2, blocks, nanos) =
+      if (z == null) (0L, 0L, 0L, 0L) else (z.bytesIn, z.bytesOut, z.blocksOut, z.encodeNanos)
     Array(TaskMetric("xmlBytesWritten", xml), TaskMetric("bz2BytesWritten", bz2),
-      TaskMetric("bz2BlocksWritten", blocks))
+      TaskMetric("bz2BlocksWritten", blocks), TaskMetric("bz2EncodeTime", nanos / 1000000))
   }
 
   override def abort(): Unit = {

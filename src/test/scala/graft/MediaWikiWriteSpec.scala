@@ -430,6 +430,7 @@ class MediaWikiWriteSpec extends AnyFunSuite {
     val blocks = dumps.map(b => graft.sources.Bz2Fixtures.magics(b).size.toLong).sum
     assert(blocks > dumps.size * 3L, s"$blocks blocks")
     assert(metric("bz2BlocksWritten") == blocks)
+    assert(metric("bz2EncodeTime") > 0, "bz2EncodeTime")
   }
 
   test("the same frame writes byte-identical archives; every index offset is its page's stream") {

@@ -139,12 +139,40 @@ class Bz2BlockEncoderSpec extends AnyFunSuite {
     roundTrip("runs", runs.toByteArray)
   }
 
+  private def all256 = Array.tabulate[Byte](256 * 3)(i => (i * 7).toByte)
+
+  /** ~4 MB: revisions, a repeated line and random bytes. */
+  private def multiMB = revisions(12, 1).mkString("\n").getBytes("UTF-8") ++
+    Array.tabulate[Byte](3 << 20)(i => "the quick brown fox jumps over the lazy dog\n".charAt(i % 44).toByte) ++
+    random(500000, 8)
+
+  private def nearIdentical = revisions(60, 2).mkString("\n").getBytes("UTF-8")
+
   test("all 256 byte values, random bytes and a multi-MB text") {
-    roundTrip("all256", Array.tabulate[Byte](256 * 3)(i => (i * 7).toByte))
+    roundTrip("all256", all256)
     roundTrip("random", random(300000, 7))
-    val text = revisions(12, 1).mkString("\n").getBytes("UTF-8") ++
-      Array.tabulate[Byte](3 << 20)(i => "the quick brown fox jumps over the lazy dog\n".charAt(i % 44).toByte)
-    roundTrip("multiMB", text ++ random(500000, 8))
+    roundTrip("multiMB", multiMB)
+  }
+
+  test("golden bits: archives are byte-identical to recorded SHA-256s") {
+    val golden = Map(
+      "multiMB@1" -> "d9f657b959890e65dec6f4b509e24db0810f322167b1d54e6fa3614cef8ea073",
+      "multiMB@9" -> "03de9312b787b7b6c09c6e45034270ec549eede903cf42dce7c2cbaf542579ce",
+      "revisions@1" -> "6d47ae627394a0780532ccd582eb9c8de8912e0e4eafc014f002409bc88247c8",
+      "revisions@9" -> "9adda9a888df4d7aa8b0b7d15f7e7d4b3700f7735195bd8fed130f3cdcab65d8",
+      "all256@1" -> "7f284255413c4b6a5749caaaf8c7fff9abf5c41a60ff8aa6518af08256230615",
+      "all256@9" -> "e0bf9e06cc59b3ef5a023cfd50b14be3ab8a4a46df77d8b528a75367e0f0b06c",
+      "random1MB@1" -> "4d93056dcef88867847e57fd4c5aecf30ebadaad39f0ca697cbbc7dc4e753d00",
+      "random1MB@9" -> "c36687b4424e9c4d3af00d46a25380f91f5971f757b6efea8a66191fa86f7481")
+    def sha(b: Array[Byte]): String =
+      java.security.MessageDigest.getInstance("SHA-256").digest(b).map(x => f"$x%02x").mkString
+    val got = for {
+      (name, data) <- Seq("multiMB" -> multiMB, "revisions" -> nearIdentical, "all256" -> all256,
+        "random1MB" -> random(1 << 20, 9))
+      level <- Seq(1, 9)
+    } yield s"$name@$level" -> sha(encode(data, level))
+    val differ = got.filterNot { case (k, h) => golden.get(k).contains(h) }
+    assert(differ.isEmpty, differ.map { case (k, h) => s"$k now hashes to $h" }.mkString("; "))
   }
 
   test("periodic blocks and near-identical 20 KB revisions") {
@@ -152,7 +180,7 @@ class Bz2BlockEncoderSpec extends AnyFunSuite {
     roundTrip("abc", Array.tabulate[Byte](1000000)(i => "abcabd".charAt(i % 6).toByte))
     roundTrip("aaaa", Array.fill[Byte](3000000)('a'.toByte))
     roundTrip("a+b", Array.fill[Byte](1000)('a'.toByte) :+ 'b'.toByte)
-    roundTrip("revisions", revisions(60, 2).mkString("\n").getBytes("UTF-8"))
+    roundTrip("revisions", nearIdentical)
   }
 
   test("output depends only on the bytes and stream cuts, not on write slicing") {
