@@ -180,33 +180,32 @@ object Probe {
     import spark.implicits._
     val mBase = args.headOption.fold(200000L)(_.toLong)
     val d = args.lift(1).fold(32)(_.toInt)
-    // driverLimit = 0 everywhere (driverPeelLimit for kcore): the probe
-    // times the DISTRIBUTED rounds at both scales. The driver finish
-    // would take the base scale (~800k edges, under its 4M cap) but not
-    // the 10× one, so each exponent would compare two algorithms.
+    // forceDistributed everywhere: the probe times the DISTRIBUTED
+    // rounds at both scales. The driver finish would take the base
+    // scale (~800k edges, within its budget) but not the 10× one, so
+    // each exponent would compare two algorithms.
     val ops: Seq[(String, DataFrame => Long)] = only(Seq(
-      "triangles" -> { e => Triangles.perNode(e, driverLimit = 0L).count() },
+      "triangles" -> { e => Triangles.perNode(e).count() },
       // allowPartial: the harmonic construction peels one layer per
       // round by design and hits maxRounds at every scale; the probe
       // measures the capped peel
-      "kcore_k8" -> { e =>
-        KCore.core(e, k = 8, allowPartial = true, driverPeelLimit = 0L).count() },
-      "hits_i2" -> { e => Hits.hubsAuthsInt(e, iters = 2, driverLimit = 0L).count() },
-      "pagerank_i2" -> { e => PageRank.ranksInt(e, iters = 2, driverLimit = 0L).count() },
+      "kcore_k8" -> { e => KCore.core(e, k = 8, allowPartial = true).count() },
+      "hits_i2" -> { e => Hits.hubsAuthsInt(e, iters = 2).count() },
+      "pagerank_i2" -> { e => PageRank.ranksInt(e, iters = 2).count() },
       "lpa_r4" -> { e =>
         LabelProp.communities(e.select($"src".as("node")).distinct(),
-          e.select($"src".as("a"), $"dst".as("b")), rounds = 4, driverLimit = 0L).count() },
+          e.select($"src".as("a"), $"dst".as("b")), rounds = 4).count() },
       "cc" -> { e =>
         ConnectedComponents.labels(e.select($"src".as("doc_id")).distinct(),
-          e.select($"src".as("doc_a"), $"dst".as("doc_b")), driverLimit = 0L).count() }),
+          e.select($"src".as("doc_a"), $"dst".as("doc_b"))).count() }),
       args.lift(2))
-    scaling10x("graphscale", "m", 12, mBase, ops,
+    DriverFinish.forceDistributed(scaling10x("graphscale", "m", 12, mBase, ops,
         (e1, e10) => f"nodes 10.0x edges ${e10.toDouble / e1}%.1fx") { m =>
       val e = graphEdges(spark, m, d).persist()
       val ne = e.count()
       println(f"[graphscale] m=$m%d edges=$ne%d")
       (e, ne, () => e.unpersist())
-    }
+    })
   }
 
   /** One scale of `vector`: the corpus, a 256-query batch and an index

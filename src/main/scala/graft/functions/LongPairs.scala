@@ -46,7 +46,14 @@ case class LongPairs(child: Expression)
   override protected def nullSafeEval(input: Any): Any = {
     val arr = input.asInstanceOf[ArrayData]
     val n = arr.numElements()
-    val out = new scala.collection.mutable.ArrayBuffer[Any](n * (n - 1) / 2)
+    // one row's pairs materialize at once, so they get the same bound
+    // as a driver finish: 16 B per pair (two longs) within the budget
+    val pairs = n.toLong * (n - 1) / 2
+    if (pairs * 16 > graft.operators.DriverFinish.BudgetBytes)
+      throw new IllegalArgumentException(
+        s"long_pairs: a basket of $n elements has $pairs pairs, over the " +
+        s"${graft.operators.DriverFinish.BudgetBytes} B budget at 16 B per pair")
+    val out = new scala.collection.mutable.ArrayBuffer[Any](pairs.toInt)
     var i = 0
     while (i < n) {
       val x = arr.getLong(i)

@@ -35,50 +35,26 @@ import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType
   */
 object BpeTrain {
 
-  /** Bounded driver-finish cap: total corpus characters collectible
-    * for the in-memory round loop (~4-6× expansion as String/array
-    * objects → ≤ ~200 MB at the cap). A sub-cap corpus pays one
-    * column-pruned `sum(length)` scan (cheaper than a single census
-    * round, which scans the same bytes AND shuffles the pairs) and
-    * then runs all rounds as driver hash-census + greedy rewrite —
-    * the census/argmax/rewrite arithmetic is exact string equality
-    * and integer counts, so the result is bit-identical to the
-    * distributed rounds (tie-break mirrors Spark's UTF8String binary
-    * order; pinned by TrainingOpsSpec's cross-check). Over-cap
-    * corpora take the distributed census rounds, unchanged — at
-    * 100 TB the census IS the right formulation. */
-  private[graft] val DriverFinishMaxChars = 32L * 1024 * 1024
-
-  /** One-sided pre-gate on the exact `sum(length)` probe (r16 verdict
-    * #2: over-cap corpora paid one full column-pruned scan that bought
-    * nothing — at 100 TB that is a wasted pass). The optimizer's
-    * size-in-bytes ESTIMATE costs no job; it is only trusted in the
-    * direction that cannot lose the driver finish: an estimate within
-    * `ProbeEstimateFactor`× of the char cap still runs the exact probe
-    * (a small corpus whose stats overestimate just probes, as before),
-    * while a corpus estimated far above it skips straight to the
-    * distributed census — file-size-derived estimates cannot sit 64×
-    * BELOW the real char count, so no driver-eligible corpus is ever
-    * misrouted (the census path is correct for any size regardless). */
-  private[graft] val ProbeEstimateFactor = 64L
-  private[graft] def worthProbing(estBytes: BigInt, cap: Long): Boolean =
-    estBytes <= BigInt(cap) * ProbeEstimateFactor
-
   /** Learned merge table: `(rank, left, right, cnt)` — merge #rank
     * fused adjacent (left, right) occurring cnt times at selection
     * time. Stops early when no pair occurs at least `minCount`
-    * times. */
+    * times.
+    *
+    * Driver-finish (r16): a corpus within [[DriverFinish]]'s budget
+    * pays one column-pruned `sum(octet_length)` scan (cheaper than a
+    * single census round, which scans the same bytes AND shuffles the
+    * pairs) and then runs all rounds as driver hash-census + greedy
+    * rewrite — exact string equality and integer counts, so the result
+    * is bit-identical to the distributed rounds (tie-break mirrors
+    * Spark's UTF8String binary order; pinned by BpeTrainSpec). At
+    * 100 TB the census IS the right formulation. */
   def learn(docs: DataFrame, textCol: String, nMerges: Int,
-            minCount: Long = 2L, checkpointEvery: Int = 4,
-            driverCharLimit: Long = DriverFinishMaxChars): DataFrame = {
-    if (driverCharLimit > 0 && worthProbing(
-        docs.select(col(textCol)).queryExecution.optimizedPlan.stats.sizeInBytes,
-        driverCharLimit)) {
-      val chars = docs.select(sum(length(col(textCol)))).collect()(0)
-      if (!chars.isNullAt(0) && chars.getLong(0) <= driverCharLimit)
-        return learnDriver(docs, textCol, nMerges, minCount)
-    }
-    learnDistributed(docs, textCol, nMerges, minCount, checkpointEvery)
+            minCount: Long = 2L, checkpointEvery: Int = 4): DataFrame = {
+    // 2 B per text byte: the collected token arrays and one round's
+    // rewritten copy of them
+    if (DriverFinish.fitsEstimated("bpe_train", docs, textCol, 2L))
+      learnDriver(docs, textCol, nMerges, minCount)
+    else learnDistributed(docs, textCol, nMerges, minCount, checkpointEvery)
   }
 
   private def learnDistributed(docs: DataFrame, textCol: String, nMerges: Int,

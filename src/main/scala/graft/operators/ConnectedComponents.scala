@@ -49,8 +49,7 @@ object ConnectedComponents {
   def labels(vertices: DataFrame, edges: DataFrame,
              idCol: String = "doc_id",
              srcCol: String = "doc_a", dstCol: String = "doc_b",
-             maxRounds: Int = 16,
-             driverLimit: Long = DriverGraph.DefaultEdgeLimit): DataFrame = {
+             maxRounds: Int = 16): DataFrame = {
     // symmetrize with one explode, not a self-union: a union would
     // execute the upstream pair pipeline twice before the persist
     // materializes (measured 2x the near-dup generation cost on q41)
@@ -60,10 +59,9 @@ object ConnectedComponents {
       .select(col("e.src").as("src"), col("e.dst").as("dst"))
       .persist()
     // driver-finish (r16): components are determined by the edge set
-    // alone — when the symmetric arc set fits the bounded collect (the
-    // count doubles as the persist materializer round 1 would pay),
-    // one union-find pass labels every ENDPOINT with its component
-    // minimum (root = smallest dense index = smallest id, exactly the
+    // alone — when the symmetric arc set fits the budget (16 B per
+    // arc: two long ids), one union-find pass labels every ENDPOINT
+    // with its component minimum (root = smallest dense index = smallest id, exactly the
     // min-label fixpoint) and the labels ride a broadcast left-join
     // onto the still-distributed vertex set (vertices keep their own
     // id when absent from edges, as before). Restricted to a uniform
@@ -71,9 +69,9 @@ object ConnectedComponents {
     // distributed output schema; pinned ≡ distributed by
     // GraphDriverFinishSpec.
     val vT = vertices.schema(idCol).dataType
-    if (DriverGraph.integral(vT) &&
+    if (DriverFinish.integral(vT) &&
         sym.schema("src").dataType == vT && sym.schema("dst").dataType == vT &&
-        sym.count() <= 2L * driverLimit) {
+        DriverFinish.fitsCount("connected_components", sym, 16L)) {
       try return driverLabels(vertices, sym, idCol)
       finally sym.unpersist(false)
     }
@@ -135,8 +133,8 @@ object ConnectedComponents {
     import org.apache.spark.sql.types._
     val s = sym.sparkSession
     val vT = vertices.schema(idCol).dataType
-    val (ea, eb) = DriverGraph.collectPairs(sym, "src", "dst")
-    val ids = DriverGraph.denseIndex(ea, eb)
+    val (ea, eb) = DriverFinish.collectPairs(sym, "src", "dst")
+    val ids = DriverFinish.denseIndex(ea, eb)
     val n = ids.length
     val parent = Array.tabulate(n)(identity)
     def find(x0: Int): Int = {
@@ -149,8 +147,8 @@ object ConnectedComponents {
     }
     var i = 0
     while (i < ea.length) {
-      val ra = find(DriverGraph.idx(ids, ea(i)))
-      val rb = find(DriverGraph.idx(ids, eb(i)))
+      val ra = find(DriverFinish.idx(ids, ea(i)))
+      val rb = find(DriverFinish.idx(ids, eb(i)))
       if (ra < rb) parent(rb) = ra
       else if (rb < ra) parent(ra) = rb
       i += 1

@@ -39,20 +39,18 @@ object Hits {
     * collapsed. Materializes eagerly (the returned frame is
     * lineage-cut). */
   def hubsAuthsInt(edges: DataFrame, iters: Int,
-                   scale: Long = 1000000L,
-                   driverLimit: Long = DriverGraph.DefaultEdgeLimit): DataFrame = {
+                   scale: Long = 1000000L): DataFrame = {
     require(iters >= 1, s"iters must be >= 1: $iters")
     val spark = edges.sparkSession
     val e = edges.select(col("src"), col("dst")).distinct().persist()
-    // driver-finish (r16): sub-cap deduped edge sets iterate as a
-    // primitive-array loop on the driver — the arithmetic is exact
-    // integer sums + floor divisions, so the result is bit-identical
-    // to the distributed half-steps (GraphDriverFinishSpec); the count
-    // doubles as the persist materializer the first half-step would
-    // pay anyway, and over-cap graphs never collect.
-    if (DriverGraph.integral(e.schema("src").dataType) &&
-        DriverGraph.integral(e.schema("dst").dataType) &&
-        e.count() <= driverLimit) {
+    // driver-finish (r16): deduped edge sets within the budget (16 B
+    // per edge: two long ids) iterate as a primitive-array loop on the
+    // driver — the arithmetic is exact integer sums + floor divisions,
+    // so the result is bit-identical to the distributed half-steps
+    // (GraphDriverFinishSpec)
+    if (DriverFinish.integral(e.schema("src").dataType) &&
+        DriverFinish.integral(e.schema("dst").dataType) &&
+        DriverFinish.fitsCount("hits", e, 16L)) {
       try return driverHits(e, iters, scale)
       finally e.unpersist()
     }
@@ -68,7 +66,9 @@ object Hits {
         .agg(sum(col(scoreCol)).as("raw"))
         .persist()
       try {
-        val mx = raw.agg(max(col("raw"))).collect()(0).getLong(0)
+        // an empty edge set has no nodes to rescale: any divisor serves
+        val top = raw.agg(max(col("raw"))).head()
+        val mx = if (top.isNullAt(0)) 1L else top.getLong(0)
         nodes.join(raw, Seq("node"), "left")
           .select(col("node"),
             expr(s"(coalesce(raw, cast(0 as bigint)) * $scale) div $mx")
@@ -109,15 +109,15 @@ object Hits {
     val s = e.sparkSession
     val nodeType = e.select(col("src").as("node"))
       .union(e.select(col("dst").as("node"))).schema("node").dataType
-    val (ea, eb) = DriverGraph.collectPairs(e, "src", "dst")
-    val ids = DriverGraph.denseIndex(ea, eb)
+    val (ea, eb) = DriverFinish.collectPairs(e, "src", "dst")
+    val ids = DriverFinish.denseIndex(ea, eb)
     val n = ids.length
     val m = ea.length
     val es = new Array[Int](m)
     val ed = new Array[Int](m)
     var i = 0
     while (i < m) {
-      es(i) = DriverGraph.idx(ids, ea(i)); ed(i) = DriverGraph.idx(ids, eb(i))
+      es(i) = DriverFinish.idx(ids, ea(i)); ed(i) = DriverFinish.idx(ids, eb(i))
       i += 1
     }
     def half(in: Array[Int], out: Array[Int], scores: Array[Long]): Array[Long] = {

@@ -45,23 +45,6 @@ object KCore {
     * 13s → 3s at sf0.1.) */
   val BroadcastEdgeLimit = 2000000L
 
-  /** Below this many surviving CANONICAL edges the peel finishes on
-    * the driver: one bounded collect (two longs per edge, ≤ ~64 MB of
-    * primitive arrays at the cap) and one O(V+E) bucket peel replace
-    * the remaining rounds — each of which is a full Spark job (degree
-    * shuffle + two joins + lineage cut + count) whose cost at this
-    * size is pure scheduling overhead, multiplied by the cascade
-    * depth (a graph property, unbounded by the plan — `Probe graph`'s
-    * harmonic graph peels ONE layer per round). The k-core is the
-    * unique maximal subgraph with min degree ≥ k, so peel order
-    * cannot change the result: driver and distributed paths are
-    * pinned equal by KCoreSpec. Same bounded-collect class as
-    * [[DriverSweep]]'s dense-regime dispatch (10M-row cap) — the
-    * collect size is known BEFORE collecting (the convergence count
-    * we need anyway), and at 100 TB the early rounds stay distributed
-    * until the frontier shrinks under the cap. */
-  val DriverPeelEdgeLimit = 4000000L
-
   /** Nodes of the k-core of the undirected simple graph induced by
     * `edges` (any direction, loops/dups ignored), with their degree
     * inside the core: `(node, deg)`, deg >= k.
@@ -78,8 +61,7 @@ object KCore {
     * `allowPartial = true` and get the superset plus a stderr warning.
     */
   def core(edges: DataFrame, k: Int, maxRounds: Int = 100,
-           checkpointEvery: Int = 1, allowPartial: Boolean = false,
-           driverPeelLimit: Long = DriverPeelEdgeLimit): DataFrame = {
+           checkpointEvery: Int = 1, allowPartial: Boolean = false): DataFrame = {
     val s = edges.sparkSession
     import s.implicits._
     def degrees(e: DataFrame): DataFrame =
@@ -90,19 +72,25 @@ object KCore {
         least($"src", $"dst").as("a"), greatest($"src", $"dst").as("b"))
       .filter($"a" =!= $"b").distinct()
       .persist()
-    val tInit = System.nanoTime()
     var curCount = cur.count()
-    if (sys.env.contains("KCORE_TRACE"))
-      println(f"[kcore] init count=$curCount ${(System.nanoTime() - tInit) / 1e9}%.2fs")
     // driver-finish dispatch: whenever the SURVIVING canonical edge set
-    // fits the bounded collect, the remaining peel is exact on the
-    // driver regardless of cascade depth — maxRounds/allowPartial only
-    // govern the distributed rounds (the driver pass always reaches the
+    // fits DriverFinish's budget (16 B per edge: two long ids), one
+    // O(V+E) peel on the driver replaces the remaining rounds — each a
+    // full Spark job whose cost at that size is pure scheduling
+    // overhead, multiplied by the cascade depth (a graph property,
+    // unbounded by the plan: `Probe graph`'s harmonic graph peels ONE
+    // layer per round). The k-core is the unique maximal subgraph with
+    // min degree ≥ k, so peel order cannot change the result (KCoreSpec
+    // pins driver ≡ distributed). maxRounds/allowPartial only govern
+    // the distributed rounds (the driver pass always reaches the
     // fixpoint, so it can never return the silent superset they guard
-    // against). Node types outside the integral family fall through to
-    // the distributed loop.
+    // against). The count is the convergence test the rounds need
+    // anyway, so a frontier that shrinks into the budget mid-cascade
+    // hands off at no extra cost. Node types outside the integral
+    // family fall through to the distributed loop.
+    val integral = DriverFinish.integral(cur.schema("a").dataType)
     def driverEligible: Boolean =
-      curCount <= driverPeelLimit && integralNodeType(cur)
+      integral && DriverFinish.fits("kcore", s, curCount * 16L)
     var prev: DataFrame = null
     var round = 0
     var converged = curCount == 0L
@@ -119,17 +107,14 @@ object KCore {
         val next =
           if (round % checkpointEvery == 0) stepped.localCheckpoint(false)
           else stepped.persist()
-        val t0 = System.nanoTime()
         val nextCount = next.count()          // action: materializes + converges
-        if (sys.env.contains("KCORE_TRACE"))
-          println(f"[kcore] round $round count=$nextCount ${(System.nanoTime() - t0) / 1e9}%.2fs")
         if (prev != null) prev.unpersist(false)
         prev = cur
         cur = next
         converged = nextCount == curCount
         curCount = nextCount
         // the frontier only ever shrinks — finish the tail of a deep
-        // cascade on the driver the moment it fits the bound
+        // cascade on the driver the moment it fits the budget
         if (!converged && driverEligible) return driverPeel(s, cur, k)
       }
       // a maxRounds exit before the fixpoint returns a SUPERSET of the
@@ -143,31 +128,16 @@ object KCore {
           msg + "; raise maxRounds or pass allowPartial = true")
         System.err.println(s"WARNING: $msg")
       }
-      val tFin = System.nanoTime()
-      val out = degrees(cur).filter($"deg" >= k)
+      degrees(cur).filter($"deg" >= k)
         .select($"node", $"deg".cast("long").as("deg"))
         // the caller gets a small result (core nodes); cut lineage so
         // the returned frame doesn't pin the peel's cached rounds
         .localCheckpoint(true)
-      if (sys.env.contains("KCORE_TRACE"))
-        println(f"[kcore] final ${(System.nanoTime() - tFin) / 1e9}%.2fs rounds=$round")
-      out
     } finally {
       if (prev != null) prev.unpersist(false)
       cur.unpersist(false)
     }
   }
-
-  /** The driver path casts endpoints to long and back; anything outside
-    * the integral family stays distributed. */
-  private def integralNodeType(canonical: DataFrame): Boolean =
-    canonical.schema("a").dataType match {
-      case org.apache.spark.sql.types.LongType |
-           org.apache.spark.sql.types.IntegerType |
-           org.apache.spark.sql.types.ShortType |
-           org.apache.spark.sql.types.ByteType => true
-      case _ => false
-    }
 
   /** Exact in-memory peel of the (already canonical, deduped) edge set:
     * CSR adjacency over a sorted dense node index, then the standard
@@ -176,51 +146,27 @@ object KCore {
     * each removed neighbor decrements a survivor exactly once, so the
     * final counter is the degree inside the core — identical to the
     * distributed fixpoint's recomputed `deg >= k` output. Primitive
-    * arrays throughout (no boxing at the 4M-edge cap). */
+    * arrays throughout (no boxing at the budget's 4M edges). */
   private def driverPeel(s: SparkSession, canonical: DataFrame,
       k: Int): DataFrame = {
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.types._
-    val t0 = System.nanoTime()
     val nodeType = canonical.schema("a").dataType
-    val collected = canonical
-      .select(col("a").cast("long"), col("b").cast("long")).collect()
-    val m = collected.length
-    val ea = new Array[Long](m)
-    val eb = new Array[Long](m)
+    val (ea, eb) = DriverFinish.collectPairs(canonical, "a", "b")
+    val ids = DriverFinish.denseIndex(ea, eb)
+    val n = ids.length
+    val m = ea.length
+    // both arcs of every undirected edge
+    val src = new Array[Int](2 * m)
+    val dst = new Array[Int](2 * m)
     var i = 0
     while (i < m) {
-      val r = collected(i)
-      ea(i) = r.getLong(0); eb(i) = r.getLong(1)
+      val u = DriverFinish.idx(ids, ea(i)); val v = DriverFinish.idx(ids, eb(i))
+      src(i) = u; dst(i) = v; src(m + i) = v; dst(m + i) = u
       i += 1
     }
-    // dense index: sorted distinct endpoints + binary search
-    val all = new Array[Long](2 * m)
-    System.arraycopy(ea, 0, all, 0, m)
-    System.arraycopy(eb, 0, all, m, m)
-    java.util.Arrays.sort(all)
-    var n = 0
-    i = 0
-    while (i < all.length) {
-      if (n == 0 || all(n - 1) != all(i)) { all(n) = all(i); n += 1 }
-      i += 1
-    }
-    def idxOf(v: Long): Int = java.util.Arrays.binarySearch(all, 0, n, v)
-    val deg = new Array[Int](n)
-    i = 0
-    while (i < m) { deg(idxOf(ea(i))) += 1; deg(idxOf(eb(i))) += 1; i += 1 }
-    val off = new Array[Int](n + 1)
-    i = 0
-    while (i < n) { off(i + 1) = off(i) + deg(i); i += 1 }
-    val adj = new Array[Int](2 * m)
-    val fill = java.util.Arrays.copyOf(off, n)
-    i = 0
-    while (i < m) {
-      val u = idxOf(ea(i)); val v = idxOf(eb(i))
-      adj(fill(u)) = v; fill(u) += 1
-      adj(fill(v)) = u; fill(v) += 1
-      i += 1
-    }
+    val (off, adj) = DriverFinish.csr(n, src, dst)
+    val deg = Array.tabulate(n)(u => off(u + 1) - off(u))
     // cascade: pop a sub-k node, decrement its surviving neighbors,
     // enqueue any that drop below k — each node enqueued at most once
     val removed = new Array[Boolean](n)
@@ -248,12 +194,9 @@ object KCore {
     val outRows = new java.util.ArrayList[Row]()
     i = 0
     while (i < n) {
-      if (!removed(i)) outRows.add(Row(all(i), deg(i).toLong))
+      if (!removed(i)) outRows.add(Row(ids(i), deg(i).toLong))
       i += 1
     }
-    if (sys.env.contains("KCORE_TRACE"))
-      println(f"[kcore] driver peel edges=$m nodes=$n core=${outRows.size} " +
-        f"${(System.nanoTime() - t0) / 1e9}%.2fs")
     val schema = StructType(Seq(
       StructField("node", LongType, nullable = false),
       StructField("deg", LongType, nullable = false)))

@@ -111,23 +111,20 @@ object KMeans {
     * assignment of the same run, without re-composing `step`/`assign`
     * by hand).
     *
-    * r16 driver-finish: a corpus that fits the LIMIT-probed
-    * [[ProductQuantize.DriverVecLimit]] collect (long ids, distinct,
-    * uniform dims, no NULLs) runs the Lloyd rounds as in-memory loops —
-    * every mirrored operation is one of this operator's documented
+    * r16 driver-finish: a corpus that fits [[DriverFinish]]'s budget
+    * (long ids, distinct, uniform dims, no NULLs) runs the Lloyd rounds
+    * as in-memory loops — every mirrored operation is one of this operator's documented
     * bit-portable forms (strict ascending-index dot fold, min-struct
     * argmax under Spark's exact double order with lowest-cent_id ties,
     * quantized-integer mean with the exact division chain
     * `qsum.toDouble / cnt / 2²⁰`), pinned ≡ distributed by KMeansSpec.
-    * Anything else (over-cap, non-long ids, ragged dims) composes the
-    * distributed [[step]]/[[assign]] exactly as before. */
+    * Anything else (over budget, non-long ids, ragged dims) composes
+    * the distributed [[step]]/[[assign]] exactly as before. */
   def assignTrajectory(corpus: DataFrame, k: Int, iters: Int,
-      idCol: String = "vec_id", embCol: String = "embedding",
-      driverLimit: Long = ProductQuantize.DriverVecLimit): Seq[DataFrame] = {
+      idCol: String = "vec_id", embCol: String = "embedding"): Seq[DataFrame] = {
     val spark = corpus.sparkSession
-    if (driverLimit > 0 &&
-        corpus.schema(idCol).dataType == org.apache.spark.sql.types.LongType) {
-      ProductQuantize.collectVecs(corpus, idCol, embCol, -1, driverLimit) match {
+    if (corpus.schema(idCol).dataType == org.apache.spark.sql.types.LongType) {
+      ProductQuantize.collectVecs("kmeans", corpus, idCol, embCol, -1) match {
         case Some(vecs) if vecs.nonEmpty =>
           return driverTrajectory(spark, vecs, k, iters, idCol)
         case _ => ()

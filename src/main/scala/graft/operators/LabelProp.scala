@@ -27,8 +27,7 @@ import org.apache.spark.sql.functions._
   */
 object LabelProp {
 
-  def communities(nodes: DataFrame, edges: DataFrame, rounds: Int,
-                  driverLimit: Long = DriverGraph.DefaultEdgeLimit): DataFrame = {
+  def communities(nodes: DataFrame, edges: DataFrame, rounds: Int): DataFrame = {
     require(rounds >= 1, s"rounds must be >= 1: $rounds")
     val s = edges.sparkSession
     import s.implicits._
@@ -49,10 +48,10 @@ object LabelProp {
     // node set — the vertex side never collects. The update rule is
     // exact integer counting with a deterministic (max count, min
     // label) pick, so the driver rounds are bit-identical to the
-    // distributed ones (GraphDriverFinishSpec). The count doubles as
-    // the persist materializer round 1 would pay anyway.
-    if (DriverGraph.integral(nbrs.schema("src").dataType) &&
-        nbrs.count() <= 2L * driverLimit) {
+    // distributed ones (GraphDriverFinishSpec). 16 B per arc: two
+    // long ids.
+    if (DriverFinish.integral(nbrs.schema("src").dataType) &&
+        DriverFinish.fitsCount("labelprop", nbrs, 16L)) {
       try return driverCommunities(nbrs, allNodes, rounds)
       finally { nbrs.unpersist(false); allNodes.unpersist(false) }
     }
@@ -94,18 +93,18 @@ object LabelProp {
     import org.apache.spark.sql.types._
     val s = nbrs.sparkSession
     val nodeType = allNodes.schema("node").dataType
-    val (ea, eb) = DriverGraph.collectPairs(nbrs, "src", "dst")
-    val ids = DriverGraph.denseIndex(ea, eb)
+    val (ea, eb) = DriverFinish.collectPairs(nbrs, "src", "dst")
+    val ids = DriverFinish.denseIndex(ea, eb)
     val n = ids.length
     val m = ea.length
     val es = new Array[Int](m)
     val ed = new Array[Int](m)
     var i = 0
     while (i < m) {
-      es(i) = DriverGraph.idx(ids, ea(i)); ed(i) = DriverGraph.idx(ids, eb(i))
+      es(i) = DriverFinish.idx(ids, ea(i)); ed(i) = DriverFinish.idx(ids, eb(i))
       i += 1
     }
-    val (off, adj) = DriverGraph.csr(n, es, ed)
+    val (off, adj) = DriverFinish.csr(n, es, ed)
     var lbl = java.util.Arrays.copyOf(ids, n)
     var maxDeg = 0
     i = 0

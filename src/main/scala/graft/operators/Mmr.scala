@@ -27,37 +27,32 @@ import org.apache.spark.sql.expressions.Window
   */
 object Mmr {
 
-  /** Bounded-collect cap for the r16 driver-finish of the greedy
-    * rounds: candidate ROWS (Q·nCand — tiny by construction relative
-    * to the corpus the sweep already reduced) plus an embedding fetch
-    * bounded by the distinct candidate count. */
-  val DriverCandLimit = 1L << 20
-
   /** `(query_id, mmr_rnk, neighbor_id, score)` — the `k` MMR picks
     * per query row, in pick order.
     *
     * Driver-finish (r16): candidate GENERATION (the only corpus touch)
     * stays the distributed broadcast sweep; when the candidate table
-    * fits the bounded collect and ids are integral, the k greedy
-    * rounds — each a full Spark job (join + window + checkpoint) on
-    * Q·nCand rows, pure scheduling overhead at that size — run as a
-    * driver loop instead. Pair cosines use the identical strict fold
+    * (Q·nCand rows) fits [[DriverFinish]]'s budget and ids are
+    * integral, the k greedy rounds — each a full Spark job (join +
+    * window + checkpoint) on Q·nCand rows, pure scheduling overhead at
+    * that size — run as a driver loop instead. Pair cosines use the identical strict fold
     * (ascending-index double accumulation = [[graft.functions.FloatDot]]),
     * the identical single-association score `0.5·rel − 0.5·ms`, and
     * Spark's exact double total order for the argmax/max (NaN
     * greatest, 0.0 == -0.0), so picks are bit-identical
     * (MmrSpec pins driver ≡ distributed ≡ greedy reference). */
   def rerank(corpus: DataFrame, queries: DataFrame, nCand: Int, k: Int,
-             idCol: String = "vec_id", embCol: String = "embedding",
-             driverLimit: Long = DriverCandLimit): DataFrame = {
+             idCol: String = "vec_id", embCol: String = "embedding"): DataFrame = {
     val cand = Similarity.bruteForceTopK(corpus, queries, nCand, idCol, embCol)
       .select(col("query_id"), col("neighbor_id"), col("cosine").as("rel"),
         col("rnk"))
       .persist()
     try {
-      if (DriverGraph.integral(cand.schema("query_id").dataType) &&
-          DriverGraph.integral(cand.schema("neighbor_id").dataType) &&
-          cand.count() <= driverLimit) {
+      // 32 B per candidate: query id, neighbor id, relevance, rank (the
+      // embedding fetch that follows is one row per distinct candidate)
+      if (DriverFinish.integral(cand.schema("query_id").dataType) &&
+          DriverFinish.integral(cand.schema("neighbor_id").dataType) &&
+          DriverFinish.fitsCount("mmr", cand, 32L)) {
         val drv = driverRerank(corpus, cand, k, idCol, embCol)
         if (drv.isDefined) return drv.get
       }

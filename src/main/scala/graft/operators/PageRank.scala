@@ -33,24 +33,22 @@ object PageRank {
     * collapsed. Materializes eagerly (the returned frame is
     * lineage-cut).
     *
-    * Driver-finish (r16): when the deduped edge set has at most
-    * `driverLimit` rows (count known before collecting — it doubles as
-    * the persist materializer round 1 would pay anyway) and node ids
-    * are integral, the whole iteration runs as a primitive-array loop
-    * on the driver. Every update is exact integer arithmetic (sums +
-    * floor divisions, overflow mirrored with addExact/multiplyExact as
-    * ANSI mode throws), so the driver pass is bit-identical to the
-    * distributed rounds (pinned by GraphDriverFinishSpec). Graphs over
-    * the cap never collect. */
+    * Driver-finish (r16): when the deduped edge set fits
+    * [[DriverFinish]]'s budget and node ids are integral, the whole
+    * iteration runs as a primitive-array loop on the driver. Every
+    * update is exact integer arithmetic (sums + floor divisions,
+    * overflow mirrored with addExact/multiplyExact as ANSI mode
+    * throws), so the driver pass is bit-identical to the distributed
+    * rounds (pinned by GraphDriverFinishSpec). */
   def ranksInt(edges: DataFrame, iters: Int, scale: Long = 1000000L,
-               basePct: Int = 15, dampPct: Int = 85,
-               driverLimit: Long = DriverGraph.DefaultEdgeLimit): DataFrame = {
+               basePct: Int = 15, dampPct: Int = 85): DataFrame = {
     require(iters >= 1, s"iters must be >= 1: $iters")
     require(basePct + dampPct == 100, s"basePct + dampPct must be 100")
     val e = edges.select(col("src"), col("dst")).distinct().persist()
-    if (DriverGraph.integral(e.schema("src").dataType) &&
-        DriverGraph.integral(e.schema("dst").dataType) &&
-        e.count() <= driverLimit) {
+    // 16 B per edge: its two ids as longs
+    if (DriverFinish.integral(e.schema("src").dataType) &&
+        DriverFinish.integral(e.schema("dst").dataType) &&
+        DriverFinish.fitsCount("pagerank", e, 16L)) {
       try return driverRanks(e, iters, scale, basePct, dampPct)
       finally e.unpersist()
     }
@@ -100,15 +98,15 @@ object PageRank {
     // output node type = what the distributed union would resolve to
     val nodeType = e.select(col("src").as("node"))
       .union(e.select(col("dst").as("node"))).schema("node").dataType
-    val (ea, eb) = DriverGraph.collectPairs(e, "src", "dst")
-    val ids = DriverGraph.denseIndex(ea, eb)
+    val (ea, eb) = DriverFinish.collectPairs(e, "src", "dst")
+    val ids = DriverFinish.denseIndex(ea, eb)
     val n = ids.length
     val m = ea.length
     val es = new Array[Int](m)
     val ed = new Array[Int](m)
     var i = 0
     while (i < m) {
-      es(i) = DriverGraph.idx(ids, ea(i)); ed(i) = DriverGraph.idx(ids, eb(i))
+      es(i) = DriverFinish.idx(ids, ea(i)); ed(i) = DriverFinish.idx(ids, eb(i))
       i += 1
     }
     val outd = new Array[Long](n)

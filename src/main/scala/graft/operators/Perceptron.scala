@@ -39,26 +39,14 @@ object Perceptron {
       .groupBy(col(idCol), col("bucket"))
       .agg(count(lit(1)).as("cnt"))
 
-  /** Bounded driver-finish cap on collected feature / label rows:
-    * ~24 B/row of primitive arrays at the cap — the
-    * [[DriverGraph.DefaultEdgeLimit]] sizing. The hashing trick
-    * already bounds the MODEL; this bounds the epoch INPUT so the
-    * whole epoch loop can run as integer array arithmetic on the
-    * driver when the featurized corpus is small (r16: each Spark
-    * epoch at that size is pure scheduling overhead — a broadcast
-    * join, two shuffles, and a collect per epoch). Over-cap corpora
-    * take the distributed loop below, unchanged. */
-  private[graft] val DriverFinishMaxRows = 4000000L
-
   /** Train `epochs` batch-perceptron epochs from zero weights.
     * `label` must evaluate to +1 or -1 per document. Returns the
     * learned `(bucket, weight)` frame (nonzero weights only — ready
     * for [[HashedClassifier.score]]). */
   def learn(docs: DataFrame, idCol: String, textCol: String, label: Column,
-            nBuckets: Int, epochs: Int,
-            driverLimit: Long = DriverFinishMaxRows): DataFrame =
+            nBuckets: Int, epochs: Int): DataFrame =
     learnOrEval(docs, idCol, textCol, label, nBuckets, epochs,
-      wantEval = false, driverLimit)._1
+      wantEval = false)._1
 
   /** Featurize ONCE, train, and evaluate the trained weights over the
     * same corpus — the q84 arc without the second featurize pass.
@@ -66,16 +54,15 @@ object Perceptron {
     * [[evaluate]]'s exact schema and rows. */
   private[graft] def learnAndEvaluate(docs: DataFrame, idCol: String,
       textCol: String, label: Column, nBuckets: Int,
-      epochs: Int,
-      driverLimit: Long = DriverFinishMaxRows): (DataFrame, DataFrame) = {
+      epochs: Int): (DataFrame, DataFrame) = {
     val (w, ev) = learnOrEval(docs, idCol, textCol, label, nBuckets, epochs,
-      wantEval = true, driverLimit)
+      wantEval = true)
     (w, ev.get)
   }
 
   private def learnOrEval(docs: DataFrame, idCol: String, textCol: String,
       label: Column, nBuckets: Int, epochs: Int,
-      wantEval: Boolean, driverLimit: Long): (DataFrame, Option[DataFrame]) = {
+      wantEval: Boolean): (DataFrame, Option[DataFrame]) = {
     val spark = docs.sparkSession
     val id = col(idCol)
     val feats = featurize(docs, idCol, textCol, nBuckets).persist()
@@ -83,23 +70,29 @@ object Perceptron {
     // epoch re-scans the corpus just to re-derive two columns
     val labels = docs.select(id, label.cast("long").as("y")).persist()
     try {
-      // driver-finish dispatch: the count doubles as the persist
-      // materializer the first epoch would pay anyway; the label
-      // collect is LIMIT-bounded so an empty-text-heavy corpus (many
-      // labels, few features) cannot blow the driver.
+      // driver-finish (r16): when the featurized corpus fits
+      // DriverFinish's budget, the whole epoch loop runs as integer
+      // array arithmetic on the driver — each Spark epoch at that size
+      // is a broadcast join, two shuffles and a collect of pure
+      // scheduling overhead. The hashing trick already bounds the
+      // MODEL; the budget bounds the epoch INPUT. The label collect is
+      // LIMIT-bounded so an empty-text-heavy corpus (many labels, few
+      // features) cannot blow the driver.
       val idType = docs.schema(docs.schema.fieldIndex(idCol)).dataType
       // the driver eval path materializes LONG ids — a narrower
       // integral id would come back widened, so only the weights-only
       // path (whose output never carries ids) accepts int/short/byte
-      val idOk = DriverGraph.integral(idType) &&
+      val idOk = DriverFinish.integral(idType) &&
         (!wantEval || idType == org.apache.spark.sql.types.LongType)
-      if (idOk && driverLimit > 0 && feats.count() <= driverLimit) {
-        val labRows = labels.select(id.cast("long"), col("y"))
-          .limit(math.min(driverLimit, Int.MaxValue - 1L).toInt + 1).collect()
-        if (labRows.length <= driverLimit) {
-          val r = learnDriver(spark, feats, idCol, labRows, nBuckets,
-            epochs, wantEval)
-          return r
+      // 24 B per feature row: long doc id, int bucket, long count and
+      // the int dense doc index; 16 B per label row: long id, long y
+      if (idOk && DriverFinish.fitsCount("perceptron", feats, 24L)) {
+        DriverFinish.collectBounded("perceptron_labels",
+            labels.select(id.cast("long"), col("y")), 16L) match {
+          case Some(labRows) =>
+            return learnDriver(spark, feats, idCol, labRows, nBuckets,
+              epochs, wantEval)
+          case None =>
         }
       }
       var w = Map.empty[Int, Long]
@@ -160,11 +153,11 @@ object Perceptron {
         s"perceptron driver-finish: bucket ${fb(i)} outside [0, $nBuckets)")
       i += 1
     }
-    val ids = DriverGraph.denseIndex(fid, Array.emptyLongArray)
+    val ids = DriverFinish.denseIndex(fid, Array.emptyLongArray)
     val nDocs = ids.length
     val di = new Array[Int](m)
     i = 0
-    while (i < m) { di(i) = DriverGraph.idx(ids, fid(i)); i += 1 }
+    while (i < m) { di(i) = DriverFinish.idx(ids, fid(i)); i += 1 }
     // labels: y per dense doc id; docs absent from feats are ignored
     // (the distributed margin groupBy never sees them), feats docs
     // absent from labels never misclassify (inner join)
@@ -172,7 +165,7 @@ object Perceptron {
     val hasY = new Array[Boolean](nDocs)
     labRows.foreach { r =>
       if (!r.isNullAt(0)) {
-        val d = DriverGraph.idx(ids, r.getLong(0))
+        val d = DriverFinish.idx(ids, r.getLong(0))
         if (d >= 0) { y(d) = r.getLong(1); hasY(d) = true }
       }
     }

@@ -42,18 +42,6 @@ import org.apache.spark.sql.functions._
   */
 object ProductQuantize {
 
-  /** r16 driver-finish cap for the INDEX-BUILD stages (codebooks /
-    * encode / probe-1 coarse assignment): vectors, not edges —
-    * embeddings dominate the collect (64 doubles ≈ 512 B/vector →
-    * ≤128 MB at the cap). The cap is probed with a LIMIT collect (the
-    * collectRefs idiom), so an over-cap corpus pays one partial scan,
-    * never a full collect; the QUERY-side joins (LUT, candidates, ADC
-    * ranking) stay distributed. Every mirrored operation is one of the
-    * operator's documented bit-portable forms (strict folds, quantized
-    * integer means, fixed associations, min-struct argmax with Spark's
-    * exact double order), pinned ≡ distributed by ProductQuantizeSpec. */
-  val DriverVecLimit = 1L << 18
-
   /** Spark's exact double total order (0.0 == -0.0, NaN greatest). */
   private[operators] def dcmp(a: Double, b: Double): Int =
     if (a == b) 0 else java.lang.Double.compare(a, b)
@@ -68,29 +56,41 @@ object ProductQuantize {
     acc
   }
 
-  /** Bounded LIMIT-probed collect of (id, emb as exact doubles);
-    * None past the cap, on non-integral ids, duplicate ids, NULLs,
-    * or any embedding not exactly m·dsub long (the distributed
-    * raise_error path owns the loud failure). */
-  private[operators] def collectVecs(df: DataFrame, idCol: String, embCol: String,
-      dims0: Int, cap: Long): Option[Array[(Long, Array[Double])]] = {
-    if (!DriverGraph.integral(df.schema(idCol).dataType)) return None
-    val capI = math.min(cap + 1, Int.MaxValue.toLong - 1).toInt
-    val rows = df.select(col(idCol).cast("long"), col(embCol)).limit(capI).collect()
-    if (rows.length > cap) return None
+  /** (id, emb as exact doubles) of every row when the corpus fits
+    * [[DriverFinish]]'s budget — the r16 driver-finish of the
+    * INDEX-BUILD stages (codebooks / encode / probe-1 coarse
+    * assignment; the QUERY-side joins stay distributed). None over
+    * budget, on non-integral ids, duplicate ids, NULLs, or any
+    * embedding not exactly `dims0` long (the distributed raise_error
+    * path owns the loud failure). `dims0 < 0` is uniform-length mode:
+    * the first row fixes the width (KMeans' caller has no declared
+    * dim; raggedness falls back to the distributed path, which owns
+    * mismatch semantics). Every mirrored operation is one of the
+    * operator's documented bit-portable forms (strict folds, quantized
+    * integer means, fixed associations, min-struct argmax with Spark's
+    * exact double order), pinned ≡ distributed by ProductQuantizeSpec. */
+  private[operators] def collectVecs(op: String, df: DataFrame, idCol: String,
+      embCol: String, dims0: Int): Option[Array[(Long, Array[Double])]] = {
+    if (!DriverFinish.integral(df.schema(idCol).dataType)) return None
+    val dims = if (dims0 >= 0) dims0 else {
+      val first = df.select(size(col(embCol))).head(1)
+      if (first.isEmpty) 0
+      else if (first(0).isNullAt(0) || first(0).getInt(0) < 0) return None
+      else first(0).getInt(0)
+    }
+    // 16 + 8·dims B per vector: the long id and the array header, then
+    // the embedding as doubles
+    val rows = DriverFinish.collectBounded(op,
+        df.select(col(idCol).cast("long"), col(embCol)), 16L + 8L * dims)
+      .getOrElse(return None)
     val out = new Array[(Long, Array[Double])](rows.length)
     val seen = new java.util.HashSet[java.lang.Long](rows.length * 2)
-    // dims0 < 0: uniform-length mode — the first row fixes the width
-    // (KMeans' caller has no declared dim; raggedness falls back to
-    // the distributed path, which owns mismatch semantics)
-    var dims = dims0
     var i = 0
     while (i < out.length) {
       val r = rows(i)
       if (r.isNullAt(0) || r.isNullAt(1)) return None
       if (!seen.add(r.getLong(0))) return None
       val seq = r.getSeq[Any](1)
-      if (dims < 0) dims = seq.length
       if (seq.length != dims) return None
       val arr = new Array[Double](dims)
       var j = 0
@@ -269,12 +269,12 @@ object ProductQuantize {
     * in [[KMeans]]. */
   def codebooks(corpus: DataFrame, m: Int, dsub: Int, ksub: Int, iters: Int,
                 idCol: String = "vec_id", embCol: String = "embedding"): DataFrame = {
-    // driver-finish (r16): a sub-cap corpus learns in memory (iters=0
-    // keeps the seed frame's float schema — distributed only). Any
-    // irregularity (NULLs, dup ids, mis-sized embeddings) declines to
+    // driver-finish (r16): a corpus within the budget learns in memory
+    // (iters=0 keeps the seed frame's float schema — distributed only).
+    // Any irregularity (NULLs, dup ids, mis-sized embeddings) declines to
     // the distributed plan, whose raise_error owns the loud failure.
     if (iters >= 1) {
-      collectVecs(corpus, idCol, embCol, m * dsub, DriverVecLimit) match {
+      collectVecs("pq_codebooks", corpus, idCol, embCol, m * dsub) match {
         case Some(vecs) =>
           return booksFrame(corpus.sparkSession,
             driverLearnBooks(vecs, m, dsub, ksub, iters),
@@ -318,7 +318,7 @@ object ProductQuantize {
     val sch = books.schema
     if (!Seq("sub", "cent_id", "cent").forall(f => sch.fieldNames.contains(f)))
       return None
-    if (!DriverGraph.integral(sch("cent_id").dataType)) return None
+    if (!DriverFinish.integral(sch("cent_id").dataType)) return None
     val rows = books.select(col("sub").cast("int"), col("cent_id").cast("long"),
       col("cent")).limit(65537).collect()
     if (rows.length > 65536) return None
@@ -357,7 +357,7 @@ object ProductQuantize {
     // misuse). Works against ANY books frame incl. parquet round-trips.
     val drv = for {
       bs <- collectBooks(books, m)
-      vecs <- collectVecs(corpus, idCol, embCol, m * dsub, DriverVecLimit)
+      vecs <- collectVecs("pq_encode", corpus, idCol, embCol, m * dsub)
     } yield {
       import org.apache.spark.sql.Row
       import org.apache.spark.sql.types._
@@ -411,13 +411,13 @@ object ProductQuantize {
                    idCol: String = "vec_id", embCol: String = "embedding"): DataFrame = {
     // driver-finish (r16), probe = 1 only (the corpus side): same
     // raw-dot argmax with lower-cent ties, in memory, when the row
-    // side fits the LIMIT-probed cap. probe > 1 is the query side —
+    // side fits the budget. probe > 1 is the query side —
     // already small, stays on the WindowGroupLimit-pruned window.
     if (probe == 1) {
       val drv = for {
         cs <- collectCents(cents)
         dims = if (cs.isEmpty) -1 else cs(0)._2.length
-        vecs <- collectVecs(df, idCol, embCol, dims, DriverVecLimit)
+        vecs <- collectVecs("pq_coarse_assign", df, idCol, embCol, dims)
       } yield {
         import org.apache.spark.sql.Row
         import org.apache.spark.sql.types._
@@ -471,7 +471,7 @@ object ProductQuantize {
     val sch = cents.schema
     if (!Seq("coarse_id", "__cent").forall(f => sch.fieldNames.contains(f)))
       return None
-    if (!DriverGraph.integral(sch("coarse_id").dataType)) return None
+    if (!DriverFinish.integral(sch("coarse_id").dataType)) return None
     val rows = cents.select(col("coarse_id").cast("long"), col("__cent"))
       .limit(4097).collect()
     if (rows.length > 4096) return None

@@ -49,18 +49,6 @@ object RepeatedSequences {
     i
   }
 
-  /** r16 driver-finish cap on window COUNT (r17: probed exactly by
-    * length arithmetic — no window rows are ever collected; the driver
-    * rebuilds them from the collected texts). An over-cap corpus stays
-    * on the distributed bucketed sort. */
-  private[graft] val DriverWindowLimit = 4000000L
-
-  /** r17 companion guard on total corpus characters: driver window
-    * bytes are ≈ `window` × chars, so this bounds the in-memory build
-    * at ~512 MB for the default window=8 — the same envelope the r16
-    * collected-rows cap implied. */
-  private[graft] val DriverCharLimit = 64L * 1024 * 1024
-
   private final case class W(doc: Long, p: Long,
       u8: org.apache.spark.unsafe.types.UTF8String)
 
@@ -200,49 +188,24 @@ object RepeatedSequences {
     * (lcp DESC, seq). Deterministic — output is a pure function of
     * the corpus, invariant to partitioning (pinned by spec). */
   def topRepeats(docs: DataFrame, idCol: String, textCol: String,
-                 window: Int = 8, topK: Int = 25, numParts: Int = 0,
-                 driverLimit: Long = DriverWindowLimit): DataFrame = {
+                 window: Int = 8, topK: Int = 25, numParts: Int = 0): DataFrame = {
     val s = docs.sparkSession
     import s.implicits._
     val n = if (numParts > 0) numParts else s.sparkContext.defaultParallelism
-    // r16 driver-finish, r17 shape: gate on the EXACT window count via
-    // length arithmetic (tokens = spaces + 1 — q14's idiom; one
-    // column-pruned 1-row aggregate, no explode, no shuffle of window
-    // rows), then collect the TEXTS — ~`window`× fewer driver bytes
-    // than r16's collected window rows — and build the windows on the
-    // driver by evaluating the SAME TokenWindows expression the
-    // distributed path uses (zero drift by construction). The probe
-    // itself is pre-gated by the optimizer's free size estimate
-    // (one-sided, the BpeTrain r17 idiom) so a 100 TB corpus pays no
-    // wasted pass; a chars guard bounds driver window-bytes at
-    // ~window × DriverCharLimit. Sort order in the driver scan mirrors
-    // the cut/sortWithinPartitions order exactly: ws by UTF8String
-    // BINARY bytes, then doc_id, then p. At 100 TB the bucketed
-    // external sort below is the right formulation.
-    if (driverLimit > 0 &&
-        docs.select(col(textCol)).queryExecution.optimizedPlan.stats.sizeInBytes
-          <= BigInt(driverLimit) * 512) {
-      val trace = sys.env.contains("RSEQ_TRACE")
-      def t[A](label: String)(f: => A): A = {
-        val t0 = System.nanoTime()
-        val r = f
-        if (trace) System.err.println(
-          f"[rseq] $label%-10s ${(System.nanoTime() - t0) / 1e9}%.3f s")
-        r
-      }
-      val probe = t("probe")(docs.select(
-        sum(length(col(textCol)) -
-          length(translate(col(textCol), " ", "")) + 1L).as("wins"),
-        sum(length(col(textCol))).as("chars")).collect()(0))
-      val wins = if (probe.isNullAt(0)) 0L else probe.getLong(0)
-      val chars = if (probe.isNullAt(1)) 0L else probe.getLong(1)
-      if (wins <= driverLimit && chars <= DriverCharLimit) {
-        val texts = t("collect")(docs
-          .select(col(idCol).cast("long").as("doc_id"), col(textCol))
-          .collect())
-        val ws = t("build")(windowsFromTexts(texts, window))
-        return t("scan")(driverTopRepeats(s, ws, topK))
-      }
+    // r16 driver-finish, r17 shape: collect the TEXTS — ~`window`×
+    // fewer driver bytes than r16's collected window rows — and build
+    // the windows on the driver by evaluating the SAME TokenWindows
+    // expression the distributed path uses (zero drift by
+    // construction). `window` B per text byte: every byte recurs in at
+    // most `window` windows. Sort order in the driver scan mirrors the
+    // cut/sortWithinPartitions order exactly: ws by UTF8String BINARY
+    // bytes, then doc_id, then p. At 100 TB the bucketed external sort
+    // below is the right formulation.
+    if (DriverFinish.fitsEstimated("repeated_sequences", docs, textCol, window)) {
+      val texts = docs
+        .select(col(idCol).cast("long").as("doc_id"), col(textCol))
+        .collect()
+      return driverTopRepeats(s, windowsFromTexts(texts, window), topK)
     }
     // distributed two-phase path
     val win = windows(docs, idCol, textCol, window).persist(StorageLevel.MEMORY_AND_DISK)

@@ -54,20 +54,18 @@ object SemDeDup {
     * per action (two assignment passes total instead of a cache entry
     * holding the whole corpus for the life of the session). */
   def dropVerdicts(corpus: DataFrame, k: Int, threshold: Double,
-                   idCol: String = "vec_id", embCol: String = "embedding",
-                   driverLimit: Long = ProductQuantize.DriverVecLimit): DataFrame = {
-    // r16 driver-finish: under the shared LIMIT-probed vector cap the
+                   idCol: String = "vec_id", embCol: String = "embedding"): DataFrame = {
+    // r16 driver-finish: within DriverFinish's budget the
     // assignment + within-cluster pair pass run in memory with the
     // operator's bit-portable forms (strict dot folds, min-struct
     // argmax, IEEE sqrt/division). Two Spark-side subtleties mirrored
     // EXACTLY (both spec-pinned): ANSI double division throws
     // DIVIDE_BY_ZERO on a zero-norm pair, and Spark comparison
     // semantics order NaN above every number, so a NaN cosine (NaN
-    // embedding elements) IS >= threshold and drops. Over-cap / non-
-    // long-id corpora take the distributed path unchanged.
-    if (driverLimit > 0 &&
-        corpus.schema(idCol).dataType == org.apache.spark.sql.types.LongType) {
-      ProductQuantize.collectVecs(corpus, idCol, embCol, -1, driverLimit) match {
+    // embedding elements) IS >= threshold and drops. Over-budget /
+    // non-long-id corpora take the distributed path unchanged.
+    if (corpus.schema(idCol).dataType == org.apache.spark.sql.types.LongType) {
+      ProductQuantize.collectVecs("semdedup", corpus, idCol, embCol, -1) match {
         case Some(vecs) if vecs.nonEmpty =>
           return driverVerdicts(corpus.sparkSession, vecs, k, threshold, idCol)
         case _ => ()

@@ -26,24 +26,25 @@ import org.apache.spark.sql.functions._
 object Triangles {
 
   /** Above this many oriented wedge checks the driver-finish path
-    * declines even when the edges fit the collect cap — triangle work
-    * is super-linear in edges (Σ d⁺² = O(m^{3/2})), so unlike the
-    * linear-work operators the WORK is bounded separately (computable
-    * in O(m) from the collected degrees, before any wedge forms). */
+    * declines even when the edges fit [[DriverFinish]]'s budget — a
+    * bound on CPU work, not memory: triangle work is super-linear in
+    * edges (Σ d⁺² = O(m^{3/2})), so unlike the linear-work operators
+    * the WORK is bounded separately (computable in O(m) from the
+    * collected degrees, before any wedge forms). */
   val DriverWedgeLimit = 100000000L
 
   /** One row per node: `(node, deg, tri, coeff)` — degree in the
     * canonicalized simple graph, exact triangle membership count, and
     * local clustering coefficient (0.0 where deg < 2).
     *
-    * Driver-finish (r16): a sub-cap canonical edge set counts its
-    * triangles in one primitive-array pass on the driver (orientation
-    * identical to the distributed plan; counts exact integers; the
-    * coefficient the same single IEEE division) — bit-identical
-    * results, pinned by GraphDriverFinishSpec. Over-cap graphs (edges
-    * or wedge work) run the distributed joins unchanged. */
-  def perNode(edges: DataFrame, srcCol: String = "src", dstCol: String = "dst",
-              driverLimit: Long = DriverGraph.DefaultEdgeLimit): DataFrame = {
+    * Driver-finish (r16): a canonical edge set within the budget
+    * counts its triangles in one primitive-array pass on the driver
+    * (orientation identical to the distributed plan; counts exact
+    * integers; the coefficient the same single IEEE division) —
+    * bit-identical results, pinned by GraphDriverFinishSpec. Graphs over the budget
+    * or the wedge limit run the distributed joins unchanged. */
+  def perNode(edges: DataFrame, srcCol: String = "src",
+              dstCol: String = "dst"): DataFrame = {
     val s = edges.sparkSession
     import s.implicits._
     // canonical simple undirected edges: a < b, no loops, no dups
@@ -52,7 +53,8 @@ object Triangles {
         greatest(col(srcCol), col(dstCol)).cast("long").as("b"))
       .filter($"a" =!= $"b").distinct().persist()
     try {
-      if (ce.count() <= driverLimit) {
+      // 16 B per edge: two long ids
+      if (DriverFinish.fitsCount("triangles", ce, 16L)) {
         val drv = driverPerNode(ce)
         if (drv.isDefined) return drv.get
       }
@@ -102,8 +104,8 @@ object Triangles {
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.types._
     val s = ce.sparkSession
-    val (ea, eb) = DriverGraph.collectPairs(ce, "a", "b")
-    val ids = DriverGraph.denseIndex(ea, eb)
+    val (ea, eb) = DriverFinish.collectPairs(ce, "a", "b")
+    val ids = DriverFinish.denseIndex(ea, eb)
     val n = ids.length
     val m = ea.length
     val es = new Array[Int](m)
@@ -111,7 +113,7 @@ object Triangles {
     val deg = new Array[Long](n)
     var i = 0
     while (i < m) {
-      es(i) = DriverGraph.idx(ids, ea(i)); ed(i) = DriverGraph.idx(ids, eb(i))
+      es(i) = DriverFinish.idx(ids, ea(i)); ed(i) = DriverFinish.idx(ids, eb(i))
       deg(es(i)) += 1; deg(ed(i)) += 1
       i += 1
     }
@@ -133,7 +135,7 @@ object Triangles {
     i = 0
     while (i < n) { work += outd(i) * (outd(i) - 1) / 2; i += 1 }
     if (work > DriverWedgeLimit) return None
-    val (off, adj) = DriverGraph.csr(n, ou, ov)
+    val (off, adj) = DriverFinish.csr(n, ou, ov)
     // sort each out-list by dense id so wedge pairs come out v1 < v2
     i = 0
     while (i < n) { java.util.Arrays.sort(adj, off(i), off(i + 1)); i += 1 }

@@ -3603,15 +3603,7 @@ object TextQueries {
     * DECIMAL(38,0) (≡ DuckDB HUGEINT — exact), the denominator is ONE
     * sqrt of the exact product and the result ONE double division —
     * bit-portable, no per-edge floats. Graph: q105's families. */
-  def q121Assortativity(s: SparkSession, dir: String): DataFrame =
-    q121AssortativityImpl(s, dir,
-      graft.operators.DriverGraph.DefaultEdgeLimit)
-
-  /** `driverLimit` forces the distributed aggregation in specs (-1);
-    * the default dispatches the r16 driver-finish under the shared
-    * 4M-edge bound (GraphDriverFinishSpec pins both paths equal). */
-  private[graft] def q121AssortativityImpl(s: SparkSession, dir: String,
-      driverLimit: Long): DataFrame = {
+  def q121Assortativity(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val d = docs(s, dir)
     val e1 = d.filter($"doc_id" % 2 === 0)
@@ -3626,14 +3618,14 @@ object TextQueries {
       .persist()
     try {
       // r16 driver-finish: the canonical edge set is ~200 nodes by
-      // construction — the count (which materializes the persist the
-      // first consumer would pay) gates a bounded collect, and the
-      // degree/sum arithmetic is exact integers with the SAME decimal
-      // last mile (BigDecimal products, one double cast each side,
-      // IEEE sqrt + division — bit-identical to the distributed
-      // expression; Math.addExact mirrors the ANSI sum overflow).
-      if (driverLimit > 0 && ce.count() <= driverLimit) {
-        val (ea, eb) = graft.operators.DriverGraph.collectPairs(ce, "a", "b")
+      // construction (16 B per edge: two long ids), and the degree/sum
+      // arithmetic is exact integers with the SAME decimal last mile
+      // (BigDecimal products, one double cast each side, IEEE sqrt +
+      // division — bit-identical to the distributed expression;
+      // Math.addExact mirrors the ANSI sum overflow; pinned by
+      // GraphDriverFinishSpec).
+      if (graft.operators.DriverFinish.fitsCount("q121", ce, 16L)) {
+        val (ea, eb) = graft.operators.DriverFinish.collectPairs(ce, "a", "b")
         return s.createDataFrame(
           s.sparkContext.parallelize(Seq(assortRow(ea, eb)), 1),
           org.apache.spark.sql.types.StructType(Seq(

@@ -3,7 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 
-import graft.operators.BpeTrain
+import graft.operators.{BpeTrain, DriverFinish}
 
 class BpeTrainSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
@@ -82,33 +82,37 @@ class BpeTrainSpec extends AnyFunSuite {
   }
 
   test("learn: far-over-cap stats estimate skips the probe, result unchanged") {
-    // r17 (r16 verdict #4): the exact sum(length) probe is pre-gated by
-    // the optimizer's free size estimate so a 100 TB corpus pays no
-    // wasted pass. One-sided: within 64x of the cap still probes.
-    assert(BpeTrain.worthProbing(BigInt(640), 10))
-    assert(!BpeTrain.worthProbing(BigInt(641), 10))
-    // end-to-end through the skip branch: driverCharLimit=1 puts any
-    // real frame's estimate far over 64x, so learn must go straight to
-    // the distributed census and still match the driver-finish result
+    // r17 (r16 verdict #4): the exact sum(octet_length) probe is
+    // pre-gated by the optimizer's free size estimate so a 100 TB
+    // corpus pays no wasted pass. A 1-byte budget puts any real
+    // frame's estimate far over it: learn must go straight to the
+    // distributed census — the decision carries the ESTIMATE, not an
+    // exact byte count — and still match the driver-finish result
     val docs = (1 to 50).map(i => s"the cat sat on mat $i").toDF("text")
-    def rows(limit: Long) = BpeTrain.learn(docs, "text", nMerges = 3,
-        driverCharLimit = limit)
+    def rows() = BpeTrain.learn(docs, "text", nMerges = 3)
       .orderBy($"rank").collect()
       .map(r => (r.getLong(0), r.getString(1), r.getString(2), r.getLong(3))).toSeq
-    assert(rows(1L) == rows(BpeTrain.DriverFinishMaxChars))
+    val est = docs.select($"text").queryExecution.optimizedPlan.stats.sizeInBytes
+    val exact = docs.collect().map(_.getString(0).getBytes("UTF-8").length.toLong).sum
+    assert(est != BigInt(exact))
+    val (skipped, gated) = DriverFinishEvents.capture(spark)(DriverFinish.withBudget(1L)(rows()))
+    assert(gated.map(d => (d.probeBytes, d.path)) == Seq(((est * 2).toLong, "distributed")))
+    val (drv, probed) = DriverFinishEvents.capture(spark)(rows())
+    assert(probed.map(d => (d.probeBytes, d.path)) == Seq((exact * 2, "driver")))
+    assert(skipped == drv)
     assert(spark.sharedState.cacheManager.isEmpty)
   }
 
   test("learn survives many rounds with bounded lineage (checkpoint path)") {
     // corpus engineered so every round has a unique >=2 count pair:
     // w1 w2 ... w12 repeated twice as documents
-    // driverCharLimit = -1 forces the DISTRIBUTED rounds — this test
-    // exists to exercise the checkpoint/lineage path, which the r16
+    // forceDistributed runs the DISTRIBUTED rounds — this test exists
+    // to exercise the checkpoint/lineage path, which the r16
     // driver-finish would otherwise bypass on a corpus this small
     val text = (1 to 12).map(i => s"w$i").mkString(" ")
     val docs = Seq(text, text).toDF("text")
-    val got = BpeTrain.learn(docs, "text", nMerges = 11, checkpointEvery = 3,
-      driverCharLimit = -1L).collect()
+    val got = DriverFinish.forceDistributed(
+      BpeTrain.learn(docs, "text", nMerges = 11, checkpointEvery = 3).collect())
     assert(got.length == 11) // merges left-to-right: (w1 w2), (w1 w2 w3), ...
     assert(spark.sharedState.cacheManager.isEmpty)
   }
@@ -119,8 +123,8 @@ class BpeTrainSpec extends AnyFunSuite {
       df.orderBy($"rank").collect()
         .map(r => (r.getLong(0), r.getString(1), r.getString(2), r.getLong(3))).toSeq
     val driver = rows(BpeTrain.learn(docs, "text", nMerges = 4))
-    val dist = rows(BpeTrain.learn(docs, "text", nMerges = 4,
-      driverCharLimit = -1L))
+    val dist = DriverFinish.forceDistributed(
+      rows(BpeTrain.learn(docs, "text", nMerges = 4)))
     assert(driver == dist)
     assert(driver.nonEmpty) // the cross-check must compare real merges
     assert(spark.sharedState.cacheManager.isEmpty)
@@ -135,7 +139,7 @@ class BpeTrainSpec extends AnyFunSuite {
       df.orderBy($"rank").collect()
         .map(r => (r.getLong(0), r.getString(1), r.getString(2), r.getLong(3))).toSeq
     val driver = rows(BpeTrain.learn(docs, "text", nMerges = 2))
-    val dist = rows(BpeTrain.learn(docs, "text", nMerges = 2, driverCharLimit = -1L))
+    val dist = DriverFinish.forceDistributed(rows(BpeTrain.learn(docs, "text", nMerges = 2)))
     assert(driver == dist)
     assert(driver == Seq((1L, "b", "c", 3L), (2L, "a", "b c", 2L)))
   }

@@ -2,6 +2,8 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.operators.DriverFinish
+
 /** Pins the distributed min-label propagation against a brute-force
   * union-find on random graphs, plus the shapes that stress it:
   * long chains (worst-case round count) and edgeless vertex sets. */
@@ -25,16 +27,17 @@ class ConnectedComponentsSpec extends AnyFunSuite {
     (0L until n.toLong).map(i => i -> find(i)).toMap
   }
 
-  /** driverLimit = 0 forces the distributed propagation (the
-    * production default would send every test graph down the r16
+  /** forceDistributed runs the distributed propagation (the
+    * production budget would send every test graph down the r16
     * driver path and silently un-cover the rounds); driver ≡
     * distributed is pinned by GraphDriverFinishSpec. */
   private def run(n: Int, edges: Seq[(Long, Long)]): Map[Long, Long] = {
     import spark.implicits._
     val verts = (0L until n.toLong).toDF("doc_id")
     val e = edges.toDF("doc_a", "doc_b")
-    graft.operators.ConnectedComponents.labels(verts, e, driverLimit = 0L)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    DriverFinish.forceDistributed(
+        graft.operators.ConnectedComponents.labels(verts, e).collect())
+      .map(r => r.getLong(0) -> r.getLong(1)).toMap
   }
 
   test("random graphs equal brute-force union-find") {
@@ -107,9 +110,9 @@ class ConnectedComponentsSpec extends AnyFunSuite {
     val n = 30
     val verts = (0L until n.toLong).toDF("doc_id")
     val e = (0L until (n - 1).toLong).map(i => (i, i + 1)).toDF("doc_a", "doc_b")
-    val got = graft.operators.ConnectedComponents
-      .labels(verts, e, maxRounds = 3, driverLimit = 0L)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val got = DriverFinish.forceDistributed(graft.operators.ConnectedComponents
+        .labels(verts, e, maxRounds = 3).collect())
+      .map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(got.size == n)
     assert(got.values.toSet == Set(0L))
   }
@@ -130,8 +133,8 @@ class ConnectedComponentsSpec extends AnyFunSuite {
     for (p <- Seq(1, 7)) {
       val e = edges.toDF("src", "dst").repartition(p)
       // distributed rounds forced; GraphDriverFinishSpec pins parity
-      val got = graft.operators.PageRank.ranksInt(e, iters = 2, driverLimit = 0L)
-        .as[(Long, Long)].collect().toMap
+      val got = DriverFinish.forceDistributed(
+        graft.operators.PageRank.ranksInt(e, iters = 2).as[(Long, Long)].collect()).toMap
       assert(got == Map(1L -> 638750L, 2L -> 575000L, 3L -> 575000L), s"p=$p")
       // the r16 driver path lands on the same hand-computed values
       val drv = graft.operators.PageRank.ranksInt(e, iters = 2)
@@ -140,9 +143,8 @@ class ConnectedComponentsSpec extends AnyFunSuite {
     }
     // ranks sum is bounded by n·scale (mass only leaks, never grows)
     val big = (0L until 40L).map(i => (i, (i * 3 + 1) % 40))
-    val ranks = graft.operators.PageRank
-      .ranksInt(big.toDF("src", "dst"), iters = 3, driverLimit = 0L)
-      .as[(Long, Long)].collect()
+    val ranks = DriverFinish.forceDistributed(graft.operators.PageRank
+      .ranksInt(big.toDF("src", "dst"), iters = 3).as[(Long, Long)].collect())
     assert(ranks.map(_._2).sum <= 40L * 1000000L)
     assert(ranks.forall(_._2 >= 150000L))
   }
@@ -155,13 +157,13 @@ class ConnectedComponentsSpec extends AnyFunSuite {
     // stack ~25 joins; with it the FINAL frame's plan is a single
     // checkpoint leaf and intermediate analysis stays bounded. Run
     // twice: bit-exact integer arithmetic must agree run-to-run.
-    val r1 = graft.operators.PageRank.ranksInt(edges, iters = 25, driverLimit = 0L)
+    val r1 = DriverFinish.forceDistributed(
+      graft.operators.PageRank.ranksInt(edges, iters = 25))
     assert(r1.queryExecution.analyzed.toString.linesIterator.size < 10,
       "returned frame should be lineage-cut")
     val m1 = r1.as[(Long, Long)].collect().toMap
-    val m2 = graft.operators.PageRank
-      .ranksInt(edges.repartition(5), iters = 25, driverLimit = 0L)
-      .as[(Long, Long)].collect().toMap
+    val m2 = DriverFinish.forceDistributed(graft.operators.PageRank
+      .ranksInt(edges.repartition(5), iters = 25).as[(Long, Long)].collect()).toMap
     assert(m1 == m2)
     assert(m1.size == 60 && m1.values.sum <= 60L * 1000000L)
     // scoped persists released (SoakSpec contract)

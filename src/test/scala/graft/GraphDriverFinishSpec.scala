@@ -2,22 +2,20 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.operators.DriverGraph
+import graft.operators.DriverFinish
 
 /** Pins the r16 driver-finish paths of the iterative graph operators
   * bit-identical to their distributed rounds (the KCoreSpec contract,
-  * extended): each operator runs the SAME input through
-  * `driverLimit = 0` (forces the distributed loop) and the production
-  * default (sends sub-cap graphs to the driver), and the outputs must
-  * agree exactly — integer arithmetic everywhere except Triangles'
+  * extended): each operator runs the SAME input under
+  * `DriverFinish.forceDistributed` (the distributed loop) and the
+  * production budget (sends these graphs to the driver), and the
+  * outputs must agree exactly — integer arithmetic everywhere except Triangles'
   * single IEEE division, which both paths perform on identical exact
   * integers. Graph shapes: randomized multigraphs with loops/dups,
   * arithmetic edge families (the q69/q95/q105/q149 construction
   * class), deep chains, and isolated vertices.  */
 class GraphDriverFinishSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
-
-  private val cap = DriverGraph.DefaultEdgeLimit
 
   private def randomEdges(seed: Int, n: Int, m: Int): Seq[(Long, Long)] = {
     val rnd = new scala.util.Random(seed)
@@ -37,10 +35,10 @@ class GraphDriverFinishSpec extends AnyFunSuite {
     for ((edges, iters) <- Seq((randomEdges(1, 50, 120), 3),
         (familyEdges(60), 2), ((0L until 30L).map(i => i -> (i + 1)), 5))) {
       val e = edges.toDF("src", "dst")
-      val dist = graft.operators.PageRank.ranksInt(e, iters, driverLimit = 0L)
+      def go() = graft.operators.PageRank.ranksInt(e, iters)
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      val drv = graft.operators.PageRank.ranksInt(e, iters, driverLimit = cap)
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      val dist = DriverFinish.forceDistributed(go())
+      val drv = go()
       assert(drv === dist)
     }
     assert(spark.sharedState.cacheManager.isEmpty)
@@ -51,10 +49,10 @@ class GraphDriverFinishSpec extends AnyFunSuite {
     for ((edges, iters) <- Seq((randomEdges(2, 40, 100), 2),
         (familyEdges(50), 3), (Seq(1L -> 3L, 2L -> 3L, 3L -> 4L), 2))) {
       val e = edges.toDF("src", "dst")
-      val dist = graft.operators.Hits.hubsAuthsInt(e, iters, driverLimit = 0L)
+      def go() = graft.operators.Hits.hubsAuthsInt(e, iters)
         .collect().map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2)))).toMap
-      val drv = graft.operators.Hits.hubsAuthsInt(e, iters, driverLimit = cap)
-        .collect().map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2)))).toMap
+      val dist = DriverFinish.forceDistributed(go())
+      val drv = go()
       assert(drv === dist)
     }
     assert(spark.sharedState.cacheManager.isEmpty)
@@ -72,11 +70,11 @@ class GraphDriverFinishSpec extends AnyFunSuite {
       val nodes = (edges.flatMap(e => Seq(e._1, e._2)).distinct ++
         (900L to 904L)).toDF("node")
       val e = edges.toDF("a", "b")
-      def go(lim: Long) = graft.operators.LabelProp
-        .communities(nodes, e, rounds, driverLimit = lim)
+      def go() = graft.operators.LabelProp
+        .communities(nodes, e, rounds)
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      val dist = go(0L)
-      val drv = go(cap)
+      val dist = DriverFinish.forceDistributed(go())
+      val drv = go()
       assert(drv === dist)
       assert((900L to 904L).forall(i => drv(i) == i))
     }
@@ -90,11 +88,11 @@ class GraphDriverFinishSpec extends AnyFunSuite {
         Seq[(Long, Long)]((1, 2), (1, 3), (1, 4), (2, 3), (2, 4), (3, 4),
           (4, 5), (6, 7), (7, 8), (8, 9), (9, 6), (6, 8), (2, 1), (3, 3)))) {
       val e = edges.toDF("src", "dst")
-      def go(lim: Long) = graft.operators.Triangles.perNode(e, driverLimit = lim)
+      def go() = graft.operators.Triangles.perNode(e)
         .collect()
         .map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2), r.getDouble(3))))
         .toMap
-      assert(go(cap) === go(0L))
+      assert(go() === DriverFinish.forceDistributed(go()))
     }
     assert(spark.sharedState.cacheManager.isEmpty)
   }
@@ -105,10 +103,10 @@ class GraphDriverFinishSpec extends AnyFunSuite {
         (0L until 23L).map(i => i -> (i + 1)))) {
       val verts = (0L until 80L).toDF("doc_id")
       val e = edges.toDF("doc_a", "doc_b")
-      def go(lim: Long) = graft.operators.ConnectedComponents
-        .labels(verts, e, driverLimit = lim)
+      def go() = graft.operators.ConnectedComponents
+        .labels(verts, e)
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      assert(go(cap) === go(0L))
+      assert(go() === DriverFinish.forceDistributed(go()))
     }
     assert(spark.sharedState.cacheManager.isEmpty)
   }
@@ -119,12 +117,12 @@ class GraphDriverFinishSpec extends AnyFunSuite {
     // component minimum is still 1 and only vertex rows come back
     val verts = Seq(1L, 2L, 3L).toDF("doc_id")
     val e = Seq(1L -> 100L, 100L -> 101L, 101L -> 2L).toDF("doc_a", "doc_b")
-    def go(lim: Long) = graft.operators.ConnectedComponents
-      .labels(verts, e, driverLimit = lim)
+    def go() = graft.operators.ConnectedComponents
+      .labels(verts, e)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val drv = go(cap)
+    val drv = go()
     assert(drv === Map(1L -> 1L, 2L -> 1L, 3L -> 3L))
-    assert(go(0L) === drv)
+    assert(DriverFinish.forceDistributed(go()) === drv)
   }
 
   test("non-integral node types fall through to the distributed path") {
@@ -140,12 +138,12 @@ class GraphDriverFinishSpec extends AnyFunSuite {
 
   test("q121 assortativity: driver ≡ distributed (decimal last mile bit-equal)") {
     val sf = "/root/testdata/sf0.001"
-    def rows(lim: Long) = graft.queries.TextQueries
-      .q121AssortativityImpl(spark, sf, lim)
+    def rows() = graft.queries.TextQueries
+      .q121Assortativity(spark, sf)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
         java.lang.Double.doubleToRawLongBits(r.getDouble(3)))).toSeq
-    val drv = rows(graft.operators.DriverGraph.DefaultEdgeLimit)
-    val dist = rows(-1L)
+    val drv = rows()
+    val dist = DriverFinish.forceDistributed(rows())
     assert(drv == dist)
     assert(drv.head._1 > 0L)
     assert(spark.sharedState.cacheManager.isEmpty)

@@ -2,6 +2,8 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.operators.DriverFinish
+
 /** Pins [[graft.operators.Hits]]'s max-norm integer iteration against
   * hand-computed values on a small graph, its partitioning
   * independence (the determinism claim), and the scoped-persist
@@ -9,7 +11,7 @@ import org.scalatest.funsuite.AnyFunSuite
 class HitsSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
 
-  /** driverLimit = 0 forces the distributed half-steps (the
+  /** forceDistributed runs the distributed half-steps (the
     * production default would send every test graph down the r16
     * driver path and silently un-cover them); driver ≡ distributed is
     * pinned by GraphDriverFinishSpec. */
@@ -17,10 +19,9 @@ class HitsSpec extends AnyFunSuite {
                   parts: Int = 1): Map[Long, (Long, Long)] = {
     import spark.implicits._
     val e = edges.toDF("src", "dst")
-    graft.operators.Hits
-      .hubsAuthsInt(if (parts > 1) e.repartition(parts) else e, iters,
-        driverLimit = 0L)
-      .collect().map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2)))).toMap
+    DriverFinish.forceDistributed(graft.operators.Hits
+      .hubsAuthsInt(if (parts > 1) e.repartition(parts) else e, iters)
+      .collect()).map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2)))).toMap
   }
 
   test("two rounds on a chain-and-fan graph match hand computation") {
@@ -50,7 +51,7 @@ class HitsSpec extends AnyFunSuite {
   test("scoped persists release — cache manager empty after the call") {
     import spark.implicits._
     val e = Seq(1L -> 2L, 2L -> 3L, 3L -> 1L).toDF("src", "dst")
-    graft.operators.Hits.hubsAuthsInt(e, iters = 2, driverLimit = 0L).count()
+    DriverFinish.forceDistributed(graft.operators.Hits.hubsAuthsInt(e, iters = 2).count())
     graft.operators.Hits.hubsAuthsInt(e, iters = 2).count()
     assert(spark.sharedState.cacheManager.isEmpty)
   }

@@ -2,6 +2,8 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.operators.DriverFinish
+
 /** Pins [[graft.operators.KCore]]'s peel against hand-computed cores,
   * its cascade behavior (removal propagating over multiple rounds),
   * partitioning independence, the lineage-cut path (checkpointEvery),
@@ -11,27 +13,28 @@ import org.scalatest.funsuite.AnyFunSuite
 class KCoreSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
 
-  /** driverPeelLimit = 0 forces the distributed round loop (the
-    * production default would send every test graph down the driver
+  /** Runs under `budget`, by default budget -1
+    * (`DriverFinish.forceDistributed`): the distributed round loop (the
+    * production budget would send every test graph down the driver
     * path and silently un-cover the rounds). */
   private def run(edges: Seq[(Long, Long)], k: Int, parts: Int = 1,
                   checkpointEvery: Int = 4,
-                  driverPeelLimit: Long = 0L): Map[Long, Long] = {
+                  budget: Long = -1L): Map[Long, Long] = {
     import spark.implicits._
     val e = edges.toDF("src", "dst")
-    graft.operators.KCore
-      .core(if (parts > 1) e.repartition(parts) else e, k,
-        checkpointEvery = checkpointEvery,
-        driverPeelLimit = driverPeelLimit)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    DriverFinish.withBudget(budget) {
+      graft.operators.KCore
+        .core(if (parts > 1) e.repartition(parts) else e, k,
+          checkpointEvery = checkpointEvery)
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    }
   }
 
   /** Both paths on the same input; asserts they agree and returns the
     * (shared) answer. */
   private def runBoth(edges: Seq[(Long, Long)], k: Int): Map[Long, Long] = {
     val dist = run(edges, k)
-    val drv = run(edges, k,
-      driverPeelLimit = graft.operators.KCore.DriverPeelEdgeLimit)
+    val drv = run(edges, k, budget = DriverFinish.BudgetBytes)
     assert(drv === dist, "driver peel diverged from distributed rounds")
     dist
   }
@@ -68,28 +71,27 @@ class KCoreSpec extends AnyFunSuite {
     // endpoints per round (degree-1 ends fall, exposing new ends) — 6
     // rounds to empty, so maxRounds=3 stops mid-cascade. This is the
     // small-m stand-in for `Probe graph`'s harmonic near-critical graph
-    // (one layer per round at any scale). driverPeelLimit = 0 keeps the
+    // (one layer per round at any scale). forceDistributed keeps the
     // DISTRIBUTED loop under test — the driver path cannot stop early.
     val path = (0L until 11L).map(i => i -> (i + 1)).toDF("src", "dst")
     val ex = intercept[IllegalStateException] {
-      graft.operators.KCore.core(path, k = 2, maxRounds = 3,
-        driverPeelLimit = 0L).collect()
+      DriverFinish.forceDistributed(
+        graft.operators.KCore.core(path, k = 2, maxRounds = 3).collect())
     }
     assert(ex.getMessage.contains("superset"))
     assert(ex.getMessage.contains("allowPartial"))
     // opting in returns the partial peel: a SUPERSET of the (empty)
     // true 2-core, still non-empty mid-cascade
-    val partial = graft.operators.KCore
-      .core(path, k = 2, maxRounds = 3, allowPartial = true,
-        driverPeelLimit = 0L)
-      .collect().map(_.getLong(0)).toSet
+    val partial = DriverFinish.forceDistributed(graft.operators.KCore
+      .core(path, k = 2, maxRounds = 3, allowPartial = true)
+      .collect().map(_.getLong(0)).toSet)
     assert(partial.nonEmpty && partial.subsetOf((0L to 11L).toSet))
     // 3 rounds peeled {0,11},{1,10},{2,9}; surviving edges 3-4…7-8, and
     // the output's deg>=2 filter drops the degree-1 ends 3 and 8
     assert(partial === (4L to 7L).toSet)
     // enough rounds converges to the true empty core, no throw
-    assert(graft.operators.KCore.core(path, k = 2, maxRounds = 10,
-      driverPeelLimit = 0L).count() === 0)
+    assert(DriverFinish.forceDistributed(
+      graft.operators.KCore.core(path, k = 2, maxRounds = 10).count()) === 0)
     // the driver path reaches the same fixpoint with NO round budget at
     // all — maxRounds only governs the distributed loop
     assert(graft.operators.KCore.core(path, k = 2, maxRounds = 1).count() === 0)
@@ -115,18 +117,22 @@ class KCoreSpec extends AnyFunSuite {
     val block = (0L until 400L).map(i => (i % 12) -> ((i / 12) % 12))
     val edges = fam ++ block
     for (k <- Seq(2, 4, 6)) {
-      assert(run(edges, k,
-        driverPeelLimit = graft.operators.KCore.DriverPeelEdgeLimit) ===
+      assert(run(edges, k, budget = DriverFinish.BudgetBytes) ===
         run(edges, k), s"paths diverged at k=$k")
     }
     // mid-peel handoff: a 60-edge path peels exactly TWO edges per
-    // round (both free ends), so a limit of 58 forces ≥3 distributed
-    // rounds before the driver finishes the cascade — the regime
-    // boundary itself is pinned equal (final 2-core = the triangle)
+    // round (both free ends), so a budget of 58 edges (16 B each)
+    // forces 3 distributed rounds (63 → 61 → 59 → 57 edges) before the
+    // driver finishes the cascade — the regime boundary itself is
+    // pinned equal (final 2-core = the triangle)
     val pathPlusTri = (0L until 60L).map(i => i -> (i + 1)) ++
       Seq(1000L -> 1001L, 1001L -> 1002L, 1002L -> 1000L)
     val full = run(pathPlusTri, 2)
-    val handoff = run(pathPlusTri, 2, driverPeelLimit = 58L)
+    val (handoff, events) = DriverFinishEvents.capture(spark) {
+      run(pathPlusTri, 2, budget = 58L * 16)
+    }
+    assert(events.map(_.path) == Seq.fill(3)("distributed") :+ "driver",
+      s"expected the hand-off after round 3: $events")
     assert(handoff === full, "mid-peel driver handoff diverged")
     assert(full === Map(1000L -> 2L, 1001L -> 2L, 1002L -> 2L))
     assert(spark.sharedState.cacheManager.isEmpty)

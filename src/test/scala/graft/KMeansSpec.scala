@@ -74,8 +74,8 @@ class KMeansSpec extends AnyFunSuite {
     def m(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getLong(0), r.getLong(1))).toMap
     val driver = KMeans.assignTrajectory(corpus, k = 8, iters = 2)
-    val dist = KMeans.assignTrajectory(corpus, k = 8, iters = 2,
-      driverLimit = -1L)
+    val dist = graft.operators.DriverFinish.forceDistributed(
+      KMeans.assignTrajectory(corpus, k = 8, iters = 2))
     assert(driver.length == 3 && dist.length == 3)
     driver.zip(dist).zipWithIndex.foreach { case ((d, x), i) =>
       assert(m(d) == m(x), s"trajectory diverged at step $i")

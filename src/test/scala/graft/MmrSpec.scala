@@ -2,7 +2,7 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.operators.{ImportanceSample, Mmr}
+import graft.operators.{DriverFinish, ImportanceSample, Mmr}
 
 class MmrSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
@@ -42,15 +42,16 @@ class MmrSpec extends AnyFunSuite {
   test("matches the greedy reference and is invariant to partitioning") {
     val rnd = new scala.util.Random(17)
     val vs = (0L until 80L).map(i => i -> Array.fill(16)(rnd.nextFloat() - 0.5f)).toMap
-    // lim = 0 forces the distributed greedy rounds; the default sends
-    // this size down the r16 driver loop — both must match the
-    // reference bit-for-bit (and therefore each other)
-    for (p <- Seq(1, 9); lim <- Seq(0L, Mmr.DriverCandLimit)) {
+    // budget -1 (forceDistributed) runs the distributed greedy rounds;
+    // the production budget sends this size down the r16 driver loop —
+    // both must match the reference bit-for-bit (and therefore each
+    // other)
+    for (p <- Seq(1, 9); lim <- Seq(-1L, DriverFinish.BudgetBytes)) {
       val df = vs.toSeq.map { case (id, v) => (id, v) }
         .toDF("vec_id", "embedding").repartition(p)
-      val got = Mmr.rerank(df, df.filter($"vec_id" < 3), nCand = 12, k = 4,
-          driverLimit = lim)
-        .collect()
+      val got = DriverFinish.withBudget(lim) {
+          Mmr.rerank(df, df.filter($"vec_id" < 3), nCand = 12, k = 4).collect()
+        }
         .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
         .groupBy(_._1)
       for (q <- 0L until 3L) {
@@ -73,10 +74,11 @@ class MmrSpec extends AnyFunSuite {
       2L -> Array(1.0f, 1.001f, 0.0f),   // near-duplicate of 1
       3L -> Array(1.0f, -1.002f, 0.0f))  // diverse, similar relevance
     val df = vs.toSeq.toDF("vec_id", "embedding")
-    for (lim <- Seq(0L, Mmr.DriverCandLimit)) {
-      val picks = Mmr.rerank(df, df.filter($"vec_id" === 0L), nCand = 3, k = 3,
-          driverLimit = lim)
-        .orderBy($"mmr_rnk").collect().map(_.getLong(2)).toSeq
+    for (lim <- Seq(-1L, DriverFinish.BudgetBytes)) {
+      val picks = DriverFinish.withBudget(lim) {
+          Mmr.rerank(df, df.filter($"vec_id" === 0L), nCand = 3, k = 3)
+            .orderBy($"mmr_rnk").collect()
+        }.map(_.getLong(2)).toSeq
       assert(picks == Seq(1L, 3L, 2L), s"got $picks lim=$lim")
     }
   }

@@ -102,6 +102,18 @@ class RelationalSpec extends AnyFunSuite {
     assert(df.selectExpr("size(long_pairs(ps))").head().getInt(0) == 1)
   }
 
+  test("long_pairs fails on a basket whose pairs exceed the driver-finish budget") {
+    import org.apache.spark.sql.catalyst.expressions.Literal
+    import org.apache.spark.sql.types.{ArrayType, LongType}
+    // 50,000 elements: n(n-1)/2 overflows Int; the bound is checked in
+    // Long before any pair is built
+    val basket = Literal.create((0L until 50000L).toArray,
+      ArrayType(LongType, containsNull = false))
+    val e = intercept[IllegalArgumentException](graft.functions.LongPairs(basket).eval())
+    assert(e.getMessage.contains("50000 elements"), e.getMessage)
+    assert(e.getMessage.contains("1249975000 pairs"), e.getMessage)
+  }
+
   test("q122 collect_set+long_pairs shape ≡ the former distinct self-join") {
     import spark.implicits._
     import org.apache.spark.sql.functions.{count, lit}

@@ -2,7 +2,7 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.operators.RepeatedSequences
+import graft.operators.{DriverFinish, RepeatedSequences}
 
 class RepeatedSequencesSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
@@ -43,13 +43,12 @@ class RepeatedSequencesSpec extends AnyFunSuite {
 
   test("output is invariant to bucket count (distributed path forced)") {
     val df = corpus.toDF("doc_id", "text")
-    // driverLimit = -1 keeps this on the two-phase bucketed sort — the
+    // forceDistributed keeps this on the two-phase bucketed sort — the
     // machinery this test exists to pin (the r16 driver-finish would
     // otherwise absorb a corpus this small)
-    def run(parts: Int) = RepeatedSequences
-      .topRepeats(df, "doc_id", "text", window = 5, topK = 50, numParts = parts,
-        driverLimit = -1L)
-      .collect().map(r => (r.getLong(0), r.getString(1))).toSet
+    def run(parts: Int) = DriverFinish.forceDistributed(RepeatedSequences
+      .topRepeats(df, "doc_id", "text", window = 5, topK = 50, numParts = parts)
+      .collect()).map(r => (r.getLong(0), r.getString(1))).toSet
     val r1 = run(1)
     assert(run(3) == r1 && run(7) == r1)
     // and the driver-finish agrees with the distributed set
@@ -61,16 +60,40 @@ class RepeatedSequencesSpec extends AnyFunSuite {
 
   test("driver-finish ≡ distributed on the sf0.001 corpus") {
     val df = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    def rows(driverLimit: Long) = RepeatedSequences
-      .topRepeats(df, "doc_id", "text", window = 8, topK = 25,
-        driverLimit = driverLimit)
+    def rows() = RepeatedSequences
+      .topRepeats(df, "doc_id", "text", window = 8, topK = 25)
       .collect().map(r => (r.getLong(0), r.getString(1))).toSeq
       .sortBy { case (l, seq) => (-l, seq) }
-    val driver = rows(RepeatedSequences.DriverWindowLimit)
-    val dist = rows(-1L)
+    val driver = rows()
+    val dist = DriverFinish.forceDistributed(rows())
     assert(driver == dist)
     assert(driver.nonEmpty)
     assert(spark.sharedState.cacheManager.isEmpty)
+  }
+
+  test("the driver-finish probe counts UTF-8 bytes, not characters") {
+    // CJK: 3 bytes per character, so a budget of `window` B per
+    // CHARACTER fits the characters and not the bytes the windows hold
+    val vocab = Seq("数据", "去重", "语言", "模型", "训练", "文本",
+      "重复", "序列", "后缀", "数组", "分布", "计算")
+    val docs = (0 until 30).map(i =>
+      i.toLong -> (0 until 10).map(j => vocab((i / 3 + j * 5) % 12)).mkString(" "))
+    val chars = docs.map(_._2.length.toLong).sum
+    val bytes = docs.map(_._2.getBytes("UTF-8").length.toLong).sum
+    val window = 4
+    assert(window * chars < window * bytes)
+    val df = docs.toDF("doc_id", "text")
+    def run(budget: Long) = DriverFinishEvents.capture(spark) {
+      DriverFinish.withBudget(budget)(RepeatedSequences
+        .topRepeats(df, "doc_id", "text", window = window, topK = 20)
+        .collect().map(r => (r.getLong(0), r.getString(1))).toSeq)
+    }
+    val (dist, atChars) = run(window * chars)
+    assert(atChars.map(d => (d.probeBytes, d.path)) == Seq((window * bytes, "distributed")))
+    val (drv, forced) = run(Long.MaxValue)
+    assert(forced.map(_.path) == Seq("driver"))
+    assert(dist.sorted == drv.sorted)
+    assert(dist.map(_._1).max == window.toLong)
   }
 
   test("token_windows ≡ split→posexplode→slice→array_join (fuzz incl. " +

@@ -10,7 +10,11 @@ import org.scalatest.funsuite.AnyFunSuite
 object MainSources {
   /** For each file name, the `path:line` of every non-comment line
     * containing `text`. */
-  def uses(text: String): Map[String, Seq[String]] = {
+  def uses(text: String): Map[String, Seq[String]] = matching(_.contains(text))
+
+  /** For each file name, the `path:line` of every non-comment line
+    * that satisfies `p`. */
+  def matching(p: String => Boolean): Map[String, Seq[String]] = {
     val root = Paths.get("src/main/scala")
     assert(Files.isDirectory(root), s"run from the repo root: ${root.toAbsolutePath}")
     def isComment(line: String) = {
@@ -21,10 +25,10 @@ object MainSources {
       val files = Files.walk(root)
       try files.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
       finally files.close()
-    }.flatMap { (p: Path) =>
-      Files.readAllLines(p).asScala.zipWithIndex.collect {
-        case (line, i) if line.contains(text) && !isComment(line) =>
-          p.getFileName.toString -> s"$p:${i + 1}"
+    }.flatMap { (f: Path) =>
+      Files.readAllLines(f).asScala.zipWithIndex.collect {
+        case (line, i) if p(line) && !isComment(line) =>
+          f.getFileName.toString -> s"$f:${i + 1}"
       }
     }.groupMap(_._1)(_._2)
   }
@@ -49,5 +53,22 @@ class OneEncoderSpec extends AnyFunSuite {
     val uses = Seq("CBZip2OutputStream(", "BZip2CompressorOutputStream(")
       .flatMap(MainSources.uses(_).values.flatten)
     assert(uses.isEmpty, uses.mkString(", "))
+  }
+}
+
+/** Every operator decides driver or distributed through
+  * [[graft.operators.DriverFinish]]: one byte budget, one knob, one
+  * event. Triangles' `DriverWedgeLimit` stays: it bounds CPU work, not
+  * memory. */
+class OneDriverFinishSpec extends AnyFunSuite {
+  test("no operator keeps its own driver cap, limit parameter or env-var switch") {
+    val cap = "Driver\\w*Limit".r
+    val param = "driver\\w*Limit".r
+    val params = MainSources.matching(param.findFirstIn(_).isDefined).values.flatten
+    val inOperators = MainSources.matching { line =>
+      cap.findAllIn(line).exists(_ != "DriverWedgeLimit") || line.contains("sys.env")
+    }.values.flatten.filter(_.contains("/operators/"))
+    val found = params ++ inOperators
+    assert(found.isEmpty, found.mkString(", "))
   }
 }

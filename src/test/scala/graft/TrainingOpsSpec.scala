@@ -271,20 +271,21 @@ class TrainingOpsSpec extends AnyFunSuite {
     assert(got.size == 30, "every vector gets a verdict")
     val kept = got.filter(!_._2).keys.toSet
     assert(kept == Set(0L, 1L, 2L), s"expected one rep per bundle, got $kept")
-    // the distributed path (driverLimit = -1 forces it) must agree
-    val dist = graft.operators.SemDeDup.dropVerdicts(corpus, k = 3,
-        threshold = 0.99, driverLimit = -1L)
-      .collect().map(r => (r.getLong(0), r.getBoolean(2))).toMap
+    // the distributed path (forceDistributed) must agree
+    val dist = graft.operators.DriverFinish.forceDistributed(
+        graft.operators.SemDeDup.dropVerdicts(corpus, k = 3, threshold = 0.99)
+          .collect())
+      .map(r => (r.getLong(0), r.getBoolean(2))).toMap
     assert(dist == got)
   }
 
   test("semdedup: driver-finish ≡ distributed on the sf0.001 embeddings") {
     val corpus = spark.read.parquet(s"$sf/embeddings.parquet")
-    def m(lim: Long) = graft.operators.SemDeDup
-      .dropVerdicts(corpus, k = 8, threshold = 0.35, driverLimit = lim)
+    def m() = graft.operators.SemDeDup
+      .dropVerdicts(corpus, k = 8, threshold = 0.35)
       .collect().map(r => (r.getLong(0), (r.getLong(1), r.getBoolean(2)))).toMap
-    val drv = m(graft.operators.ProductQuantize.DriverVecLimit)
-    val dist = m(-1L)
+    val drv = m()
+    val dist = graft.operators.DriverFinish.forceDistributed(m())
     assert(drv == dist)
     assert(drv.values.exists(_._2), "fixture should drop at least one vector")
     assert(spark.sharedState.cacheManager.isEmpty)
@@ -524,23 +525,23 @@ class TrainingOpsSpec extends AnyFunSuite {
 
   test("perceptron: driver-finish ≡ distributed epochs on the sf0.001 corpus") {
     import spark.implicits._
-    import graft.operators.Perceptron
+    import graft.operators.{DriverFinish, Perceptron}
     val docs = spark.read.parquet(s"$sf/documents.parquet")
     val label = when($"lang" === "en", 1L).otherwise(-1L)
     def wmap(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
     val wDriver = wmap(Perceptron.learn(docs, "doc_id", "text", label,
       nBuckets = 64, epochs = 3))
-    val wDist = wmap(Perceptron.learn(docs, "doc_id", "text", label,
-      nBuckets = 64, epochs = 3, driverLimit = -1L))
+    val wDist = wmap(DriverFinish.forceDistributed(Perceptron.learn(docs,
+      "doc_id", "text", label, nBuckets = 64, epochs = 3)))
     assert(wDriver == wDist)
     assert(wDriver.nonEmpty)
     // the fused learn+eval path must equal learn-then-evaluate
     val (_, evDriver) = Perceptron.learnAndEvaluate(docs, "doc_id", "text",
       label, nBuckets = 64, epochs = 3)
     val evDist = Perceptron.evaluate(docs, "doc_id", "text", label,
-      Perceptron.learn(docs, "doc_id", "text", label, nBuckets = 64,
-        epochs = 3, driverLimit = -1L), nBuckets = 64)
+      DriverFinish.forceDistributed(Perceptron.learn(docs, "doc_id", "text",
+        label, nBuckets = 64, epochs = 3)), nBuckets = 64)
     def evRows(df: org.apache.spark.sql.DataFrame) =
       df.orderBy($"doc_id").collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSeq

@@ -2,7 +2,7 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.operators.Triangles
+import graft.operators.{DriverFinish, Triangles}
 
 class TrianglesSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
@@ -34,10 +34,11 @@ class TrianglesSpec extends AnyFunSuite {
       (6, 7), (7, 8), (8, 9), (9, 6), (6, 8),
       (2, 1), (3, 3), (1, 2))
     val exp = brute(edges)
-    // distributed joins forced (driverLimit = 0); GraphDriverFinishSpec
-    // pins the r16 driver path equal
-    val got = Triangles.perNode(edges.toDF("src", "dst"), driverLimit = 0L)
-      .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2), r.getDouble(3))).toMap
+    // distributed joins forced; GraphDriverFinishSpec pins the r16
+    // driver path equal
+    val got = DriverFinish.forceDistributed(
+        Triangles.perNode(edges.toDF("src", "dst")).collect())
+      .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2), r.getDouble(3))).toMap
     assert(got.keySet == exp.keySet)
     for ((n, (d, t)) <- exp) {
       val (gd, gt, gc) = got(n)
@@ -54,8 +55,9 @@ class TrianglesSpec extends AnyFunSuite {
 
   test("triangle-free graph yields all zeros") {
     val path = Seq[(Long, Long)]((1, 2), (2, 3), (3, 4))
-    val got = Triangles.perNode(path.toDF("src", "dst"), driverLimit = 0L)
-      .collect().map(r => r.getLong(0) -> r.getLong(2)).toMap
+    val got = DriverFinish.forceDistributed(
+        Triangles.perNode(path.toDF("src", "dst")).collect())
+      .map(r => r.getLong(0) -> r.getLong(2)).toMap
     assert(got.values.forall(_ == 0L) && got.size == 4)
   }
 }
