@@ -1,5 +1,7 @@
 package graft.functions
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
@@ -21,7 +23,8 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * Failure semantics follow the reference's per-record failure rows
   * (`revision_differ.py:167-170`): a kernel exception yields an
-  * `error` string, never a dead job.
+  * `error` string, never a dead job. Fatal errors (an
+  * `OutOfMemoryError`, say) are not a row's failure and propagate.
   */
 case class WikiDiffSafe(left: Expression, right: Expression)
     extends BinaryExpression with CodegenFallback {
@@ -42,7 +45,7 @@ case class WikiDiffSafe(left: Expression, right: Expression)
     // and op content is emitted as UTF8String directly
     try InternalRow(WikiDiffSafe.opsData(a.asInstanceOf[UTF8String], b.asInstanceOf[UTF8String]), null)
     catch {
-      case e: Throwable => InternalRow(
+      case NonFatal(e) => InternalRow(
         new GenericArrayData(Array.empty[Any]),
         UTF8String.fromString(s"${e.getClass.getSimpleName}: ${e.getMessage}"))
     }

@@ -6,14 +6,14 @@ import org.apache.spark.sql.functions._
 import scala.collection.mutable.ArrayBuffer
 
 /** Shared machinery for the DISTRIBUTED bitmap block-grid sweep — the
-  * dense-vocabulary regime past the driver sweep's collect/broadcast
-  * bounds ([[JaccardPairs.blockSweepPairs]] and
+  * dense-vocabulary regime past the driver sweep's budget
+  * ([[JaccardPairs.blockSweepPairs]] and
   * [[Containment.blockSweepPairs]] are thin wrappers differing only in
   * the per-pair emit). No corpus rows ever reach the driver:
   *
   *  - the sorted vocabulary (small by the dense-regime premise,
-  *    guarded by [[JaccardPairs.MaxBlockSweepVocab]]) is collected and
-  *    broadcast as the bit-index;
+  *    guarded by [[JaccardPairs.MaxBlockSweepVocab]], checked by a LIMIT
+  *    one entry past it) is collected and broadcast as the bit-index;
   *  - signatures build DISTRIBUTED in one shuffle keyed by doc, then
   *    are snapshotted with an eager `localCheckpoint` so the
   *    compute-heavy upstream (scan → shingle) executes exactly once —
@@ -38,8 +38,8 @@ private[graft] object BlockGrid {
     * exposes no block-size knob to a caller): past the cap the
     * effective block grows beyond `targetBlockBytes`, trading per-task
     * memory (still exactly two blocks) for a bounded replication
-    * factor — at the 512 MB-broadcast dispatch boundary this engages
-    * only past ~256 GB of signature volume. */
+    * factor — at the default 64 MB block this engages only past
+    * ~256 GB of signature volume. */
   val MaxBlocks = 4096
 
   /** One capped-grid attribution line per executor JVM per DISTINCT
@@ -83,9 +83,10 @@ private[graft] object BlockGrid {
     val cached = sh.persist()
     val (sigs, nDocs, nWords) =
       try {
-        val vocab = cached.select($"shingle").distinct().as[String].collect().sorted
+        val vocab = cached.select($"shingle").distinct()
+          .limit(JaccardPairs.MaxBlockSweepVocab.toInt + 1).as[String].collect().sorted
         require(vocab.length <= JaccardPairs.MaxBlockSweepVocab,
-          s"block sweep vocabulary ${vocab.length} exceeds ${JaccardPairs.MaxBlockSweepVocab}")
+          s"block sweep vocabulary exceeds ${JaccardPairs.MaxBlockSweepVocab}")
         val w = math.max((vocab.length + 63) >>> 6, 1)
         val bIdx = spark.sparkContext.broadcast(vocab.zipWithIndex.toMap)
         // Eager localCheckpoint: materializes the signature table while the

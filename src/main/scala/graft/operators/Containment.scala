@@ -22,18 +22,14 @@ import org.apache.spark.sql.functions._
   */
 object Containment {
 
-  def pairs(sh: DataFrame, threshold: Double,
-            maxBitmapVocab: Int = JaccardPairs.DefaultMaxBitmapVocab,
-            maxBitmapDocs: Long = JaccardPairs.DefaultMaxBitmapDocs,
-            maxSweepPairOps: Long = JaccardPairs.DefaultMaxSweepPairOps): DataFrame =
-    pairsFromStats(sh, JaccardPairs.probe(sh), threshold, maxBitmapVocab,
-      maxBitmapDocs, maxSweepPairOps)
+  def pairs(sh: DataFrame, threshold: Double): DataFrame =
+    pairsFromStats(sh, JaccardPairs.probe(sh), threshold)
 
   /** As [[pairs]], but with a precomputed [[JaccardPairs.DispatchStats]]
     * (cost-modeled regime choice, same reasoning as
     * [[JaccardPairs.pairsFromStats]]: sweep word-ops vs exact Σ df²
-    * inverted-index join rows, bounded by broadcast memory rather than
-    * a hard vocabulary cap). The dense path builds its sweep from the
+    * inverted-index join rows, bounded by [[DriverFinish]]'s budget
+    * rather than a hard vocabulary cap). The dense path builds its sweep from the
     * already-collected rows — no second collect of the corpus.
     *
     * Deliberately NO banded-LSH third regime here (unlike
@@ -48,12 +44,10 @@ object Containment {
     * filtered candidate scheme keyed on the SMALL side — not a
     * Jaccard-curve sampler. */
   def pairsFromStats(sh: DataFrame, stats: JaccardPairs.DispatchStats,
-      threshold: Double,
-      maxBitmapVocab: Int = JaccardPairs.DefaultMaxBitmapVocab,
-      maxBitmapDocs: Long = JaccardPairs.DefaultMaxBitmapDocs,
-      maxSweepPairOps: Long = JaccardPairs.DefaultMaxSweepPairOps): DataFrame =
-    if (stats.useSweep(maxBitmapVocab, maxBitmapDocs, maxSweepPairOps))
-      sweepFromRaw(sh.sparkSession, stats.raw, threshold)
+      threshold: Double): DataFrame =
+    if (stats.useSweep)
+      DriverSweep.sweep(sh.sparkSession, stats.raw, containmentEmit(threshold))
+        .toDF("doc_in", "doc_out", "containment")
     else if (stats.useBlockSweep)
       blockSweepPairs(sh, threshold, stats.nDocs)
     else invertedIndexPairs(sh, threshold)
@@ -101,48 +95,5 @@ object Containment {
     val rev = common.select($"db".as("doc_in"), $"da".as("doc_out"),
       ($"common" / $"nb").as("containment"))
     fwd.union(rev).filter($"containment" >= threshold)
-  }
-
-  /** Broadcast-bitmap sweep (dense regime); None when the collected
-    * data reveals the vocabulary/corpus/pair budget is exceeded. */
-  def bitmapPairsGuarded(sh: DataFrame, threshold: Double,
-      maxVocab: Int, maxDocs: Long, maxPairOps: Long): Option[DataFrame] = {
-    val spark = sh.sparkSession
-    import spark.implicits._
-    val raw = sh.select($"doc_id".cast("long"), $"shingle")
-      .as[(Long, String)].collect()
-    val vocabN = raw.iterator.map(_._2).toSet.size
-    if (vocabN > maxVocab) return None
-    val nWords = math.max((vocabN + 63) >>> 6, 1)
-    val nDocs = raw.iterator.map(_._1).toSet.size
-    if (nDocs > maxDocs) return None
-    val n = nDocs.toDouble
-    if (n * n / 2 * nWords > maxPairOps.toDouble) return None
-    Some(sweepFromRaw(spark, raw, threshold))
-  }
-
-  /** Bitmap-encode the collected set rows and launch the distributed
-    * directed triangular sweep (guards already applied by callers). */
-  private def sweepFromRaw(spark: org.apache.spark.sql.SparkSession,
-      raw: Array[(Long, String)], threshold: Double): DataFrame = {
-    import spark.implicits._
-    val vocab = raw.map(_._2).distinct.sorted
-    val idx = vocab.zipWithIndex.toMap
-    val nWords = math.max((vocab.length + 63) >>> 6, 1)
-    val byDoc = raw.groupBy(_._1).toArray.sortBy(_._1)
-    val ids = byDoc.map(_._1)
-    val bits = byDoc.map { case (_, rows) =>
-      val b = new Array[Long](nWords)
-      rows.foreach { case (_, s) =>
-        val i = idx(s); b(i >>> 6) |= 1L << (i & 63)
-      }
-      b
-    }
-    val counts = bits.map(_.map(java.lang.Long.bitCount).sum)
-    // shared i-major triangular sweep (DriverSweep's Scaladoc has the
-    // loop-order argument; j-major tiling was measured worse and rejected); both directed rows of the unordered
-    // pair emit from the same comparison, as before
-    DriverSweep.sweep(spark, ids, bits, counts, containmentEmit(threshold))
-      .toDF("doc_in", "doc_out", "containment")
   }
 }

@@ -18,22 +18,25 @@ case class DriverFinishDecision(op: String, probeBytes: Long,
 /** The driver-finish policy shared by every operator that can finish a
   * small input on the driver: PageRank, Hits, LabelProp,
   * ConnectedComponents, KCore, Triangles, q121, Mmr, Perceptron,
-  * BpeTrain, RepeatedSequences, ProductQuantize, KMeans and SemDeDup.
-  * Each has an iterative or pairwise phase whose Spark jobs cost pure
-  * scheduling overhead on a small input; when the input fits, one
-  * bounded collect and a primitive-array loop on the driver replace
-  * them, and each operator pins its driver path bit-identical to its
-  * distributed one in its specs. Inputs over the budget never collect:
-  * at 100 TB the distributed formulation runs unchanged.
+  * BpeTrain, RepeatedSequences, ProductQuantize, KMeans, SemDeDup and
+  * the shingle-pair family (JaccardPairs' probe and bitmap sweep,
+  * which Containment shares, and MinHashLsh's signature sweep: q19,
+  * q20, q41, q85, q108, q111, q113). Each has an iterative or pairwise
+  * phase whose Spark jobs cost pure scheduling overhead on a small
+  * input; when the input fits, one bounded collect and a
+  * primitive-array loop on the driver replace them, and each operator
+  * pins its driver path bit-identical to its distributed one in its
+  * specs. Inputs over the budget never collect in full: at 100 TB the
+  * distributed formulation runs unchanged.
   *
   * The budget. One limit in bytes of driver memory, [[BudgetBytes]] =
   * 64 MiB: two longs per edge for 4M edges, the sizing the first graph
   * finishes were chosen for. Each caller converts its probe to bytes
   * with a bytes-per-unit stated at the call (16 B per edge, 24 B per
-  * feature row, `16 + 8·dims` per vector, …), so one number bounds
-  * every finish. The operators' other driver state (dense indexes,
-  * CSR arrays, per-node scores) is linear in the same input, so a
-  * finish holds a small multiple of its probe at most.
+  * feature row, `16 + 8·dims` per vector, 128 B per shingle row, …),
+  * so one number bounds every finish. The operators' other driver
+  * state (dense indexes, CSR arrays, per-node scores) is linear in the
+  * same input, so a finish holds a small multiple of its probe at most.
   *
   * The probes, one of three forms per caller:
   *  - [[fitsCount]]: an exact `count()` of a frame the caller already

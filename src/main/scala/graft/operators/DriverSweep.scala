@@ -6,8 +6,8 @@ import scala.collection.mutable.ArrayBuffer
 
 /** The distributed triangular sweep over a driver-collected,
   * broadcast bitmap table — shared by [[JaccardPairs]] and
-  * [[Containment]]'s dense-regime paths (the under-512 MB twin of
-  * [[BlockGrid]]).
+  * [[Containment]]'s dense-regime paths (the twin of [[BlockGrid]]
+  * for a table that fits [[DriverFinish]]'s budget).
   *
   * Loop order: I-MAJOR — each task owns round-robin row indices i and
   * streams all rows j > i per owned row, with the owned row's bitmap
@@ -32,7 +32,7 @@ import scala.collection.mutable.ArrayBuffer
   * 10× pinned corpus (≈50k dense docs, ~1k signature words) the sweep
   * is ~10-17 s on 32 threads; at 100× (≈500k dense docs) the same
   * exact semantics are n²/2 ≈ 1.25×10¹¹ pairs ≈ 10³ s — correct,
-  * distributed (BlockGrid past the broadcast bound), but the COST IS
+  * distributed (BlockGrid past the driver budget), but the COST IS
   * THE CONTRACT. Since round 14 the dispatch takes the crossover
   * ITSELF: past [[JaccardPairs.DefaultMaxExactSweepOps]] (≈10⁵ dense
   * docs at a 4096-bit vocabulary) [[JaccardPairs.pairsFromStats]]
@@ -41,6 +41,15 @@ import scala.collection.mutable.ArrayBuffer
   * designed e≈1.0-1.5, SCALING.md) verified exactly; that is the
   * 100 TB recipe, no longer a footnote a caller must remember. */
 private[operators] object DriverSweep {
+
+  /** Pair-comparison budget of the quadratic all-pairs paths (this
+    * bitmap sweep, [[MinHashLsh.sweepPairs]] and
+    * [[Similarity.exactNearDupPairs]]): n²/2 pairs, each a word-AND,
+    * slice compare or FMA pass, pinned on one stage. 4e10 ops is
+    * ~1-2 s across 32 cores → ~35k docs at a 4096-bit vocabulary,
+    * ~100k MinHash signatures at k = 8, ~35k vectors at 64 dims. It
+    * bounds CPU work; driver memory is [[DriverFinish]]'s. */
+  val DefaultMaxSweepPairOps = 40000000000L
 
   trait PairEmit extends Serializable {
     def apply(idA: Long, cntA: Int, idB: Long, cntB: Int, common: Int,
@@ -51,10 +60,24 @@ private[operators] object DriverSweep {
     def canSkip(cntA: Int, cntB: Int): Boolean = false
   }
 
+  /** Bitmap-encode collected `(doc_id, shingle)` set rows over their
+    * sorted vocabulary and sweep every pair through `emit`. */
   def sweep(spark: org.apache.spark.sql.SparkSession,
-      ids: Array[Long], bits: Array[Array[Long]], counts: Array[Int],
-      emit: PairEmit): Dataset[(Long, Long, Double)] = {
+      raw: Array[(Long, String)], emit: PairEmit): Dataset[(Long, Long, Double)] = {
     import spark.implicits._
+    val vocab = raw.map(_._2).distinct.sorted
+    val idx = vocab.zipWithIndex.toMap
+    val nWords = math.max((vocab.length + 63) >>> 6, 1)
+    val byDoc = raw.groupBy(_._1).toArray.sortBy(_._1)
+    val ids = byDoc.map(_._1)
+    val bits = byDoc.map { case (_, rows) =>
+      val b = new Array[Long](nWords)
+      rows.foreach { case (_, s) =>
+        val i = idx(s); b(i >>> 6) |= 1L << (i & 63)
+      }
+      b
+    }
+    val counts = bits.map(_.map(java.lang.Long.bitCount).sum)
     val bIds = spark.sparkContext.broadcast(ids)
     val bBits = spark.sparkContext.broadcast(bits)
     val bCounts = spark.sparkContext.broadcast(counts)

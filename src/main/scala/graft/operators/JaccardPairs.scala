@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Exact n-gram-Jaccard near-duplicate pairs, with two physical plans
@@ -23,43 +23,24 @@ import org.apache.spark.sql.functions._
   *   other, so the inverted index degenerates to the full quadratic
   *   pair set while paying a huge shuffle to discover it (measured at
   *   sf0.1: 931 distinct shingles, 5 000 docs, 36.5M joined rows →
-  *   12.5M pairs). `bitmapPairs` instead encodes each document as a
+  *   12.5M pairs). The bitmap sweep instead encodes each document as a
   *   `ceil(|V|/64)`-word bitmask over the sorted vocabulary, ships the
   *   (tiny) signature table as a broadcast, and computes
   *   popcount(A AND B) per pair in a shuffle-free sweep — per-pair
   *   cost drops from hash-join rows to ~16 ANDs, and the only cluster
   *   traffic is one broadcast.
   *
-  * `pairs` dispatches on one probe aggregation (row count + distinct
-  * docs + distinct shingles). At 100 TB a natural corpus always takes
+  * `pairs` dispatches on one [[probe]] (distinct docs, distinct
+  * shingles, Σ df²). At 100 TB a natural corpus always takes
   * the inverted-index path; the bitmap path exists because the dense
   * regime is exactly where the inverted index is pathological.
   */
 object JaccardPairs {
 
-  /** Max vocabulary for the bitmap path: 4 096 bits = 64 words keeps
-    * a million-doc signature table within a ~0.5 GB broadcast. */
+  /** Vocabulary (4 096 bits = 64 words per signature) under which the
+    * driver sweep is taken within [[DriverSweep.DefaultMaxSweepPairOps]]
+    * whatever the cross-regime cost model says. */
   val DefaultMaxBitmapVocab = 4096
-
-  /** Max documents for the bitmap path (broadcast-size guard). */
-  val DefaultMaxBitmapDocs = 1000000L
-
-  /** Pair-comparison budget for the sweep: the triangular sweep does
-    * ~n²/2 · ceil(|V|/64) word-ANDs pinned on one stage; the doc-count
-    * guard alone is quadratic-blind (1M docs at 64 words would be
-    * 3×10¹³ ops). 4e10 ops ≈ ~1-2s across 32 cores → ~35k docs at the
-    * full 4096-bit vocabulary, ~140k at a 256-bit one. Checked on
-    * exact numbers after the collect. */
-  val DefaultMaxSweepPairOps = 40000000000L
-
-  /** Max rows the dispatcher will pull to the driver before deciding
-    * (~40 B/row → ≤ ~400 MB transient). */
-  val MaxCollectRows = 10000000L
-
-  /** Broadcast-size cap for the sweep's signature table: the bitmap
-    * matrix is n·ceil(|V|/64)·8 bytes — THIS, not a fixed vocabulary
-    * count, is what actually bounds the dense path. */
-  val MaxSweepBroadcastBytes = 512L * 1024 * 1024
 
   /** Vocabulary cap for the DISTRIBUTED block sweep: the sorted-vocab
     * index broadcast is ~40 B/entry → ≤ ~40 MB. A dense regime with a
@@ -105,15 +86,15 @@ object JaccardPairs {
     * why a hard vocabulary cap is the wrong guard: a dense corpus
     * whose vocabulary outgrows the cap fell back to an inverted index
     * that was quadratically WORSE than the sweep it rejected. Choose
-    * by cost, bounded by broadcast memory.
+    * by cost, bounded by [[DriverFinish]]'s budget.
     *
-    * `raw` is null iff `overLimit` (the probe hit the collect cap; the
+    * `raw` is null when the probe's rows did not fit the budget; the
     * regime statistics are then computed DISTRIBUTED — two linear
     * aggregations — so a huge corpus still gets a cost-modeled
-    * decision instead of a blind fallback). */
+    * decision instead of a blind fallback. */
   final class DispatchStats private[operators] (
       private[operators] val raw: Array[(Long, String)],
-      val overLimit: Boolean,
+      spark: SparkSession,
       distNDocs: Long, distVocabN: Long, distSumDf2: Double) {
     val nDocs: Long =
       if (raw != null) raw.iterator.map(_._1).toSet.size.toLong else distNDocs
@@ -129,15 +110,14 @@ object JaccardPairs {
       else distSumDf2
     val invCost: Double = sumDf2 * InvRowCostWordOps
 
-    /** Driver broadcast-sweep eligibility (needs the collected rows). */
-    def useSweep(maxBitmapVocab: Int, maxBitmapDocs: Long,
-        maxSweepPairOps: Long): Boolean = {
-      if (raw == null) return false
-      val classicDense = vocabN <= maxBitmapVocab &&
-        sweepOps <= maxSweepPairOps.toDouble
-      nDocs <= maxBitmapDocs &&
-        sweepBytes <= MaxSweepBroadcastBytes.toDouble &&
-        (classicDense || sweepOps <= invCost)
+    /** Driver-sweep eligibility: the rows are on the driver, the sweep
+      * is classic-dense or the cheaper regime, and its bitmap table
+      * fits [[DriverFinish]]'s budget (decision `shingle_sweep`). */
+    def useSweep: Boolean = {
+      val classicDense = vocabN <= DefaultMaxBitmapVocab &&
+        sweepOps <= DriverSweep.DefaultMaxSweepPairOps
+      raw != null && (classicDense || sweepOps <= invCost) &&
+        DriverFinish.fits("shingle_sweep", spark, sweepBytes.toLong)
     }
 
     /** Dense regime: the exact sweep is the cheaper formulation by the
@@ -148,8 +128,8 @@ object JaccardPairs {
     val dense: Boolean = nDocs > 0 && vocabN > 0 && sweepOps <= invCost
 
     /** Distributed block-sweep eligibility: the dense regime PAST the
-      * driver sweep's collect/broadcast bounds, while the vocabulary
-      * index still fits a broadcast. The EXACT-ops budget
+      * driver sweep's budget, while the vocabulary index still fits a
+      * broadcast. The EXACT-ops budget
       * ([[DefaultMaxExactSweepOps]]) is applied by the dispatch, not
       * here — past it the dense regime switches semantics to
       * [[bandedVerifiedPairs]] rather than falling back to the
@@ -159,40 +139,41 @@ object JaccardPairs {
       dense && vocabN <= MaxBlockSweepVocab
   }
 
-  /** One probe per shingle frame: LIMIT-bounded count, then either a
-    * collect of the set rows (small corpus — enables the driver
-    * sweep) or two linear aggregations for the same statistics
-    * (large corpus — enables the cost model without moving rows).
-    * The frame is persisted across the passes so the upstream (scan,
-    * shingling) computes once. Callers composing several pair
-    * operators over the SAME shingle frame should probe once and pass
-    * the stats to each `pairsFromStats` — the probe is the dominant
-    * fixed cost at small scale (measured +0.5 s on q41 at sf0.1 when
-    * re-run per operator). */
+  /** One probe per shingle frame: the set rows through
+    * [[DriverFinish.collectBounded]] (decision `shingle_probe`; a
+    * small corpus enables the driver sweep), else two linear
+    * aggregations for the same statistics (a large corpus gets the
+    * cost model without moving rows). The frame is persisted across
+    * the passes so the upstream (scan, shingling) computes once.
+    * Callers composing several pair operators over the SAME shingle
+    * frame should probe once and pass the stats to each
+    * `pairsFromStats` — the probe is the dominant fixed cost at small
+    * scale (measured +0.5 s on q41 at sf0.1 when re-run per
+    * operator). */
   def probe(sh: DataFrame): DispatchStats = {
     val spark = sh.sparkSession
     import spark.implicits._
     val cached = sh.persist()
     try {
-      if (cached.limit((MaxCollectRows + 1).toInt).count() > MaxCollectRows) {
-        val nDocs = cached.select($"doc_id").distinct().count()
-        val r = cached.groupBy($"shingle").count()
-          .agg(count(lit(1)), sum(($"count" * $"count").cast("double"))).head
-        new DispatchStats(null, true, nDocs, r.getLong(0), r.getDouble(1))
-      } else
-        new DispatchStats(
-          cached.select($"doc_id".cast("long"), $"shingle")
-            .as[(Long, String)].collect(), false, -1L, -1L, 0.0)
+      // 128 B per row: the collected row with its boxed id and bigram
+      // string, then the (id, shingle) tuple the stats keep
+      DriverFinish.collectBounded("shingle_probe",
+          cached.select($"doc_id".cast("long"), $"shingle"), 128L) match {
+        case Some(rows) => new DispatchStats(
+          rows.map(r => (r.getLong(0), r.getString(1))), spark, -1L, -1L, 0.0)
+        case None =>
+          val nDocs = cached.select($"doc_id").distinct().count()
+          val r = cached.groupBy($"shingle").count()
+            .agg(count(lit(1)), sum(($"count" * $"count").cast("double"))).head
+          // the sum is null on an empty frame
+          new DispatchStats(null, spark, nDocs, r.getLong(0),
+            if (r.isNullAt(1)) 0.0 else r.getDouble(1))
+      }
     } finally cached.unpersist(false)
   }
 
-  def pairs(sh: DataFrame, threshold: Double,
-            maxBitmapVocab: Int = DefaultMaxBitmapVocab,
-            maxBitmapDocs: Long = DefaultMaxBitmapDocs,
-            maxSweepPairOps: Long = DefaultMaxSweepPairOps,
-            maxExactSweepOps: Double = DefaultMaxExactSweepOps): DataFrame =
-    pairsFromStats(sh, probe(sh), threshold, maxBitmapVocab,
-      maxBitmapDocs, maxSweepPairOps, maxExactSweepOps)
+  def pairs(sh: DataFrame, threshold: Double): DataFrame =
+    pairsFromStats(sh, probe(sh), threshold)
 
   /** As [[pairs]], but with a precomputed [[DispatchStats]] (no probe,
     * no persist — the decision and the sweep's input both come from
@@ -202,7 +183,7 @@ object JaccardPairs {
     * that KNOW the corpus is large can call invertedIndexPairs
     * directly and skip even the stats.
     *
-    * Dense-regime ladder: driver sweep (fits one broadcast) → block
+    * Dense-regime ladder: driver sweep (fits the budget) → block
     * grid (distributed, exact) → [[bandedVerifiedPairs]] (past
     * `maxExactSweepOps` — exact values, LSH-curve recall; also the
     * dense fallback when the vocabulary outgrows the block grid's
@@ -210,18 +191,15 @@ object JaccardPairs {
     * quadratically-worse inverted index). */
   def pairsFromStats(sh: DataFrame, stats: DispatchStats,
       threshold: Double,
-      maxBitmapVocab: Int = DefaultMaxBitmapVocab,
-      maxBitmapDocs: Long = DefaultMaxBitmapDocs,
-      maxSweepPairOps: Long = DefaultMaxSweepPairOps,
       maxExactSweepOps: Double = DefaultMaxExactSweepOps): DataFrame = {
     // the exact-ops budget gates BOTH exact dense plans (driver sweep
     // and block grid): the crossover is about the n²/2·words work
     // product, not which plan carries it — a 500k-doc corpus is ~10³ s
     // of exact sweep wherever it runs (SCALING.md r12)
     val exactAffordable = stats.sweepOps <= maxExactSweepOps
-    if (exactAffordable &&
-        stats.useSweep(maxBitmapVocab, maxBitmapDocs, maxSweepPairOps))
-      sweepFromRaw(sh.sparkSession, stats.raw, threshold)
+    if (exactAffordable && stats.useSweep)
+      DriverSweep.sweep(sh.sparkSession, stats.raw, jaccardEmit(threshold))
+        .toDF("doc_a", "doc_b", "jaccard")
     else if (exactAffordable && stats.useBlockSweep)
       blockSweepPairs(sh, threshold, stats.nDocs)
     else if (stats.dense)
@@ -312,40 +290,11 @@ object JaccardPairs {
       .select($"doc_a", $"doc_b", $"jaccard")
   }
 
-  /** Broadcast-bitmap formulation (dense regime): one collect of the
-    * (small) set table builds vocabulary + signatures driver-side,
-    * then a single shuffle-free quadratic sweep over a broadcast. The
-    * collect is the same data volume the broadcast needs anyway. */
-  def bitmapPairs(sh: DataFrame, threshold: Double): DataFrame =
-    bitmapPairsGuarded(sh, threshold, Int.MaxValue, Long.MaxValue,
-      Long.MaxValue).get
-
-  /** As [[bitmapPairs]], but gives up (None) when the collected data
-    * reveals the vocabulary or corpus is too large for broadcast, or
-    * the triangular sweep (n²/2 · words) would blow the pair-ops
-    * budget. */
-  def bitmapPairsGuarded(sh: DataFrame, threshold: Double,
-      maxVocab: Int, maxDocs: Long,
-      maxPairOps: Long = DefaultMaxSweepPairOps): Option[DataFrame] = {
-    val spark = sh.sparkSession
-    import spark.implicits._
-    val raw = sh.select($"doc_id".cast("long"), $"shingle")
-      .as[(Long, String)].collect()
-    val vocabN = raw.iterator.map(_._2).toSet.size
-    if (vocabN > maxVocab) return None
-    val nWords = math.max((vocabN + 63) >>> 6, 1)
-    val nDocs = raw.iterator.map(_._1).toSet.size
-    if (nDocs > maxDocs) return None
-    val n = nDocs.toDouble
-    if (n * n / 2 * nWords > maxPairOps.toDouble) return None
-    Some(sweepFromRaw(spark, raw, threshold))
-  }
-
   /** DISTRIBUTED bitmap sweep over a block grid — the dense regime
-    * past the driver sweep's collect/broadcast bounds. Grid machinery
-    * (vocab broadcast, distributed signature build behind an eager
-    * lineage cut, block replication, one task per unordered block
-    * pair) lives in [[BlockGrid.sweep]]; this wrapper supplies the
+    * past the driver sweep's budget. Grid machinery (vocab broadcast,
+    * distributed signature build behind an eager lineage cut, block
+    * replication, one task per unordered block pair) lives in
+    * [[BlockGrid.sweep]]; this wrapper supplies the
     * symmetric Jaccard emit. Output is the same pair set as every
     * other formulation (DedupOpsSpec pins it against the inverted
     * join). */
@@ -369,33 +318,4 @@ object JaccardPairs {
       override def canSkip(na: Int, nb: Int): Boolean =
         math.min(na, nb).toDouble < threshold * math.max(na, nb)
     }
-
-  /** Bitmap-encode the collected set rows and launch the distributed
-    * triangular sweep (callers have already applied their guards). */
-  private def sweepFromRaw(spark: org.apache.spark.sql.SparkSession,
-      raw: Array[(Long, String)], threshold: Double): DataFrame = {
-    val vocab = raw.map(_._2).distinct.sorted
-    val idx = vocab.zipWithIndex.toMap
-    val nWords = math.max((vocab.length + 63) >>> 6, 1)
-    val byDoc = raw.groupBy(_._1).toArray.sortBy(_._1)
-    val ids = byDoc.map(_._1)
-    val bits = byDoc.map { case (_, rows) =>
-      val b = new Array[Long](nWords)
-      rows.foreach { case (_, s) =>
-        val i = idx(s); b(i >>> 6) |= 1L << (i & 63)
-      }
-      b
-    }
-    val counts = bits.map(_.map(java.lang.Long.bitCount).sum)
-    buildSweep(spark, ids, bits, counts, threshold)
-  }
-
-  private def buildSweep(spark: org.apache.spark.sql.SparkSession,
-      ids: Array[Long], bits: Array[Array[Long]], counts: Array[Int],
-      threshold: Double): DataFrame =
-    // shared i-major triangular sweep (DriverSweep's Scaladoc has the
-    // loop-order argument; j-major tiling was measured worse and rejected); idA is the lower stream index, so
-    // (doc_a, doc_b) ordering is unchanged
-    DriverSweep.sweep(spark, ids, bits, counts, jaccardEmit(threshold))
-      .toDF("doc_a", "doc_b", "jaccard")
 }

@@ -25,37 +25,21 @@ import org.apache.spark.sql.functions._
   *   join+agg shuffles; the sweep does 8 long-compares per pair with
   *   zero exchanges.
   *
-  * `pairs` dispatches on a LIMIT-bounded probe against a
-  * pair-comparison budget: the sweep is quadratic (~n²/2 · k long
-  * compares pinned on one stage), so the guard caps that work product,
-  * not a bare doc count — and the probe stops counting at budget+1
-  * rows instead of scanning a huge corpus just to dispatch.
+  * `pairs` sweeps when the signature rows come back from one
+  * [[DriverFinish.collectBounded]] (decision `minhash_sweep`) and
+  * stay under [[sweepDocBudget]]: the sweep is quadratic (~n²/2 · k
+  * long compares pinned on one stage), so that bound caps the work
+  * product, not a bare doc count. Otherwise the band join runs.
   */
 object MinHashLsh {
-
-  /** Pair-comparison budget for the sweep path. 4e10 compares is ~1-2s
-    * across 32 cores → ~100k docs at k=8. (The implied broadcast is
-    * k·8 B/doc ≈ 6.4 MB at that size — far under broadcast limits, so
-    * the ops budget is the binding constraint.) */
-  val DefaultMaxSweepPairOps = 40000000000L
 
   /** Max docs the sweep admits under a pair-ops budget: n²/2 · k <=
     * budget. */
   def sweepDocBudget(k: Int, maxPairOps: Long): Long =
     math.sqrt(2.0 * maxPairOps / math.max(k, 1)).toLong
 
-  def pairs(sigWide: DataFrame, k: Int, minEst: Double,
-            maxSweepPairOps: Long = DefaultMaxSweepPairOps): DataFrame = {
-    val maxDocs = sweepDocBudget(k, maxSweepPairOps)
-    val probeLimit = math.min(maxDocs + 1, Int.MaxValue.toLong).toInt
-    // persist across probe + collect so the signature build (shingle,
-    // hash, min-agg) computes once
-    val cached = sigWide.persist()
-    try {
-      if (cached.limit(probeLimit).count() <= maxDocs) sweepPairs(cached, k, minEst)
-      else bandJoinPairs(sigWide, k, minEst)
-    } finally cached.unpersist(false)
-  }
+  def pairs(sigWide: DataFrame, k: Int, minEst: Double): DataFrame =
+    sweepPairs(sigWide, k, minEst).getOrElse(bandJoinPairs(sigWide, k, minEst))
 
   /** Distributed band-join formulation (scale path). */
   def bandJoinPairs(sigWide: DataFrame, k: Int, minEst: Double): DataFrame = {
@@ -70,16 +54,25 @@ object MinHashLsh {
       .filter($"est_jaccard" >= minEst)
   }
 
-  /** Broadcast triangular-sweep formulation (small-corpus path). The
-    * hex slices are parsed to longs driver-side (fixed-width lowercase
-    * hex ⇒ string equality ≡ numeric equality) so the per-pair work is
-    * k long compares. */
-  def sweepPairs(sigWide: DataFrame, k: Int, minEst: Double): DataFrame = {
+  /** Broadcast triangular-sweep formulation (small-corpus path), or
+    * None when the signatures do not fit the driver budget or pass
+    * [[sweepDocBudget]]. The hex slices are parsed to longs driver-side
+    * (fixed-width lowercase hex ⇒ string equality ≡ numeric equality)
+    * so the per-pair work is k long compares. */
+  def sweepPairs(sigWide: DataFrame, k: Int, minEst: Double): Option[DataFrame] = {
     val spark = sigWide.sparkSession
     import spark.implicits._
     val cols = col("doc_id").cast("long") +:
       (0 until k).map(i => col(s"h$i"))
-    val raw = sigWide.select(cols: _*).collect()
+    // ~64 B per row (the row, its value array, the boxed id) and ~88 B
+    // per slice (a hex string, then the parsed long and its broadcast
+    // copy); past sweepDocBudget the band join runs, as Triangles does
+    // past its wedge limit
+    val rows = DriverFinish.collectBounded("minhash_sweep",
+        sigWide.select(cols: _*), 64L + 88L * k)
+      .filter(_.length <= sweepDocBudget(k, DriverSweep.DefaultMaxSweepPairOps))
+      .getOrElse(return None)
+    val raw = rows
       .map(r => (r.getLong(0), Array.tabulate(k)(i =>
         // unsigned: a 16-hex-digit slice with the top bit set must not
         // throw — equality semantics are identical either way
@@ -91,7 +84,7 @@ object MinHashLsh {
     val bIds = spark.sparkContext.broadcast(ids)
     val bSigs = spark.sparkContext.broadcast(sigs)
     val slices = spark.sparkContext.defaultParallelism
-    spark.range(ids.length.toLong).as[Long]
+    Some(spark.range(ids.length.toLong).as[Long]
       .repartition(slices)
       .mapPartitions { iter =>
         val dIds = bIds.value; val dSigs = bSigs.value
@@ -110,6 +103,6 @@ object MinHashLsh {
           }
           out.iterator
         }
-      }.toDF("doc_a", "doc_b", "est_jaccard")
+      }.toDF("doc_a", "doc_b", "est_jaccard"))
   }
 }

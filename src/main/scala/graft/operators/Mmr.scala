@@ -49,7 +49,7 @@ object Mmr {
       .persist()
     try {
       // 32 B per candidate: query id, neighbor id, relevance, rank (the
-      // embedding fetch that follows is one row per distinct candidate)
+      // embedding fetch that follows decides its own bytes)
       if (DriverFinish.integral(cand.schema("query_id").dataType) &&
           DriverFinish.integral(cand.schema("neighbor_id").dataType) &&
           DriverFinish.fitsCount("mmr", cand, 32L)) {
@@ -117,7 +117,9 @@ object Mmr {
   /** In-memory greedy over the collected candidates, or None when a
     * NULL rel/embedding shows up (the distributed plan has defined
     * NULL window semantics; the driver loop declines rather than
-    * replicate them). */
+    * replicate them) or the candidates' embeddings do not fit
+    * [[DriverFinish]]'s budget (decision `mmr_embeddings`, 16 + 8·dims
+    * B per distinct candidate). */
   private def driverRerank(corpus: DataFrame, cand: DataFrame, k: Int,
       idCol: String, embCol: String): Option[DataFrame] = {
     import org.apache.spark.sql.Row
@@ -129,32 +131,20 @@ object Mmr {
       col("neighbor_id").cast("long"), col("rel"), col("rnk")).collect()
     if (rows.exists(r => r.isNullAt(0) || r.isNullAt(1) || r.isNullAt(2)))
       return None
-    // embeddings for the distinct candidate ids only (bounded by the
-    // collected row count), fetched via one broadcast semi-join
+    // embeddings for the distinct candidate ids only, fetched via one
+    // broadcast semi-join; duplicate corpus ids or ragged widths leave
+    // the distributed plan to define the result
     val nbrIds = rows.map(_.getLong(1)).distinct
     val idFrame = s.createDataFrame(
       java.util.Arrays.asList(nbrIds.map(Row(_)): _*),
       StructType(Seq(StructField("__id", LongType, nullable = false))))
-    val embRows = corpus
+    val fetch = corpus
       .select(col(idCol).cast("long").as("__id"), col(embCol).as("__e"))
       .join(broadcast(idFrame), Seq("__id"), "left_semi")
-      .collect()
-    if (embRows.exists(_.isNullAt(1))) return None
-    val embOf = new java.util.HashMap[Long, Array[Double]](embRows.length * 2)
-    embRows.foreach { r =>
-      val seq = r.getSeq[Any](1)
-      val arr = new Array[Double](seq.length)
-      var i = 0
-      while (i < arr.length) {
-        arr(i) = seq(i) match {
-          case f: java.lang.Float  => f.toDouble   // exact widening
-          case d: java.lang.Double => d
-          case _                   => return None
-        }
-        i += 1
-      }
-      embOf.put(r.getLong(0), arr)
-    }
+    val embs = ProductQuantize.collectVecs("mmr_embeddings", fetch, "__id", "__e", -1)
+      .getOrElse(return None)
+    val embOf = new java.util.HashMap[Long, Array[Double]](embs.length * 2)
+    embs.foreach { case (id, e) => embOf.put(id, e) }
     // strict ascending-index fold — the FloatDot kernel's exact form
     def dot(a: Array[Double], b: Array[Double]): Double = {
       var acc = 0.0; var i = 0
@@ -163,7 +153,7 @@ object Mmr {
     }
     def sim(a: Long, b: Long): Double = {
       val ea = embOf.get(a); val eb = embOf.get(b)
-      if (ea == null || eb == null || ea.length != eb.length)
+      if (ea == null || eb == null)
         return Double.NaN  // unreachable: candidates come from corpus
       dot(ea, eb) / (math.sqrt(dot(ea, ea)) * math.sqrt(dot(eb, eb)))
     }

@@ -132,13 +132,9 @@ object Similarity {
       .select(col("query_id"), col("neighbor_id"), col("cosine"), col("rnk").cast("long").as("rnk"))
   }
 
-  /** Pair-comparison budget for the exact near-dup sweep: the all-pairs
-    * path does ~n²/2 dot products (each `dims` FMAs) in one stage; cap
-    * that work product, not a bare doc count. 4e10 multiply-adds is
-    * ~1-2s across 32 cores → ~35k vectors at 64 dims. */
-  val DefaultMaxSweepPairOps = 40000000000L
-
-  /** Max vectors the exact sweep admits under a pair-ops budget. */
+  /** Max vectors the exact sweep admits under a pair-ops budget: the
+    * all-pairs path does ~n²/2 dot products (each `dims` FMAs) in one
+    * stage, so the bound caps that work product, not a bare count. */
   def sweepVecBudget(dims: Int, maxPairOps: Long): Long =
     math.sqrt(2.0 * maxPairOps / math.max(dims, 1)).toLong
 
@@ -160,7 +156,7 @@ object Similarity {
     * budget+1 rows instead of scanning everything just to dispatch. */
   def nearDupPairs(corpus: DataFrame, threshold: Double,
                    dims: Int, nPlanes: Int = 12, probeHamming: Int = 1,
-                   maxSweepPairOps: Long = DefaultMaxSweepPairOps,
+                   maxSweepPairOps: Long = DriverSweep.DefaultMaxSweepPairOps,
                    idCol: String = "vec_id", embCol: String = "embedding"): DataFrame = {
     val maxVecs = sweepVecBudget(dims, maxSweepPairOps)
     val probeLimit = math.min(maxVecs + 1, Int.MaxValue.toLong).toInt

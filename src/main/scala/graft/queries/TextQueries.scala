@@ -69,7 +69,7 @@ object TextQueries {
 
   /** One regime-dispatch probe per (session, corpus): q19/q41/q85/q111
     * all run pair operators over the SAME bigram-shingle frame, and the
-    * probe (persist + bounded count + collect) is the dominant fixed
+    * probe (persist + one bounded collect) is the dominant fixed
     * cost at small scale — re-running it per operator cost q41 +0.5 s
     * at sf0.1 (r8 verdict). Single-entry memo: the sweeps this serves
     * (Verify, Bench) run one (session, dir) at a time, and the entry is

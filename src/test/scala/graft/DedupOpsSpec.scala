@@ -3,6 +3,8 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.operators.DriverFinish
+
 /** The regime-dispatched dedup operators must produce identical
   * results on BOTH physical paths — the correctness gate only ever
   * exercises the dense/small path on the synthetic corpus, so the
@@ -20,7 +22,9 @@ class DedupOpsSpec extends AnyFunSuite {
   test("JaccardPairs: bitmap sweep equals inverted-index join exactly") {
     import spark.implicits._
     val sh = shingles
-    val a = graft.operators.JaccardPairs.bitmapPairs(sh, 0.5)
+    val st = graft.operators.JaccardPairs.probe(sh)
+    assert(st.useSweep)
+    val a = graft.operators.JaccardPairs.pairsFromStats(sh, st, 0.5)
       .orderBy($"doc_a", $"doc_b").collect().toSeq
     val b = graft.operators.JaccardPairs.invertedIndexPairs(sh, 0.5)
       .orderBy($"doc_a", $"doc_b").collect().toSeq
@@ -37,7 +41,7 @@ class DedupOpsSpec extends AnyFunSuite {
     val sliceCols = (0 until 4).map(i => min(substring($"m1", i * 8 + 1, 8)).as(s"h$i")) ++
       (0 until 4).map(i => min(substring($"m2", i * 8 + 1, 8)).as(s"h${i + 4}"))
     val sigWide = hs.groupBy($"doc_id").agg(sliceCols.head, sliceCols.tail: _*)
-    val a = graft.operators.MinHashLsh.sweepPairs(sigWide, 8, 0.25)
+    val a = graft.operators.MinHashLsh.sweepPairs(sigWide, 8, 0.25).get
       .orderBy($"doc_a", $"doc_b").collect().toSeq
     val b = graft.operators.MinHashLsh.bandJoinPairs(sigWide, 8, 0.25)
       .orderBy($"doc_a", $"doc_b").collect().toSeq
@@ -49,8 +53,9 @@ class DedupOpsSpec extends AnyFunSuite {
   test("Containment: bitmap sweep equals inverted-index join exactly") {
     import spark.implicits._
     val sh = shingles
-    val a = graft.operators.Containment.bitmapPairsGuarded(sh, 0.8,
-        Int.MaxValue, Long.MaxValue, Long.MaxValue).get
+    val st = graft.operators.JaccardPairs.probe(sh)
+    assert(st.useSweep)
+    val a = graft.operators.Containment.pairsFromStats(sh, st, 0.8)
       .orderBy($"doc_in", $"doc_out").collect().toSeq
     val b = graft.operators.Containment.invertedIndexPairs(sh, 0.8)
       .orderBy($"doc_in", $"doc_out").collect().toSeq
@@ -140,7 +145,7 @@ class DedupOpsSpec extends AnyFunSuite {
     assert(graft.operators.Similarity.sweepVecBudget(64, 40000000000L) == 35355L)
   }
 
-  test("MinHashLsh: zero pair-ops budget routes to the distributed band join") {
+  test("MinHashLsh: an over-budget signature table routes to the distributed band join") {
     import spark.implicits._
     val sh = shingles
     val hs = sh.withColumn("m1", md5($"shingle"))
@@ -148,9 +153,13 @@ class DedupOpsSpec extends AnyFunSuite {
     val sliceCols = (0 until 4).map(i => min(substring($"m1", i * 8 + 1, 8)).as(s"h$i")) ++
       (0 until 4).map(i => min(substring($"m2", i * 8 + 1, 8)).as(s"h${i + 4}"))
     val sigWide = hs.groupBy($"doc_id").agg(sliceCols.head, sliceCols.tail: _*)
-    val dispatched = graft.operators.MinHashLsh
-      .pairs(sigWide, 8, 0.25, maxSweepPairOps = 1)
-      .orderBy($"doc_a", $"doc_b").collect().toSeq
+    assert(DriverFinish.forceDistributed(
+      graft.operators.MinHashLsh.sweepPairs(sigWide, 8, 0.25)).isEmpty)
+    val (routed, events) = DriverFinishEvents.capture(spark) {
+      DriverFinish.forceDistributed(graft.operators.MinHashLsh.pairs(sigWide, 8, 0.25))
+    }
+    assert(events.map(e => e.op -> e.path) == Seq("minhash_sweep" -> "distributed"))
+    val dispatched = routed.orderBy($"doc_a", $"doc_b").collect().toSeq
     val band = graft.operators.MinHashLsh.bandJoinPairs(sigWide, 8, 0.25)
       .orderBy($"doc_a", $"doc_b").collect().toSeq
     assert(dispatched.nonEmpty)
@@ -160,23 +169,28 @@ class DedupOpsSpec extends AnyFunSuite {
 
   test("JaccardPairs/Containment: over-cap vocabulary still sweeps when cheaper (cost model)") {
     import spark.implicits._
-    val sh = shingles
-    // force the classic vocabulary cap to fail (vocab ≫ 4): the old
-    // dispatcher fell back to the inverted index here even when the
-    // dense sharing made that quadratically worse — the cost model
-    // must keep the sweep and produce identical results
-    val viaCost = graft.operators.JaccardPairs
-      .pairs(sh, 0.5, maxBitmapVocab = 4)
+    // 30 documents over one 4 200-shingle vocabulary (past the classic
+    // 4 096 cap), each missing a different 1/30 of it: every pair
+    // shares ~93 %. The old dispatcher fell back to the inverted index
+    // past the cap even when the dense sharing made that quadratically
+    // worse — the cost model must keep the sweep, with identical results
+    val sh = (for (d <- 0L until 30L; w <- 0 until 4200 if w % 30 != d)
+      yield (d, s"w$w")).toDF("doc_id", "shingle")
+    val st = graft.operators.JaccardPairs.probe(sh)
+    assert(st.vocabN > graft.operators.JaccardPairs.DefaultMaxBitmapVocab)
+    assert(st.sweepOps <= st.invCost && st.useSweep)
+    val viaCost = graft.operators.JaccardPairs.pairsFromStats(sh, st, 0.5)
       .orderBy($"doc_a", $"doc_b").collect().toSeq
     val inv = graft.operators.JaccardPairs.invertedIndexPairs(sh, 0.5)
       .orderBy($"doc_a", $"doc_b").collect().toSeq
     assert(viaCost.nonEmpty)
     assert(viaCost.map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))) ==
            inv.map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))))
-    val cCost = graft.operators.Containment.pairs(sh, 0.8, maxBitmapVocab = 4)
+    val cCost = graft.operators.Containment.pairsFromStats(sh, st, 0.8)
       .orderBy($"doc_in", $"doc_out").collect().toSeq
     val cInv = graft.operators.Containment.invertedIndexPairs(sh, 0.8)
       .orderBy($"doc_in", $"doc_out").collect().toSeq
+    assert(cCost.nonEmpty)
     assert(cCost.map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))) ==
            cInv.map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))))
   }
@@ -184,39 +198,36 @@ class DedupOpsSpec extends AnyFunSuite {
   test("JaccardPairs: budget/cost-model dispatch contract pinned on stats") {
     import spark.implicits._
     val sh = shingles
-    // a zero pair-ops budget still hard-rejects the explicitly guarded
-    // sweep entry point — its contract is the budget, not the model
-    assert(graft.operators.JaccardPairs
-      .bitmapPairsGuarded(sh, 0.5, Int.MaxValue, Long.MaxValue, maxPairOps = 1)
-      .isEmpty)
-    // the dispatcher treats the budget as the CLASSIC dense guard only:
-    // with maxSweepPairOps = 1 the classic route is off, and the
-    // decision must equal the raw cross-regime cost comparison. On this
-    // dense corpus the sweep is cheaper, so it is KEPT despite the
-    // exhausted classic budget (the r8 cost-model contract).
+    // on this dense corpus the sweep is the cheaper regime and is taken
     val st = graft.operators.JaccardPairs.probe(sh)
-    assert(!st.overLimit)
     assert(st.sweepOps <= st.invCost)
-    assert(st.useSweep(Int.MaxValue, Long.MaxValue, 1L))
+    assert(st.useSweep)
+    // the bitmap table is a DriverFinish decision: over the budget, no
+    // driver sweep
+    val (fits, events) = DriverFinishEvents.capture(spark) {
+      DriverFinish.forceDistributed(st.useSweep)
+    }
+    assert(!fits)
+    assert(events.map(e => (e.op, e.probeBytes, e.path)) ==
+      Seq(("shingle_sweep", st.sweepBytes.toLong, "distributed")))
     // …and the sweep-favored dispatch is value-identical to the join
-    val dispatched = graft.operators.JaccardPairs
-      .pairs(sh, 0.5, maxSweepPairOps = 1)
+    val dispatched = graft.operators.JaccardPairs.pairs(sh, 0.5)
       .orderBy($"doc_a", $"doc_b").collect().toSeq
     val inv = graft.operators.JaccardPairs.invertedIndexPairs(sh, 0.5)
       .orderBy($"doc_a", $"doc_b").collect().toSeq
     assert(dispatched.map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))) ==
            inv.map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))))
     // a sparse corpus (every shingle unique → invCost ≈ rows, sweep
-    // still quadratic) must flip to the inverted index once the
-    // classic budget is gone — the budget override is not a no-op
-    val sparse = (0L until 256L).map(d => (d, s"uniq$d"))
-      .toDF("doc_id", "shingle")
-    val spSt = graft.operators.JaccardPairs.probe(sparse)
+    // still quadratic) past the classic vocabulary: the cost model
+    // picks the inverted index
+    def unique(n: Long) = (0L until n).map(d => (d, s"uniq$d")).toDF("doc_id", "shingle")
+    val spSt = graft.operators.JaccardPairs.probe(unique(5000L))
+    assert(spSt.vocabN > graft.operators.JaccardPairs.DefaultMaxBitmapVocab)
     assert(spSt.invCost < spSt.sweepOps)
-    assert(!spSt.useSweep(Int.MaxValue, Long.MaxValue, 1L))
-    // with the default budget the same corpus is classic-dense again
-    assert(spSt.useSweep(Int.MaxValue, Long.MaxValue,
-      graft.operators.JaccardPairs.DefaultMaxSweepPairOps))
+    assert(!spSt.useSweep)
+    // under the classic vocabulary the same shape sweeps regardless
+    val smSt = graft.operators.JaccardPairs.probe(unique(256L))
+    assert(smSt.invCost < smSt.sweepOps && smSt.useSweep)
   }
 
   test("JaccardPairs: distributed block sweep equals inverted join (multi-block)") {
@@ -232,13 +243,13 @@ class DedupOpsSpec extends AnyFunSuite {
     assert(a.nonEmpty)
     assert(a.map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))) ==
            b.map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))))
-    // dispatch contract: with the driver sweep ineligible (doc cap 1)
-    // on this dense corpus, the cost model must route to the block
-    // sweep, never the inverted join it costed out
+    // dispatch contract: with the driver sweep over the budget on this
+    // dense corpus, the cost model must route to the block sweep, never
+    // the inverted join it costed out
     val st = graft.operators.JaccardPairs.probe(sh)
-    assert(!st.useSweep(Int.MaxValue, 1L, Long.MaxValue) && st.useBlockSweep)
-    val dispatched = graft.operators.JaccardPairs
-      .pairsFromStats(sh, st, 0.5, maxBitmapDocs = 1L)
+    assert(st.useBlockSweep)
+    val dispatched = DriverFinish.forceDistributed(
+        graft.operators.JaccardPairs.pairsFromStats(sh, st, 0.5))
       .orderBy($"doc_a", $"doc_b").collect().toSeq
     assert(dispatched.map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))) ==
            b.map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))))
@@ -263,14 +274,14 @@ class DedupOpsSpec extends AnyFunSuite {
              b.map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))), s"threshold $t")
     }
     // auto-dispatch contract (the r12 footnote promoted to code): on a
-    // dense corpus with the exact-sweep budget exhausted and the driver
-    // sweep ineligible, pairsFromStats must route to the banded path
+    // dense corpus with the exact-sweep budget exhausted, pairsFromStats
+    // must route to the banded path
     // itself — never the inverted index the cost model rejected, and
     // never an un-budgeted exact sweep
     val st = graft.operators.JaccardPairs.probe(sh)
     assert(st.dense && st.useBlockSweep)
     val dispatched = graft.operators.JaccardPairs
-      .pairsFromStats(sh, st, 0.5, maxBitmapDocs = 1L, maxExactSweepOps = 0.0)
+      .pairsFromStats(sh, st, 0.5, maxExactSweepOps = 0.0)
       .orderBy($"doc_a", $"doc_b").collect().toSeq
     val inv = graft.operators.JaccardPairs.invertedIndexPairs(sh, 0.5)
       .orderBy($"doc_a", $"doc_b").collect().toSeq

@@ -5,6 +5,7 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.graft.ListenerBusBridge
 import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.{DriverFinish, DriverFinishDecision}
@@ -35,11 +36,22 @@ object DriverFinishEvents {
   * decision reaches a listener with its probe and budget. */
 class DriverFinishSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
+  val sf = "/root/testdata/sf0.001"
 
   /** Rows (sorted) and column names and types of a frame. */
   private def shape(df: DataFrame) =
     (df.collect().map(_.toString).sorted.toSeq,
       df.schema.map(f => f.name -> f.dataType))
+
+  /** q20's 8-slice MinHash signatures of a shingle frame. */
+  private def minhashSigs(sh: DataFrame): DataFrame = {
+    import spark.implicits._
+    val hs = sh.withColumn("m1", md5($"shingle"))
+      .withColumn("m2", md5(concat(lit("x"), $"shingle")))
+    val slices = (0 until 4).map(i => min(substring($"m1", i * 8 + 1, 8)).as(s"h$i")) ++
+      (0 until 4).map(i => min(substring($"m2", i * 8 + 1, 8)).as(s"h${i + 4}"))
+    hs.groupBy($"doc_id").agg(slices.head, slices.tail: _*)
+  }
 
   test("forceDistributed runs the distributed path on an empty edge set and an empty vector corpus") {
     import spark.implicits._
@@ -61,7 +73,18 @@ class DriverFinishSpec extends AnyFunSuite {
       "kmeans" -> (() => KMeans.assignTrajectory(corpus, k = 2, iters = 1).last),
       "semdedup" -> (() => SemDeDup.dropVerdicts(corpus, k = 2, threshold = 0.9)),
       "pq_codebooks" -> (() => ProductQuantize.codebooks(corpus, m = 2, dsub = 2,
-        ksub = 2, iters = 1)))
+        ksub = 2, iters = 1))) ++ {
+      // the shingle-pair family, called directly: q19/q111 memoize the
+      // probe per (session, dir), so a second registry run decides nothing
+      val none = Seq.empty[(Long, String)].toDF("doc_id", "shingle")
+      val docs = spark.read.parquet(s"$sf/documents.parquet")
+        .select($"doc_id", explode(expr("shingles(text, 2)")).as("shingle"))
+      Seq(none, docs).flatMap { sh => Seq(
+        "shingle_probe" -> (() => JaccardPairs.pairs(sh, 0.5)),
+        "shingle_probe" -> (() => Containment.pairs(sh, 0.8)),
+        "minhash_sweep" -> (() => MinHashLsh.pairs(minhashSigs(sh), k = 8, minEst = 0.25)))
+      }
+    }
     for ((op, run) <- ops) {
       val (dist, events) = DriverFinishEvents.capture(spark) {
         DriverFinish.forceDistributed(shape(run()))
@@ -74,7 +97,6 @@ class DriverFinishSpec extends AnyFunSuite {
   }
 
   test("each decision reaches a listener: q69 and q104 take the driver path at sf0.001") {
-    val sf = "/root/testdata/sf0.001"
     for (q <- Seq("q69_pagerank", "q104_repeated_sequences")) {
       def run() = SparkEntry.queries(q)(spark, sf).collect().map(_.toString).toSeq
       val (drv, onDriver) = DriverFinishEvents.capture(spark)(run())

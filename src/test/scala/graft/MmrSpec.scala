@@ -83,6 +83,35 @@ class MmrSpec extends AnyFunSuite {
     }
   }
 
+  test("the candidates' embedding fetch is a driver-budget decision of its own") {
+    val rnd = new scala.util.Random(17)
+    val vs = (0L until 80L).map(i => i -> Array.fill(16)(rnd.nextFloat() - 0.5f)).toMap
+    val df = vs.toSeq.toDF("vec_id", "embedding")
+    val distinct = (0L until 3L).flatMap { q =>
+      vs.keys.filter(_ != q).toSeq.sortBy(id => (-cos(vs(q), vs(id)), id)).take(12)
+    }.distinct.size
+    val embBytes = 16L + 8L * 16 // id + array header, 16 doubles
+    def run(budget: Long) = DriverFinishEvents.capture(spark) {
+      DriverFinish.withBudget(budget) {
+        Mmr.rerank(df, df.filter($"vec_id" < 3), nCand = 12, k = 4).collect()
+          .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3))).toSeq.sorted
+      }
+    }
+    val (full, fullEvents) = run(DriverFinish.BudgetBytes)
+    assert(fullEvents.map(e => (e.op, e.probeBytes, e.path)) == Seq(
+      ("mmr", 36L * 32, "driver"), ("mmr_embeddings", distinct * embBytes, "driver")))
+    // 36 candidates at 32 B fit 2 000 B; their embeddings do not, so the
+    // distributed rounds run instead
+    assert(distinct * embBytes > 2000L)
+    val (small, smallEvents) = run(2000L)
+    assert(smallEvents.map(e => e.op -> e.path) ==
+      Seq("mmr" -> "driver", "mmr_embeddings" -> "distributed"))
+    assert(small == full)
+    for (q <- 0L until 3L)
+      assert(full.filter(_._1 == q).map(t => (t._2, t._3, t._4)) ==
+        refMmr(vs, q, nCand = 12, k = 4), s"query $q")
+  }
+
   test("systematic resampling: copy counts hit the grid exactly") {
     val rows = (0L until 200L).map(i => (i, (i % 7).toDouble / 7.0))
     for (p <- Seq(1, 8)) {

@@ -71,4 +71,33 @@ class OneDriverFinishSpec extends AnyFunSuite {
     val found = params ++ inOperators
     assert(found.isEmpty, found.mkString(", "))
   }
+
+  /** Each `.collect()` under `operators/` outside DriverFinish, by file,
+    * with what bounds it without the budget. */
+  private val listedCollects = Seq(
+    "BlockGrid.scala" -> "the vocabulary index: a LIMIT one past MaxBlockSweepVocab",
+    "BpeTrain.scala" -> "a round's top pair: limit(1)",
+    "BpeTrain.scala" -> "the texts, after the bpe_train decision",
+    "Decontamination.scala" -> "benchmark n-grams: a LIMIT one past maxBroadcastGrams",
+    "HeavyHitters.scala" -> "the Misra-Gries summaries: a LIMIT one past maxCandidates",
+    "Mmr.scala" -> "the candidates, after the mmr decision",
+    "Pca.scala" -> "the covariance upper triangle: dims²/2 rows",
+    "Perceptron.scala" -> "an epoch's weight deltas: at most nBuckets rows",
+    "Perceptron.scala" -> "the features, after the perceptron decision",
+    "PrefixSum.scala" -> "the range-cut sample: SamplePerPart rows per partition",
+    "ProductQuantize.scala" -> "codebooks: a LIMIT one past 65,536 rows",
+    "ProductQuantize.scala" -> "coarse centroids: a LIMIT one past 4,096 rows",
+    "RepeatedSequences.scala" -> "the texts, after the repeated_sequences decision",
+    "RepeatedSequences.scala" -> "bucket bounds: two windows per bucket")
+
+  test("every operator collect sits in DriverFinish or at a listed site") {
+    val collects = MainSources.uses(".collect()").map { case (file, lines) =>
+      file -> lines.count(_.contains("/operators/"))
+    }.filter { case (file, n) => n > 0 && file != "DriverFinish.scala" }
+    val listed = listedCollects.groupMapReduce(_._1)(_ => 1)(_ + _)
+    assert(collects == listed)
+    val caps = Seq("MaxCollectRows", "MaxSweepBroadcastBytes")
+      .flatMap(MainSources.uses(_).values.flatten)
+    assert(caps.isEmpty, caps.mkString(", "))
+  }
 }
