@@ -37,19 +37,12 @@ object MediaWiki {
   def siteinfoNamespaces(spark: SparkSession, path: String): Map[Int, String] = {
     val conf = spark.sessionState.newHadoopConf()
     val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(conf)
-    val codec = new org.apache.hadoop.io.compress.CompressionCodecFactory(conf).getCodec(p)
-    val raw = fs.open(p)
-    val in = if (codec == null) raw: java.io.InputStream
-             else codec.createInputStream(raw)
-    try {
-      // lenient: a truncated head still yields whatever parsed (the
-      // caller treats the map as best-effort dimension data); the skip
-      // planner uses the strict/complete form instead
-      val (head, _) = graft.sources.XmlFields.readHeadUntil(
-        in, "</siteinfo>", 256 * 1024)
-      graft.sources.XmlFields.siteinfoNamespacesFromHead(head)
-    } finally in.close()
+    // lenient: a truncated head still yields whatever parsed (the
+    // caller treats the map as best-effort dimension data); the skip
+    // planner uses the strict/complete form instead
+    val (head, _) = graft.sources.XmlFields.siteinfoHead(p.getFileSystem(conf),
+      new org.apache.hadoop.io.compress.CompressionCodecFactory(conf), p)
+    graft.sources.XmlFields.siteinfoNamespacesFromHead(head)
   }
 
   /** Inverse lookup (lowercased name → key) for normalizeTitle.

@@ -309,19 +309,22 @@ object ProductQuantize {
     else df.select(col("sub"), col("cent_id").cast(idType).as("cent_id"), col("cent"))
   }
 
-  /** Bounded collect of a books frame into per-sub (cent_id, cent)
-    * arrays; None when it doesn't look like a (sub, cent_id, cent)
-    * codebook under the m·ksub size class, so callers decline to the
+  /** Budget-bounded collect of a books frame into per-sub (cent_id,
+    * cent) arrays; None when it doesn't look like a (sub, cent_id,
+    * cent) codebook or passes the budget, so callers decline to the
     * distributed join. */
-  private def collectBooks(books: DataFrame, m: Int):
+  private def collectBooks(books: DataFrame, m: Int, dsub: Int):
       Option[Array[Array[(Long, Array[Double])]]] = {
     val sch = books.schema
     if (!Seq("sub", "cent_id", "cent").forall(f => sch.fieldNames.contains(f)))
       return None
     if (!DriverFinish.integral(sch("cent_id").dataType)) return None
-    val rows = books.select(col("sub").cast("int"), col("cent_id").cast("long"),
-      col("cent")).limit(65537).collect()
-    if (rows.length > 65536) return None
+    // 16 + 8·dsub B per centroid: sub, cent_id and the array header,
+    // then the centroid as doubles
+    val rows = DriverFinish.collectBounded("pq_books",
+        books.select(col("sub").cast("int"), col("cent_id").cast("long"), col("cent")),
+        16L + 8L * dsub)
+      .getOrElse(return None)
     val out = Array.fill(m)(List.newBuilder[(Long, Array[Double])])
     var i = 0
     while (i < rows.length) {
@@ -353,10 +356,11 @@ object ProductQuantize {
   def encode(corpus: DataFrame, books: DataFrame, m: Int, dsub: Int,
              idCol: String = "vec_id", embCol: String = "embedding"): DataFrame = {
     // driver-finish (r16): same argmax, in memory, when both sides fit
-    // (books are m·ksub rows by construction — the bound guards
-    // misuse). Works against ANY books frame incl. parquet round-trips.
+    // the byte budget (books are m·ksub rows by construction — the
+    // budget guards misuse). Works against ANY books frame incl.
+    // parquet round-trips.
     val drv = for {
-      bs <- collectBooks(books, m)
+      bs <- collectBooks(books, m, dsub)
       vecs <- collectVecs("pq_encode", corpus, idCol, embCol, m * dsub)
     } yield {
       import org.apache.spark.sql.Row
@@ -415,9 +419,8 @@ object ProductQuantize {
     // already small, stays on the WindowGroupLimit-pruned window.
     if (probe == 1) {
       val drv = for {
-        cs <- collectCents(cents)
-        dims = if (cs.isEmpty) -1 else cs(0)._2.length
-        vecs <- collectVecs("pq_coarse_assign", df, idCol, embCol, dims)
+        vecs <- collectVecs("pq_coarse_assign", df, idCol, embCol, -1)
+        cs <- collectCents(cents, if (vecs.isEmpty) 0 else vecs(0)._2.length)
       } yield {
         import org.apache.spark.sql.Row
         import org.apache.spark.sql.types._
@@ -464,25 +467,24 @@ object ProductQuantize {
     }
   }
 
-  /** Bounded collect of a coarse-centroid frame (coarse_id, __cent) —
-    * nCentroids rows by construction; None on anything irregular
-    * (size, types, NULLs, mixed dims). */
-  private def collectCents(cents: DataFrame): Option[Array[(Long, Array[Double])]] = {
+  /** Budget-bounded collect of a coarse-centroid frame (coarse_id,
+    * __cent) of `dims`-wide centroids; None on anything irregular
+    * (budget, types, NULLs, other dims). */
+  private def collectCents(cents: DataFrame, dims: Int): Option[Array[(Long, Array[Double])]] = {
     val sch = cents.schema
     if (!Seq("coarse_id", "__cent").forall(f => sch.fieldNames.contains(f)))
       return None
     if (!DriverFinish.integral(sch("coarse_id").dataType)) return None
-    val rows = cents.select(col("coarse_id").cast("long"), col("__cent"))
-      .limit(4097).collect()
-    if (rows.length > 4096) return None
+    // 16 + 8·dims B per centroid, as collectVecs counts a vector
+    val rows = DriverFinish.collectBounded("pq_coarse_cents",
+        cents.select(col("coarse_id").cast("long"), col("__cent")), 16L + 8L * dims)
+      .getOrElse(return None)
     val out = new Array[(Long, Array[Double])](rows.length)
-    var dims = -1
     var i = 0
     while (i < out.length) {
       val r = rows(i)
       if (r.isNullAt(0) || r.isNullAt(1)) return None
       val seq = r.getSeq[Any](1)
-      if (dims < 0) dims = seq.length
       if (seq.length != dims) return None
       val cent = new Array[Double](dims)
       var j = 0

@@ -128,7 +128,7 @@ final class Bz2OutputStream(out: OutputStream, level: Int) extends OutputStream 
   /** A run of 1-255 copies of `c`: up to four bytes as they are, then
     * a count of the further copies. */
   private def putRun(c: Int, n: Int): Unit = {
-    if (blkLen + math.min(n, 5) > cap) cutBlock()
+    if (blkLen + (if (n < 4) n else 5) > cap) cutBlock()
     val b = c.toByte
     if (n < 4) {
       var k = 0

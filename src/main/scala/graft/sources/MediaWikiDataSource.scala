@@ -820,12 +820,12 @@ class MediaWikiPartitionReader(
     if (preds.isEmpty) None else Some(t => preds.forall(p => p(t)))
   }
 
-  /** Does any requested column need the revision text (or a field that
-    * follows it in the element, like sha1)? If not, the reader skips
-    * capturing text bodies entirely. */
-  private val needText: Boolean = wantRaw || schema.fields.exists { f =>
+  /** Does any requested column need the revision text? If not, the
+    * reader skips capturing text bodies; raw mode captures them on its
+    * own inside [[graft.sources.PageRecordIterator]]. */
+  private val needText: Boolean = schema.fields.exists { f =>
     (f.name == "curr" || f.name == "prev") && (f.dataType match {
-      case st: StructType => st.fieldNames.contains("text") || st.fieldNames.contains("sha1")
+      case st: StructType => st.fieldNames.contains("text")
       case _ => true
     })
   }

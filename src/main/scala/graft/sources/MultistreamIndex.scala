@@ -138,19 +138,14 @@ object MultistreamIndex {
     * the cap (a truncated namespaces block is missing entries) AND
     * every `<namespace` element must parse (strict — a skipped entry
     * would misclassify its pages as main-ns and could drop a live
-    * stream). Shares [[XmlFields.readHeadUntil]] (linear tail-window
-    * marker search) and the attribute-order/quote-robust element parse
-    * with [[graft.MediaWiki.siteinfoNamespaces]]. */
+    * stream). Shares [[XmlFields.siteinfoHead]] and the
+    * attribute-order/quote-robust element parse with
+    * [[graft.MediaWiki.siteinfoNamespaces]]. */
   private def siteinfoNamespacesForSkip(fs: FileSystem,
       codecs: CompressionCodecFactory, dump: Path): Option[Map[Int, String]] = {
     try {
-      val raw = fs.open(dump)
-      val in = Option(codecs.getCodec(dump))
-        .map(c => c.createInputStream(raw): java.io.InputStream).getOrElse(raw)
-      try {
-        val (head, found) = XmlFields.readHeadUntil(in, "</siteinfo>", 1 << 20)
-        if (!found) None else XmlFields.siteinfoNamespacesStrict(head)
-      } finally in.close()
+      val (head, found) = XmlFields.siteinfoHead(fs, codecs, dump)
+      if (!found) None else XmlFields.siteinfoNamespacesStrict(head)
     } catch { case scala.util.control.NonFatal(_) => None }
   }
 

@@ -216,13 +216,27 @@ final class StreamScanner(src: PosByteSource) {
   * the reference's consumer `python/revision_differ.py:131-160`). */
 object XmlFields {
 
+  /** A dump's decompressed head through `</siteinfo>` (through the
+    * file's codec, if any), at most 1 MiB, and whether the marker
+    * appeared within it. The one head reader behind
+    * [[graft.MediaWiki.siteinfoNamespaces]] (lenient parse) and
+    * [[MultistreamIndex]]'s ns skip-planner (strict parse). */
+  def siteinfoHead(fs: org.apache.hadoop.fs.FileSystem,
+      codecs: org.apache.hadoop.io.compress.CompressionCodecFactory,
+      dump: org.apache.hadoop.fs.Path): (String, Boolean) = {
+    val raw = fs.open(dump)
+    val in = Option(codecs.getCodec(dump))
+      .map(c => c.createInputStream(raw): java.io.InputStream).getOrElse(raw)
+    try readHeadUntil(in, "</siteinfo>", 1 << 20) finally in.close()
+  }
+
   /** Read a dump's decompressed head through `in` until `marker`
     * appears (or `cap` bytes). Linear: only the tail window that could
     * complete the marker is re-scanned per chunk (the first cut decoded
     * and re-searched the WHOLE buffer per read — quadratic on a large
     * head). Returns (head-so-far, markerFound). The marker and the
     * scanned XML structure are ASCII, so byte search is exact. */
-  def readHeadUntil(in: java.io.InputStream, marker: String,
+  private def readHeadUntil(in: java.io.InputStream, marker: String,
       cap: Int): (String, Boolean) = {
     val mb = marker.getBytes(java.nio.charset.StandardCharsets.US_ASCII)
     val buf = new Array[Byte](cap)
@@ -564,8 +578,7 @@ object XmlFields {
     * most revisions, `<minor/>` three ways) costs a full scan of the
     * text body — ~10KB of dead scanning per 2KB revision. Only `sha1`
     * (which follows the text element) is searched after it. */
-  def parseRevision(rev: String, keepRaw: Boolean,
-                    meta: RevMetaFields = RevMetaFields.All): Revision = {
+  def parseRevision(rev: String, meta: RevMetaFields = RevMetaFields.All): Revision = {
     val textStart = rev.indexOf("<text")
     val head = if (textStart < 0) rev else rev.substring(0, textStart)
     val revId = tagText(head, "id").flatMap(_.trim.toLongOption).getOrElse(-1L)
@@ -602,7 +615,7 @@ object XmlFields {
     }
     Revision(revId, parentId, ts, contributor, minor, comment, model, format,
       text.map(org.apache.spark.unsafe.types.UTF8String.fromString).orNull,
-      sha1, bytes, if (keepRaw) Some(rev) else None)
+      sha1, bytes, None)
   }
 }
 
@@ -611,8 +624,10 @@ object XmlFields {
   * `curr.text`-only query pays zero metadata extraction. Identity,
   * ordering, and text fields (`rev_id`, `parent_id`, `timestamp`,
   * `text`) are not gated here: the first three are cheap scans of the
-  * fragment head and the text capture is governed by the reader's
-  * `needText` (which skips materializing the body entirely). */
+  * fragment head, and the text body is captured only when the reader's
+  * `needText` (or raw mode) asks for it. Every field here, `sha1`
+  * included, is read from the always-captured head and tail, so none
+  * of them forces body capture. */
 final case class RevMetaFields(contributor: Boolean, minor: Boolean,
     comment: Boolean, model: Boolean, format: Boolean,
     sha1: Boolean, bytes: Boolean)
@@ -722,8 +737,7 @@ final class PageRecordIterator(
         if (m == 1) {
           // revision-less page: emit nothing (reference emits per revision)
         } else {
-          val capArr = cap.toByteArray
-          val header = "<page>" + new String(capArr, 0, capArr.length - REV_BEGIN.length, StandardCharsets.UTF_8)
+          val header = "<page>" + new String(cap.buffer, 0, cap.length - REV_BEGIN.length, StandardCharsets.UTF_8)
           val excluded = excludePagesWith.exists(p => p.matcher(header).find())
           val parsed = if (excluded) null else XmlFields.parsePageHeader(header)
           val titleDrop = parsed != null && titleFilter.exists(f => !f(parsed.title))
@@ -756,75 +770,50 @@ final class PageRecordIterator(
 
   /** Read one revision; scanner is positioned just after `<revision`.
     *
-    * When text is pruned (`needText=false`, no raw mode) the `<text>`
-    * body — typically >90% of the bytes — is scanned without being
-    * captured or materialized: the head is closed with a synthetic
-    * self-closing text tag so field extraction still sees the attrs. */
+    * One capture path for every mode: the head (`<revision` through the
+    * `<text ...>` tag) and the tail (`</text>` through `</revision>`)
+    * are always captured; the body between them only when `keepRaw` or
+    * `needText` asks for it — otherwise it is scanned uncaptured (it is
+    * typically >90% of the bytes) and a literal `</text>` stands in for
+    * it. Field extraction parses head + tail as one empty-text fragment
+    * (~200B of metadata, `sha1` included); a captured body is attached
+    * by byte-level entity decode straight from the buffer (entity-free
+    * bodies are one copyOfRange). Revisions with no `<text>` element or
+    * a self-closing one are parsed whole. `raw` is the whole capture. */
   private def readRevision(): Option[Revision] = {
     val cap = capBuf
     cap.reset()
     // seed the buffer with the already-consumed "<revision" so the
-    // fragment decodes in ONE toString — the old "<revision" + body
-    // concat recopied the entire fragment (text body included) a
-    // second time per revision
+    // fragment decodes without a concat
     cap.write(REV_BEGIN)
-    if (keepRaw) {
-      if (scanner.readUntil(Array(REV_END), cap) < 0) return None // truncated
-      Some(XmlFields.parseRevision(cap.toString(StandardCharsets.UTF_8), keepRaw, meta))
-    } else if (needText) {
-      // byte path: capture the fragment once, record the text-body
-      // byte span, and build the body UTF8String straight from the
-      // buffer (entity-free bodies are one copyOfRange). Only the
-      // small head+tail (~200B of metadata) decodes to String, via the
-      // same synthetic empty-text fragment the pruned path uses — so
-      // field semantics stay byte-identical with parseRevision.
-      val m0 = scanner.readUntil(Array(REV_END, TEXT_BEGIN), cap)
-      if (m0 < 0) return None // truncated
-      if (m0 == 0) {
-        // revision had no <text> element at all
-        return Some(XmlFields.parseRevision(cap.toString(StandardCharsets.UTF_8), keepRaw = false, meta))
-      }
+    val m = scanner.readUntil(Array(REV_END, TEXT_BEGIN), cap)
+    if (m < 0) return None // truncated
+    var gtEnd = -1 // end of an open (not self-closing) <text ...> tag
+    var bodyEnd = -1
+    if (m == 1) {
       if (scanner.readUntil(Array(GT), cap) < 0) return None
-      val gtEnd = cap.length
-      val selfClosing = cap.buffer(gtEnd - 2) == '/'
-      if (selfClosing) {
-        // no body (empty or deleted text): the whole fragment is small
-        if (scanner.readUntil(Array(REV_END), cap) < 0) return None
-        return Some(XmlFields.parseRevision(cap.toString(StandardCharsets.UTF_8), keepRaw = false, meta))
+      if (cap.buffer(cap.length - 2) != '/') {
+        gtEnd = cap.length
+        val keepBody = keepRaw || needText
+        if (scanner.readUntil(Array(TEXT_END), if (keepBody) cap else null) < 0) return None
+        if (!keepBody) cap.write(TEXT_END)
+        bodyEnd = cap.length - TEXT_END.length
       }
-      if (scanner.readUntil(Array(TEXT_END), cap) < 0) return None
-      val bodyEnd = cap.length - TEXT_END.length
       if (scanner.readUntil(Array(REV_END), cap) < 0) return None
-      val buf = cap.buffer
-      val size = cap.length
-      // synthetic fragment = head (through "<text ...>") + tail (from
-      // "</text>") — a valid empty-text revision for field extraction
-      val synth = new String(buf, 0, gtEnd, StandardCharsets.UTF_8) +
-        new String(buf, bodyEnd, size - bodyEnd, StandardCharsets.UTF_8)
-      val parsed = XmlFields.parseRevision(synth, keepRaw = false, meta)
-      // attach the real body unless the attrs said deleted (textU8
-      // null): entity decode happens at byte level, one copy total
-      if (parsed.textU8 == null) Some(parsed)
-      else Some(parsed.copy(textU8 = XmlFields.unescapeToU8(buf, gtEnd, bodyEnd)))
-    } else {
-      val m = scanner.readUntil(Array(REV_END, TEXT_BEGIN), cap)
-      if (m < 0) return None
-      if (m == 0) {
-        // revision had no <text> element at all
-        Some(XmlFields.parseRevision(cap.toString(StandardCharsets.UTF_8), keepRaw = false, meta))
-      } else {
-        // capture the text attrs (small), then skip the body — and any
-        // post-text fields like sha1 — uncaptured to </revision>
-        if (scanner.readUntil(Array(GT), cap) < 0) return None
-        val head = cap.toString(StandardCharsets.UTF_8)
-        if (scanner.readUntil(Array(REV_END), null) < 0) return None
-        // close the text tag synthetically; parsed text value is unused
-        // (pruned) but attrs (bytes=...) remain extractable
-        val raw = (if (head.endsWith("/>")) head else head.dropRight(1) + "/>") +
-          "</revision>"
-        Some(XmlFields.parseRevision(raw, keepRaw = false, meta))
-      }
     }
+    val buf = cap.buffer
+    val size = cap.length
+    val frag =
+      if (gtEnd < 0) new String(buf, 0, size, StandardCharsets.UTF_8)
+      else new String(buf, 0, gtEnd, StandardCharsets.UTF_8) +
+        new String(buf, bodyEnd, size - bodyEnd, StandardCharsets.UTF_8)
+    val parsed = XmlFields.parseRevision(frag, meta)
+    // deleted text (textU8 null) and empty bodies keep the parsed value
+    val withText =
+      if (parsed.textU8 == null || bodyEnd <= gtEnd) parsed
+      else parsed.copy(textU8 = XmlFields.unescapeToU8(buf, gtEnd, bodyEnd))
+    Some(if (keepRaw) withText.copy(raw = Some(new String(buf, 0, size, StandardCharsets.UTF_8)))
+      else withText)
   }
 
   private def advance(): Unit = {

@@ -1039,6 +1039,18 @@ class MediaWikiSourceSpec extends AnyFunSuite {
       .select($"curr.rev_id".as("rid"), $"curr.bytes".as("nb"))
       .orderBy($"rid").collect()
     assert(b.head.getAs[Long]("nb") == 54L)
+    // sha1 follows the text body yet needs no text capture: it comes
+    // from the captured tail and equals the full read's
+    val sha = spark.read.format("mediawiki").load(fixture)
+      .select($"curr.rev_id".as("rid"), $"curr.sha1".as("s"))
+    val shaLeaf = sha.queryExecution.executedPlan.collectLeaves().head.schema
+    assert(!shaLeaf.toDDL.contains("text"), s"text not pruned: $shaLeaf")
+    val fullSha = spark.read.format("mediawiki").load(fixture)
+      .select($"curr.rev_id".as("rid"), $"curr.sha1".as("s"), $"curr.text".as("t"))
+      .orderBy($"rid").collect()
+    assert(sha.orderBy($"rid").collect().map(r => (r.getLong(0), r.getAs[String]("s"))).toSeq ==
+      fullSha.map(r => (r.getLong(0), r.getAs[String]("s"))).toSeq)
+    assert(fullSha.exists(_.getAs[String]("s") != null))
   }
 
   test("text-only nested prune returns the same text as a full-width read") {

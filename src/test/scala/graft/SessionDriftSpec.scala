@@ -85,8 +85,6 @@ class OneDriverFinishSpec extends AnyFunSuite {
     "Perceptron.scala" -> "an epoch's weight deltas: at most nBuckets rows",
     "Perceptron.scala" -> "the features, after the perceptron decision",
     "PrefixSum.scala" -> "the range-cut sample: SamplePerPart rows per partition",
-    "ProductQuantize.scala" -> "codebooks: a LIMIT one past 65,536 rows",
-    "ProductQuantize.scala" -> "coarse centroids: a LIMIT one past 4,096 rows",
     "RepeatedSequences.scala" -> "the texts, after the repeated_sequences decision",
     "RepeatedSequences.scala" -> "bucket bounds: two windows per bucket")
 

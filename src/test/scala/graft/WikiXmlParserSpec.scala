@@ -15,11 +15,13 @@ class WikiXmlParserSpec extends AnyFunSuite {
     java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(fixturePath))
 
   def parseAll(bytes: Array[Byte], start: Long = 0, end: Long = Long.MaxValue,
-               exclude: Option[Pattern] = None, keepRaw: Boolean = false): List[RevisionPair] = {
+               exclude: Option[Pattern] = None, keepRaw: Boolean = false,
+               needText: Boolean = true): List[RevisionPair] = {
     val in = new ByteArrayInputStream(bytes)
     in.skip(start)
     val it = new PageRecordIterator(
-      new CountingByteSource(in, start), start, end, exclusiveStart = false, exclude, keepRaw)
+      new CountingByteSource(in, start), start, end, exclusiveStart = false, exclude, keepRaw,
+      needText = needText)
     try it.toList finally it.close()
   }
 
@@ -87,13 +89,13 @@ class WikiXmlParserSpec extends AnyFunSuite {
       "<contributor><username>U</username><id>3</id></contributor><minor/>" +
       "<comment>c</comment><model>wikitext</model><format>text/x-wiki</format>" +
       "<text bytes=\"5\" xml:space=\"preserve\">hello</text><sha1>abc</sha1></revision>"
-    val full = XmlFields.parseRevision(frag, keepRaw = false)
+    val full = XmlFields.parseRevision(frag)
     assert(full.contributor.isDefined && full.minor && full.comment.isDefined &&
       full.model.isDefined && full.format.isDefined && full.sha1.isDefined &&
       full.bytes.isDefined)
     val none = RevMetaFields(contributor = false, minor = false, comment = false,
       model = false, format = false, sha1 = false, bytes = false)
-    val pruned = XmlFields.parseRevision(frag, keepRaw = false, none)
+    val pruned = XmlFields.parseRevision(frag, none)
     assert(pruned.contributor.isEmpty && !pruned.minor && pruned.comment.isEmpty &&
       pruned.model.isEmpty && pruned.format.isEmpty && pruned.sha1.isEmpty &&
       pruned.bytes.isEmpty)
@@ -101,10 +103,10 @@ class WikiXmlParserSpec extends AnyFunSuite {
     assert(pruned.revId == full.revId && pruned.parentId == full.parentId &&
       pruned.timestampUs == full.timestampUs && pruned.text == full.text)
     // single-field masks extract just that field
-    val onlyContrib = XmlFields.parseRevision(frag, keepRaw = false,
+    val onlyContrib = XmlFields.parseRevision(frag,
       none.copy(contributor = true))
     assert(onlyContrib.contributor == full.contributor && onlyContrib.model.isEmpty)
-    val onlySha = XmlFields.parseRevision(frag, keepRaw = false, none.copy(sha1 = true))
+    val onlySha = XmlFields.parseRevision(frag, none.copy(sha1 = true))
     assert(onlySha.sha1 == full.sha1 && onlySha.contributor.isEmpty)
   }
 
@@ -149,8 +151,19 @@ class WikiXmlParserSpec extends AnyFunSuite {
     val recs = parseAll(fixtureBytes, keepRaw = true)
     val first = recs(0)
     assert(first.prev == None)
-    assert(first.curr.raw.get.startsWith("<revision>"))
-    assert(first.curr.raw.get.endsWith("</revision>"))
+    // raw mode parses every field, text included, exactly as the default
+    // mode does; it only adds the raw fragment
+    val plain = parseAll(fixtureBytes)
+    def noRaw(r: Revision) = r.copy(raw = None)
+    assert(recs.map(r => (r.page, r.revSeq, r.prev.map(noRaw), noRaw(r.curr))) ==
+      plain.map(r => (r.page, r.revSeq, r.prev, r.curr)))
+    assert(plain.forall(_.curr.raw.isEmpty))
+    // raw is the dump's own bytes from <revision through </revision>
+    val xml = new String(fixtureBytes, StandardCharsets.UTF_8)
+    val frags = "<revision[ >]".r.findAllMatchIn(xml).map { m =>
+      xml.substring(m.start, xml.indexOf("</revision>", m.start) + "</revision>".length)
+    }.toList
+    assert(recs.map(_.curr.raw.get) == frags)
     assert(first.page.headerRaw.startsWith("<page>"))
     assert(first.page.headerRaw.contains("<title>Alpha Particle</title>"))
   }
@@ -163,9 +176,15 @@ class WikiXmlParserSpec extends AnyFunSuite {
       "<timestamp>", "</timestamp>", "bad<timestamp>xx</timestamp>", "<minor/>")
     for (trial <- 1 to 300) {
       val s = Seq.fill(rnd.nextInt(60))(pieces(rnd.nextInt(pieces.length))).mkString
-      val recs = parseAll(s.getBytes(StandardCharsets.UTF_8))
-      // never throws; every emitted record has a parsed page
-      recs.foreach(r => assert(r.page != null))
+      val b = s.getBytes(StandardCharsets.UTF_8)
+      // never throws; every emitted record has a parsed page; the
+      // capture mode never changes which revisions are emitted
+      val byMode = for ((raw, text) <- List((false, false), (false, true), (true, true))) yield {
+        val recs = parseAll(b, keepRaw = raw, needText = text)
+        recs.foreach(r => assert(r.page != null))
+        recs.map(_.curr.revId)
+      }
+      assert(byMode.distinct.size == 1, s"trial=$trial: $byMode")
     }
     // fuzz split boundaries over a valid dump too
     val bytes = fixtureBytes

@@ -129,6 +129,14 @@ class Bz2BlockEncoderSpec extends AnyFunSuite {
       roundTrip(s"cap$level$d", data, Seq(level))
       assert(magics(encode(data, level)).size == (if (d <= 0) 1 else 2), s"cap$level$d: block count")
     }
+    // a run of four copies codes as five RLE1 bytes: with 3-5 bytes of
+    // room left it must still fit or open the next block
+    for (level <- Seq(1, 9); room <- 3 to 5) {
+      val head = random(Bz2BlockEncoder.capacity(level) - room, level * 10 + room)
+      for (i <- 1 until head.length) if (head(i) == head(i - 1)) head(i) = (head(i) + 1).toByte
+      val x = (head.last + 1).toByte
+      roundTrip(s"run4cap$level-$room", head ++ Array.fill[Byte](4)(x) :+ (x + 1).toByte, Seq(level))
+    }
   }
 
   test("runs of 1 to 300 bytes around lengths 4, 255 and 256") {
