@@ -59,7 +59,8 @@ object ProductQuantize {
   /** (id, emb as exact doubles) of every row when the corpus fits
     * [[DriverFinish]]'s budget — the r16 driver-finish of the
     * INDEX-BUILD stages (codebooks / encode / probe-1 coarse
-    * assignment; the QUERY-side joins stay distributed). None over
+    * assignment, whose centroids come through here too; the
+    * QUERY-side joins stay distributed). None over
     * budget, on non-integral ids, duplicate ids, NULLs, or any
     * embedding not exactly `dims0` long (the distributed raise_error
     * path owns the loud failure). `dims0 < 0` is uniform-length mode:
@@ -420,7 +421,8 @@ object ProductQuantize {
     if (probe == 1) {
       val drv = for {
         vecs <- collectVecs("pq_coarse_assign", df, idCol, embCol, -1)
-        cs <- collectCents(cents, if (vecs.isEmpty) 0 else vecs(0)._2.length)
+        cs <- collectVecs("pq_coarse_cents", cents, "coarse_id", "__cent",
+          if (vecs.isEmpty) 0 else vecs(0)._2.length)
       } yield {
         import org.apache.spark.sql.Row
         import org.apache.spark.sql.types._
@@ -465,41 +467,6 @@ object ProductQuantize {
       sims.withColumn("__r", row_number().over(w)).filter(col("__r") <= probe)
         .select(col(outId), col("coarse_id"))
     }
-  }
-
-  /** Budget-bounded collect of a coarse-centroid frame (coarse_id,
-    * __cent) of `dims`-wide centroids; None on anything irregular
-    * (budget, types, NULLs, other dims). */
-  private def collectCents(cents: DataFrame, dims: Int): Option[Array[(Long, Array[Double])]] = {
-    val sch = cents.schema
-    if (!Seq("coarse_id", "__cent").forall(f => sch.fieldNames.contains(f)))
-      return None
-    if (!DriverFinish.integral(sch("coarse_id").dataType)) return None
-    // 16 + 8·dims B per centroid, as collectVecs counts a vector
-    val rows = DriverFinish.collectBounded("pq_coarse_cents",
-        cents.select(col("coarse_id").cast("long"), col("__cent")), 16L + 8L * dims)
-      .getOrElse(return None)
-    val out = new Array[(Long, Array[Double])](rows.length)
-    var i = 0
-    while (i < out.length) {
-      val r = rows(i)
-      if (r.isNullAt(0) || r.isNullAt(1)) return None
-      val seq = r.getSeq[Any](1)
-      if (seq.length != dims) return None
-      val cent = new Array[Double](dims)
-      var j = 0
-      while (j < dims) {
-        seq(j) match {
-          case f: java.lang.Float  => cent(j) = f.toDouble
-          case d: java.lang.Double => cent(j) = d
-          case _                   => return None
-        }
-        j += 1
-      }
-      out(i) = (r.getLong(0), cent)
-      i += 1
-    }
-    Some(out)
   }
 
   /** IVF-ADC retrieval (the FAISS IVFPQ shape, without residual
