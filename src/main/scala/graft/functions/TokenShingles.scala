@@ -31,8 +31,7 @@ case class TokenShingles(left: Expression, right: Expression)
 
   override def checkInputDataTypes(): TypeCheckResult =
     (left.dataType, right.dataType) match {
-      case (StringType, IntegerType) if right.foldable =>
-        TypeCheckResult.TypeCheckSuccess
+      case (StringType, IntegerType) if right.foldable => SpaceTokens.checkWindow("shingles", right)
       case (l, r) => TypeCheckResult.TypeCheckFailure(
         s"shingles requires (string, foldable int), got $l and $r")
     }
@@ -41,25 +40,9 @@ case class TokenShingles(left: Expression, right: Expression)
 
   override def prettyName: String = "shingles"
 
-  @transient private lazy val n: Int =
-    right.eval(null).asInstanceOf[Int]
-
-  override protected def nullSafeEval(text: Any, _n: Any): Any = {
-    // split on single spaces, preserving empty tokens — identical to
-    // Spark's split(text, ' ') (Java's String.split drops trailing
-    // empties, so tokenize manually)
-    val s = text.asInstanceOf[UTF8String].toString
-    val toks = new scala.collection.mutable.ArrayBuffer[String](64)
-    var start = 0
-    var i = 0
-    while (i <= s.length) {
-      if (i == s.length || s.charAt(i) == ' ') {
-        toks += s.substring(start, i)
-        start = i + 1
-      }
-      i += 1
-    }
-    val k = n
+  override protected def nullSafeEval(text: Any, n: Any): Any = {
+    val toks = SpaceTokens(text.asInstanceOf[UTF8String].toString)
+    val k = n.asInstanceOf[Int]
     if (toks.length < k) return new GenericArrayData(Array.empty[Any])
     val seen = new java.util.LinkedHashSet[String]()
     var j = 0

@@ -7,12 +7,22 @@ import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Shared whitespace tokenizer for the span/chunk expressions —
-  * identical to Spark's `split(text, ' ')` including empty tokens
-  * (Java's `String.split` drops trailing empties, so scan manually).
-  * Semantics mirror [[TokenShingles]]; kept in one place so the three
-  * expressions cannot drift. */
+/** Shared whitespace tokenizer for the token expressions — identical
+  * to Spark's `split(text, ' ')` including empty tokens (Java's
+  * `String.split` drops trailing empties, so scan manually) — and
+  * their shared check of the window argument n; kept in one place so
+  * the expressions cannot drift. */
 private[functions] object SpaceTokens {
+  /** The window argument n of `fn` (already typed as a foldable int)
+    * must be a non-null literal of at least 1: 0 divided by zero in
+    * `token_chunks` and made `token_spans` emit empty spans, and a
+    * NULL unboxed to 0. The registered callers pass only n >= 1. */
+  def checkWindow(fn: String, n: Expression): TypeCheckResult = n.eval() match {
+    case v: Int if v >= 1 => TypeCheckResult.TypeCheckSuccess
+    case v => TypeCheckResult.TypeCheckFailure(
+      s"$fn requires a non-null window n >= 1, got ${if (v == null) "NULL" else v}")
+  }
+
   def apply(s: String): Array[String] = {
     val toks = new scala.collection.mutable.ArrayBuffer[String](64)
     var start = 0
@@ -56,8 +66,7 @@ case class TokenSpans(left: Expression, right: Expression)
 
   override def checkInputDataTypes(): TypeCheckResult =
     (left.dataType, right.dataType) match {
-      case (StringType, IntegerType) if right.foldable =>
-        TypeCheckResult.TypeCheckSuccess
+      case (StringType, IntegerType) if right.foldable => SpaceTokens.checkWindow("token_spans", right)
       case (l, r) => TypeCheckResult.TypeCheckFailure(
         s"token_spans requires (string, foldable int), got $l and $r")
     }
@@ -66,12 +75,9 @@ case class TokenSpans(left: Expression, right: Expression)
 
   override def prettyName: String = "token_spans"
 
-  @transient private lazy val n: Int =
-    right.eval(null).asInstanceOf[Int]
-
-  override protected def nullSafeEval(text: Any, _n: Any): Any = {
+  override protected def nullSafeEval(text: Any, n: Any): Any = {
     val toks = SpaceTokens(text.asInstanceOf[UTF8String].toString)
-    val k = n
+    val k = n.asInstanceOf[Int]
     if (toks.length < k) return new GenericArrayData(Array.empty[Any])
     val out = new Array[Any](toks.length - k + 1)
     var j = 0
@@ -94,16 +100,17 @@ case class TokenSpans(left: Expression, right: Expression)
   * half produces the starts; see
   * [[graft.operators.SpanDedup.removeSpans]]). Overlapping windows
   * union (coverage is a boolean mark per token, order-insensitive, so
-  * the starts array needs no particular order). Out-of-range starts
-  * are ignored. Everything-cut yields the empty string. */
+  * the starts array needs no particular order). Out-of-range and NULL
+  * starts are ignored (the array type may hold NULLs: an empty
+  * `cast(array() as array<bigint>)` is typed nullable). Everything-cut
+  * yields the empty string. */
 case class CutSpans(first: Expression, second: Expression, third: Expression)
     extends org.apache.spark.sql.catalyst.expressions.TernaryExpression with CodegenFallback {
 
   override def checkInputDataTypes(): TypeCheckResult =
     (first.dataType, second.dataType, third.dataType) match {
       case (StringType, ArrayType(org.apache.spark.sql.types.LongType, _), IntegerType)
-          if third.foldable =>
-        TypeCheckResult.TypeCheckSuccess
+          if third.foldable => SpaceTokens.checkWindow("cut_spans", third)
       case (a, b, c) => TypeCheckResult.TypeCheckFailure(
         s"cut_spans requires (string, array<bigint>, foldable int), got $a, $b, $c")
     }
@@ -112,19 +119,19 @@ case class CutSpans(first: Expression, second: Expression, third: Expression)
 
   override def prettyName: String = "cut_spans"
 
-  @transient private lazy val n: Int =
-    third.eval(null).asInstanceOf[Int]
-
-  override protected def nullSafeEval(text: Any, starts: Any, _n: Any): Any = {
+  override protected def nullSafeEval(text: Any, starts: Any, n: Any): Any = {
     val toks = SpaceTokens(text.asInstanceOf[UTF8String].toString)
     val arr = starts.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]
     val covered = new Array[Boolean](toks.length)
+    val k = n.asInstanceOf[Int]
     var i = 0
     while (i < arr.numElements()) {
-      val p = arr.getLong(i)
-      var j = math.max(p, 0L).toInt
-      val end = math.min(p + n, toks.length.toLong).toInt
-      while (j < end) { covered(j) = true; j += 1 }
+      if (!arr.isNullAt(i)) {
+        val p = arr.getLong(i)
+        var j = math.max(p, 0L).toInt
+        val end = math.min(p + k, toks.length.toLong).toInt
+        while (j < end) { covered(j) = true; j += 1 }
+      }
       i += 1
     }
     val sb = new java.lang.StringBuilder(64)
@@ -169,11 +176,7 @@ case class TokenWindows(left: Expression, right: Expression)
 
   override def checkInputDataTypes(): TypeCheckResult =
     (left.dataType, right.dataType) match {
-      case (StringType, IntegerType) if right.foldable => right.eval() match {
-        case n: Int if n >= 1 => TypeCheckResult.TypeCheckSuccess
-        case n => TypeCheckResult.TypeCheckFailure(
-          s"token_windows requires a non-null window n >= 1, got ${if (n == null) "NULL" else n}")
-      }
+      case (StringType, IntegerType) if right.foldable => SpaceTokens.checkWindow("token_windows", right)
       case (l, r) => TypeCheckResult.TypeCheckFailure(
         s"token_windows requires (string, foldable int), got $l and $r")
     }
@@ -182,10 +185,7 @@ case class TokenWindows(left: Expression, right: Expression)
 
   override def prettyName: String = "token_windows"
 
-  @transient private lazy val n: Int =
-    right.eval(null).asInstanceOf[Int]
-
-  override protected def nullSafeEval(text: Any, _n: Any): Any = {
+  override protected def nullSafeEval(text: Any, n: Any): Any = {
     val bytes = text.asInstanceOf[UTF8String].getBytes
     val len = bytes.length
     // token starts: offset 0 plus one past every space; sentinel one
@@ -203,7 +203,7 @@ case class TokenWindows(left: Expression, right: Expression)
       i += 1
     }
     starts(count) = len + 1
-    val k = n
+    val k = n.asInstanceOf[Int]
     val out = new Array[Any](count)
     var j = 0
     while (j < count) {
@@ -232,8 +232,7 @@ case class TokenChunks(left: Expression, right: Expression)
 
   override def checkInputDataTypes(): TypeCheckResult =
     (left.dataType, right.dataType) match {
-      case (StringType, IntegerType) if right.foldable =>
-        TypeCheckResult.TypeCheckSuccess
+      case (StringType, IntegerType) if right.foldable => SpaceTokens.checkWindow("token_chunks", right)
       case (l, r) => TypeCheckResult.TypeCheckFailure(
         s"token_chunks requires (string, foldable int), got $l and $r")
     }
@@ -242,12 +241,9 @@ case class TokenChunks(left: Expression, right: Expression)
 
   override def prettyName: String = "token_chunks"
 
-  @transient private lazy val n: Int =
-    right.eval(null).asInstanceOf[Int]
-
-  override protected def nullSafeEval(text: Any, _n: Any): Any = {
+  override protected def nullSafeEval(text: Any, n: Any): Any = {
     val toks = SpaceTokens(text.asInstanceOf[UTF8String].toString)
-    val k = n
+    val k = n.asInstanceOf[Int]
     val nChunks = (toks.length + k - 1) / k
     val out = new Array[Any](nChunks)
     var c = 0

@@ -63,9 +63,9 @@ object MediaWikiWrite {
   private[sources] val GtBytes = "&gt;".getBytes(java.nio.charset.StandardCharsets.US_ASCII)
 
   /** Element-content escape — exact inverse of the reader's
-    * [[XmlFields.unescape]] named-entity subset for the characters the
-    * escaper rewrites (&, <, >; a body free of bare `<` is what bounds
-    * the reader's metadata scans). */
+    * [[XmlFields.unescapeToU8]] named-entity subset for the characters
+    * the escaper rewrites (&, <, >; a body free of bare `<` is what
+    * bounds the reader's metadata scans). */
   def esc(s: String): String = {
     if (s.indexOf('&') < 0 && s.indexOf('<') < 0 && s.indexOf('>') < 0) return s
     val out = new java.lang.StringBuilder(s.length + 16)

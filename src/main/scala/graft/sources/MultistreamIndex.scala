@@ -33,7 +33,7 @@ import org.apache.hadoop.io.compress.CompressionCodecFactory
   *       contract (all pages indexed, true ids/titles). Both sides
   *       compare DECODED titles — the reader's parse unescapes the five
   *       named entities AND numeric character references
-  *       ([[XmlFields.unescape]]), so no escaping choice can make the
+  *       ([[XmlFields.unescapeToU8]]), so no escaping choice can make the
   *       planner and the reader disagree.
   *     - **ns predicates** (eq/IN): additionally trusts the MediaWiki
   *       layout invariant that a present `<ns>` agrees with the title's

@@ -4,6 +4,8 @@ import java.io.InputStream
 import java.nio.charset.StandardCharsets
 import java.util.regex.Pattern
 
+import org.apache.spark.unsafe.types.UTF8String
+
 import graft.{Contributor, PageInfo, Revision, RevisionPair}
 
 /** Byte source with an ownership coordinate per delivered byte.
@@ -211,9 +213,14 @@ final class StreamScanner(src: PosByteSource) {
   }
 }
 
-/** Minimal XML field extraction for the regular, machine-generated
-  * MediaWiki export format (schema per SURVEY §1.2; fields evidenced by
-  * the reference's consumer `python/revision_differ.py:131-160`). */
+/** Field extraction for the regular, machine-generated MediaWiki
+  * export format (schema per SURVEY §1.2; fields evidenced by the
+  * reference's consumer `python/revision_differ.py:131-160`), straight
+  * from a byte range of the reader's capture buffer. Tags, attribute
+  * names and entities are ASCII, so byte search on UTF-8 is exact.
+  * Numbers, timestamps and flags are read in place; only the string
+  * fields a record emits go through the one entity decoder
+  * [[unescapeToU8]]. */
 object XmlFields {
 
   /** A dump's decompressed head through `</siteinfo>` (through the
@@ -279,245 +286,272 @@ object XmlFields {
     * prefix means. Lenient: elements without a parseable key are
     * skipped (use [[siteinfoNamespacesStrict]] when a skipped entry
     * must abort instead). */
-  def siteinfoNamespacesFromHead(head: String): Map[Int, String] = {
+  def siteinfoNamespacesFromHead(head: String): Map[Int, String] =
+    namespaces(head, strict = false).get
+
+  /** Strict variant for SKIP decisions: None if ANY `<namespace`
+    * element lacks a parseable key — a partially-understood namespaces
+    * block must not drive stream skipping (a missed entry would
+    * misclassify its pages as main-ns and could drop a live stream). */
+  def siteinfoNamespacesStrict(head: String): Option[Map[Int, String]] =
+    namespaces(head, strict = true)
+
+  private def namespaces(head: String, strict: Boolean): Option[Map[Int, String]] = {
     val m = NamespaceElem.matcher(head)
     val out = scala.collection.mutable.Map.empty[Int, String]
     while (m.find()) {
       val k = KeyAttr.matcher(m.group(1))
       if (k.find()) {
         val key = Option(k.group(1)).getOrElse(k.group(2)).toInt
-        out(key) = Option(m.group(2)).map(unescape).getOrElse("")
-      }
-    }
-    out.toMap
-  }
-
-  /** Strict variant for SKIP decisions: None if ANY `<namespace`
-    * element lacks a parseable key — a partially-understood namespaces
-    * block must not drive stream skipping (a missed entry would
-    * misclassify its pages as main-ns and could drop a live stream). */
-  def siteinfoNamespacesStrict(head: String): Option[Map[Int, String]] = {
-    val m = NamespaceElem.matcher(head)
-    val out = scala.collection.mutable.Map.empty[Int, String]
-    while (m.find()) {
-      val k = KeyAttr.matcher(m.group(1))
-      if (!k.find()) return None
-      val key = Option(k.group(1)).getOrElse(k.group(2)).toInt
-      out(key) = Option(m.group(2)).map(unescape).getOrElse("")
+        out(key) = Option(m.group(2)).fold("") { name =>
+          val b = name.getBytes(StandardCharsets.UTF_8)
+          unescapeToU8(b, 0, b.length).toString
+        }
+      } else if (strict) return None
     }
     Some(out.toMap)
   }
 
-  /** Decode the five named XML entities plus numeric character refs. */
-  def unescape(s: String): String = {
-    if (s.indexOf('&') < 0) return s
-    val out = new java.lang.StringBuilder(s.length)
-    var i = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (c == '&') {
-        val semi = s.indexOf(';', i + 1)
-        if (semi > i && semi - i <= 12) {
-          val ent = s.substring(i + 1, semi)
-          ent match {
-            case "amp"  => out.append('&'); i = semi + 1
-            case "lt"   => out.append('<'); i = semi + 1
-            case "gt"   => out.append('>'); i = semi + 1
-            case "quot" => out.append('"'); i = semi + 1
-            case "apos" => out.append('\''); i = semi + 1
-            // IllegalArgumentException also covers appendCodePoint on
-            // out-of-range refs like &#1114112; (NumberFormatException
-            // is its subclass) — fall back to a literal '&'
-            case _ if ent.startsWith("#x") || ent.startsWith("#X") =>
-              try { out.appendCodePoint(Integer.parseInt(ent.substring(2), 16)); i = semi + 1 }
-              catch { case _: IllegalArgumentException => out.append(c); i += 1 }
-            case _ if ent.startsWith("#") =>
-              try { out.appendCodePoint(Integer.parseInt(ent.substring(1))); i = semi + 1 }
-              catch { case _: IllegalArgumentException => out.append(c); i += 1 }
-            case _ => out.append(c); i += 1
-          }
-        } else { out.append(c); i += 1 }
-      } else { out.append(c); i += 1 }
+  /** Decode the five named XML entities and numeric character
+    * references in b[from, until): the one entity decoder, for text
+    * bodies, metadata fields, attribute values and siteinfo namespace
+    * names (a String field is its output's `toString`). Each
+    * entity-free run is one `System.arraycopy` into one output array
+    * the size of the input: no entity's UTF-8 is longer than the entity
+    * (`&#128;` is 6 B → 2 B, `&#65536;` 8 B → 4 B). An `&` that starts
+    * no entity stays literal: an unknown name, no `;` within 12 bytes,
+    * an empty or signed number (`&#+12;`, which StAX rejects too), or a
+    * code point above U+10FFFF. A surrogate code point decodes as `?`,
+    * what `UTF8String.fromString` makes of a lone surrogate. Entities
+    * are ASCII, so on invalid UTF-8 decoding the output gives the same
+    * String as decoding the input first. */
+  def unescapeToU8(b: Array[Byte], from: Int, until: Int): UTF8String = {
+    var amp = indexOf(b, from, until, '&')
+    if (amp < 0) return UTF8String.fromBytes(java.util.Arrays.copyOfRange(b, from, until))
+    val out = new Array[Byte](until - from)
+    var o = 0
+    var run = from // start of the entity-free run not yet copied
+    while (amp >= 0) {
+      var semi = -1
+      var k = amp + 1
+      val lim = math.min(until, amp + 13)
+      while (k < lim && semi < 0) { if (b(k) == ';') semi = k else k += 1 }
+      val cp = if (semi < 0) -1 else entityCodePoint(b, amp + 1, semi)
+      if (cp >= 0) {
+        System.arraycopy(b, run, out, o, amp - run)
+        o = putUtf8(out, o + amp - run, cp)
+        run = semi + 1
+        amp = indexOf(b, run, until, '&')
+      } else amp = indexOf(b, amp + 1, until, '&') // literal '&': stays in the run
     }
-    out.toString
+    System.arraycopy(b, run, out, o, until - run)
+    UTF8String.fromBytes(out, 0, o + until - run)
   }
 
-  /** Byte-level entity unescape of [from, until) straight to a
-    * `UTF8String` — the text-body twin of [[unescape]] with no char
-    * decode. Entity-free regions (the overwhelming majority of bytes)
-    * are a single `copyOfRange`. Semantics match the String form
-    * byte-for-byte, including its fallbacks: an unmatched or malformed
-    * entity keeps the literal `&` and continues; a numeric reference in
-    * the surrogate range encodes as `?` (exactly what
-    * `UTF8String.fromString` produces from the String path's
-    * lone-surrogate output). */
-  def unescapeToU8(b: Array[Byte], from: Int, until: Int): org.apache.spark.unsafe.types.UTF8String = {
-    var amp = -1
-    var i = from
-    while (i < until && amp < 0) { if (b(i) == '&') amp = i else i += 1 }
-    if (amp < 0)
-      return org.apache.spark.unsafe.types.UTF8String.fromBytes(
-        java.util.Arrays.copyOfRange(b, from, until))
-    val out = new java.io.ByteArrayOutputStream(until - from + 8)
-    out.write(b, from, amp - from)
-    i = amp
-    while (i < until) {
-      val c = b(i)
-      if (c == '&') {
-        // find ';' within 12 bytes (entity alphabet is ASCII, so byte
-        // and char distances agree for every matchable entity)
-        var semi = -1
-        var k = i + 1
-        val lim = math.min(until, i + 13)
-        while (k < lim && semi < 0) { if (b(k) == ';') semi = k else k += 1 }
-        var consumed = false
-        if (semi > i) {
-          val entLen = semi - i - 1
-          @inline def is(s: String): Boolean = {
-            if (entLen != s.length) false
-            else {
-              var j = 0
-              var ok = true
-              while (ok && j < entLen) { ok = b(i + 1 + j) == s.charAt(j); j += 1 }
-              ok
-            }
-          }
-          if (is("amp")) { out.write('&'); consumed = true }
-          else if (is("lt")) { out.write('<'); consumed = true }
-          else if (is("gt")) { out.write('>'); consumed = true }
-          else if (is("quot")) { out.write('"'); consumed = true }
-          else if (is("apos")) { out.write('\''); consumed = true }
-          else if (entLen >= 1 && b(i + 1) == '#') {
-            val hex = entLen >= 2 && (b(i + 2) == 'x' || b(i + 2) == 'X')
-            val dFrom = i + (if (hex) 3 else 2)
-            var cp = 0L
-            var ok = dFrom < semi
-            var j = dFrom
-            while (ok && j < semi) {
-              val d = b(j)
-              val v =
-                if (d >= '0' && d <= '9') d - '0'
-                else if (hex && d >= 'a' && d <= 'f') d - 'a' + 10
-                else if (hex && d >= 'A' && d <= 'F') d - 'A' + 10
-                else -1
-              if (v < 0) ok = false
-              else { cp = cp * (if (hex) 16 else 10) + v; if (cp > 0x7fffffffL) ok = false }
-              j += 1
-            }
-            if (ok && cp <= 0x10ffffL) { writeCodePoint(out, cp.toInt); consumed = true }
-          }
-          if (consumed) i = semi + 1
-        }
-        if (!consumed) { out.write('&'); i += 1 }
-      } else { out.write(c); i += 1 }
-    }
-    org.apache.spark.unsafe.types.UTF8String.fromBytes(out.toByteArray)
-  }
-
-  private def writeCodePoint(out: java.io.ByteArrayOutputStream, cp: Int): Unit = {
-    if (cp < 0x80) out.write(cp)
-    else if (cp < 0x800) {
-      out.write(0xc0 | (cp >> 6)); out.write(0x80 | (cp & 0x3f))
-    } else if (cp >= 0xd800 && cp <= 0xdfff) {
-      out.write('?') // lone surrogate: what fromString yields from the String path
-    } else if (cp < 0x10000) {
-      out.write(0xe0 | (cp >> 12)); out.write(0x80 | ((cp >> 6) & 0x3f)); out.write(0x80 | (cp & 0x3f))
-    } else {
-      out.write(0xf0 | (cp >> 18)); out.write(0x80 | ((cp >> 12) & 0x3f))
-      out.write(0x80 | ((cp >> 6) & 0x3f)); out.write(0x80 | (cp & 0x3f))
-    }
-  }
-
-  /** Find element `<tag ...>content</tag>` or `<tag ... />` at/after
-    * `from`. Returns (attrs, content, indexAfterElement). */
-  def element(s: String, tag: String, from: Int): Option[(String, String, Int)] = {
-    var i = from
-    val open = "<" + tag
-    while (true) {
-      val start = s.indexOf(open, i)
-      if (start < 0) return None
-      val afterName = start + open.length
-      if (afterName >= s.length) return None
-      val nc = s.charAt(afterName)
-      if (nc == '>' || nc == ' ' || nc == '/' || nc == '\t' || nc == '\n') {
-        val gt = s.indexOf('>', afterName)
-        if (gt < 0) return None
-        val attrs = s.substring(afterName, gt).trim
-        if (attrs.endsWith("/")) {
-          return Some((attrs.dropRight(1).trim, "", gt + 1))
-        }
-        val close = "</" + tag + ">"
-        val end = s.indexOf(close, gt + 1)
-        if (end < 0) return None
-        return Some((attrs, s.substring(gt + 1, end), end + close.length))
-      }
-      i = afterName
-    }
-    None
-  }
-
-  /** Attribute lookup tolerant of either quote style and whitespace
-    * around `=` — both legal XML (the r13 namespace-key parse was
-    * generalized for the same reason; a single-quoted
-    * `<text deleted='deleted'/>` previously read as NOT deleted, a
-    * silent semantic skew). Scans attribute-by-attribute with quote
-    * state, so the name can never match INSIDE a preceding attribute's
-    * quoted value (values legally contain spaces, `=`, and the other
-    * quote style, e.g. `alt="use title = 'x'" title="real"` —
-    * ADVICE r13). */
-  def attr(attrs: String, name: String): Option[String] = {
-    val n = attrs.length
-    var i = 0
-    while (i < n) {
-      while (i < n && Character.isWhitespace(attrs.charAt(i))) i += 1
-      if (i >= n) return None
-      val nameStart = i
-      while (i < n && !Character.isWhitespace(attrs.charAt(i)) && attrs.charAt(i) != '=') i += 1
-      val isTarget = i - nameStart == name.length &&
-        attrs.regionMatches(nameStart, name, 0, name.length)
-      while (i < n && Character.isWhitespace(attrs.charAt(i))) i += 1
-      if (i < n && attrs.charAt(i) == '=') {
+  /** Code point of the entity named by b[from, until) (between `&` and
+    * `;`), or -1 when it is none of the five names and no unsigned
+    * decimal or `x`-hex reference up to U+10FFFF. */
+  private def entityCodePoint(b: Array[Byte], from: Int, until: Int): Int = {
+    val n = until - from
+    if (n >= 1 && b(from) == '#') {
+      val hex = n >= 2 && (b(from + 1) == 'x' || b(from + 1) == 'X')
+      var i = from + (if (hex) 2 else 1)
+      if (i == until) return -1
+      var cp = 0
+      val radix = if (hex) 16 else 10
+      while (i < until) {
+        val v = Character.digit((b(i) & 0xff).toChar, radix) // no non-ASCII Latin-1 digit
+        if (v < 0) return -1
+        cp = cp * radix + v
+        if (cp > 0x10ffff) return -1
         i += 1
-        while (i < n && Character.isWhitespace(attrs.charAt(i))) i += 1
-        if (i < n && (attrs.charAt(i) == '"' || attrs.charAt(i) == '\'')) {
-          val q = attrs.charAt(i)
-          val end = attrs.indexOf(q, i + 1)
-          if (end < 0) return None // unterminated quote: malformed, absent
-          if (isTarget) return Some(unescape(attrs.substring(i + 1, end)))
+      }
+      cp
+    } else if (n == 3 && at(b, from, until, "amp")) '&'
+    else if (n == 2 && at(b, from, until, "lt")) '<'
+    else if (n == 2 && at(b, from, until, "gt")) '>'
+    else if (n == 4 && at(b, from, until, "quot")) '"'
+    else if (n == 4 && at(b, from, until, "apos")) '\''
+    else -1
+  }
+
+  /** Write `cp` as UTF-8 at out(o) (a surrogate as `?`); returns the
+    * index after it. */
+  private def putUtf8(out: Array[Byte], o: Int, cp: Int): Int = {
+    if (cp < 0x80 || (cp >= 0xd800 && cp <= 0xdfff)) { out(o) = (if (cp < 0x80) cp else '?').toByte; return o + 1 }
+    val n = if (cp < 0x800) 2 else if (cp < 0x10000) 3 else 4
+    var c = cp
+    var k = n - 1
+    while (k > 0) { out(o + k) = (0x80 | (c & 0x3f)).toByte; c >>= 6; k -= 1 }
+    out(o) = ((0xff00 >> n) | c).toByte // lead byte: n one-bits, a zero, the top bits
+    o + n
+  }
+
+  private def decode(b: Array[Byte], from: Int, until: Int): String =
+    unescapeToU8(b, from, until).toString
+
+  /** Whether b[i, until) starts with the ASCII string `s`. */
+  private def at(b: Array[Byte], i: Int, until: Int, s: String): Boolean = {
+    if (until - i < s.length) return false
+    var j = 0
+    while (j < s.length && b(i + j) == s.charAt(j)) j += 1
+    j == s.length
+  }
+
+  private def indexOf(b: Array[Byte], from: Int, until: Int, c: Char): Int = {
+    var i = from
+    while (i < until && b(i) != c) i += 1
+    if (i < until) i else -1
+  }
+
+  private def indexOf(b: Array[Byte], from: Int, until: Int, s: String): Int = {
+    var i = indexOf(b, from, until, s.charAt(0))
+    while (i >= 0 && !at(b, i, until, s)) i = indexOf(b, i + 1, until, s.charAt(0))
+    i
+  }
+
+  /** `String.trim`'s whitespace, U+0000 to U+0020 (no byte of a
+    * multibyte sequence is below 0x80); also the attribute separator,
+    * a superset of XML's space, tab, CR and LF. */
+  private def blank(c: Byte): Boolean = (c & 0xff) <= ' '
+
+  /** One element's byte ranges: the attribute list [attrFrom,
+    * attrUntil), without a self-closing `/`; the raw content
+    * [contentFrom, contentUntil), empty when self-closing; and `after`,
+    * the index just past the element. */
+  private final class Elem(val attrFrom: Int, val attrUntil: Int,
+      val contentFrom: Int, val contentUntil: Int, val after: Int)
+
+  /** The first element `<tag ...>content</tag>` or `<tag .../>` in
+    * b[from, until), or null. The name must end at `>`, `/`, a space, a
+    * tab or a newline, so `<id` never matches `<idx>`; the open tag
+    * ends at its first `>` and the content at the first `</tag>`. */
+  private def element(b: Array[Byte], from: Int, until: Int, tag: String): Elem = {
+    var i = indexOf(b, from, until, '<')
+    while (i >= 0) {
+      if (at(b, i + 1, until, tag)) {
+        val afterName = i + 1 + tag.length
+        if (afterName >= until) return null
+        val nc = b(afterName)
+        if (nc == '>' || nc == ' ' || nc == '/' || nc == '\t' || nc == '\n') {
+          val gt = indexOf(b, afterName, until, '>')
+          if (gt < 0) return null
+          var last = gt - 1
+          while (last >= afterName && blank(b(last))) last -= 1
+          if (last >= afterName && b(last) == '/') return new Elem(afterName, last, gt + 1, gt + 1, gt + 1)
+          var end = indexOf(b, gt + 1, until, "</")
+          while (end >= 0 && !(at(b, end + 2, until, tag) && at(b, end + 2 + tag.length, until, ">")))
+            end = indexOf(b, end + 1, until, "</")
+          if (end < 0) return null
+          return new Elem(afterName, gt, gt + 1, end, end + tag.length + 3)
+        }
+      }
+      i = indexOf(b, i + 1, until, '<')
+    }
+    null
+  }
+
+  /** Raw value range of attribute `name` in the attribute list
+    * b[from, until) as `start << 32 | end`; -1 when absent or malformed
+    * (no `=`, no quoted value, an unterminated quote). Both quote
+    * styles and whitespace around `=` are legal XML and accepted (a
+    * single-quoted `<text deleted='deleted'/>` once read as NOT
+    * deleted). The scan keeps quote state attribute by attribute, so
+    * the name never matches INSIDE a preceding quoted value, e.g.
+    * `alt="use title = 'x'" title="real"` (ADVICE r13). */
+  private def attrRange(b: Array[Byte], from: Int, until: Int, name: String): Long = {
+    var i = from
+    while (i < until) {
+      while (i < until && blank(b(i))) i += 1
+      if (i >= until) return -1L
+      val nameStart = i
+      while (i < until && !blank(b(i)) && b(i) != '=') i += 1
+      val isTarget = i - nameStart == name.length && at(b, nameStart, until, name)
+      while (i < until && blank(b(i))) i += 1
+      if (i < until && b(i) == '=') {
+        i += 1
+        while (i < until && blank(b(i))) i += 1
+        if (i < until && (b(i) == '"' || b(i) == '\'')) {
+          val end = indexOf(b, i + 1, until, b(i).toChar)
+          if (end < 0) return -1L
+          if (isTarget) return (i + 1).toLong << 32 | end
           i = end + 1
         } else {
-          if (isTarget) return None // name= without a quoted value: malformed
+          if (isTarget) return -1L
           // skip the unquoted token so scanning stays aligned
-          while (i < n && !Character.isWhitespace(attrs.charAt(i))) i += 1
+          while (i < until && !blank(b(i))) i += 1
         }
-      } else if (isTarget) {
-        return None // bare name, no value: malformed, absent
-      }
+      } else if (isTarget) return -1L
     }
-    None
+    -1L
   }
 
-  def tagText(s: String, tag: String, from: Int = 0): Option[String] =
-    element(s, tag, from).map { case (_, c, _) => unescape(c) }
+  /** Decoded value of attribute `name` in the attribute list
+    * b[from, until) (see [[attrRange]] for what counts as present). */
+  def attr(b: Array[Byte], from: Int, until: Int, name: String): Option[String] = {
+    val r = attrRange(b, from, until, name)
+    if (r < 0) None else Some(decode(b, (r >>> 32).toInt, r.toInt))
+  }
+
+  private val Deleted = UTF8String.fromString("deleted")
+
+  /** Whether the element carries `deleted="deleted"`, compared as bytes. */
+  private def deleted(b: Array[Byte], e: Elem): Boolean = {
+    val r = attrRange(b, e.attrFrom, e.attrUntil, "deleted")
+    r >= 0 && unescapeToU8(b, (r >>> 32).toInt, r.toInt) == Deleted
+  }
+
+  /** Decoded content of the first `tag` element in b[from, until). */
+  private def text(b: Array[Byte], from: Int, until: Int, tag: String): Option[String] = {
+    val e = element(b, from, until, tag)
+    if (e == null) None else Some(decode(b, e.contentFrom, e.contentUntil))
+  }
+
+  /** A decimal integer as `toLongOption` reads the decoded text
+    * (trimmed first when `trim`). An optional sign and up to 18 ASCII
+    * digits, every id in a dump, are read in place; anything else
+    * (an entity, more digits, not a number) is decoded for
+    * `toLongOption`. */
+  private def long(b: Array[Byte], from: Int, until: Int, trim: Boolean): Option[Long] = {
+    var i = from
+    var end = until
+    if (trim) {
+      while (i < end && blank(b(i))) i += 1
+      while (end > i && blank(b(end - 1))) end -= 1
+    }
+    val digits = if (i < end && (b(i) == '-' || b(i) == '+')) i + 1 else i
+    var j = digits
+    var v = 0L
+    while (j < end && j - digits < 18 && b(j) >= '0' && b(j) <= '9') { v = v * 10 + (b(j) - '0'); j += 1 }
+    if (j == end && j > digits) Some(if (b(i) == '-') -v else v)
+    else { val s = decode(b, i, end); (if (trim) s.trim else s).toLongOption }
+  }
+
+  /** Trimmed integer content of the first `tag` element in b[from, until). */
+  private def longElem(b: Array[Byte], from: Int, until: Int, tag: String): Option[Long] = {
+    val e = element(b, from, until, tag)
+    if (e == null) None else long(b, e.contentFrom, e.contentUntil, trim = true)
+  }
 
   private val isoFmt = java.time.format.DateTimeFormatter.ISO_INSTANT
 
   private val daysInMonth = Array(31, 28, 31, 30, 31, 30, 31, 31, 30, 31, 30, 31)
 
-  /** Epoch micros from an ISO-8601 UTC timestamp. Fast path for the
-    * dump format's fixed-width `YYYY-MM-DDTHH:MM:SSZ` (stack sampling
-    * put `DateTimeFormatter.ISO_INSTANT` at ~4% of the whole 32-thread
-    * ingest; this is a few digit reads + the standard days-from-civil
-    * arithmetic, same proleptic-Gregorian result as `Instant.parse`
-    * including full date validation). Anything else — fractional
-    * seconds, offsets, malformed — falls through to the formatter. */
-  def parseTimestampUs(iso: String): Option[Long] = {
-    if (iso.length == 20 && iso.charAt(4) == '-' && iso.charAt(7) == '-' &&
-        iso.charAt(10) == 'T' && iso.charAt(13) == ':' && iso.charAt(16) == ':' &&
-        iso.charAt(19) == 'Z') {
+  /** Epoch micros from the ISO-8601 UTC timestamp in b[from, until).
+    * Fast path for the dump format's fixed-width `YYYY-MM-DDTHH:MM:SSZ`
+    * in place (stack sampling put `DateTimeFormatter.ISO_INSTANT` at
+    * ~4% of the whole 32-thread ingest; this is a few digit reads + the
+    * standard days-from-civil arithmetic, same proleptic-Gregorian
+    * result as `Instant.parse` including full date validation).
+    * Anything else — fractional seconds, offsets, entities, malformed —
+    * is decoded to a String for the formatter. */
+  def parseTimestampUs(b: Array[Byte], from: Int, until: Int): Option[Long] = {
+    if (until - from == 20 && b(from + 4) == '-' && b(from + 7) == '-' &&
+        b(from + 10) == 'T' && b(from + 13) == ':' && b(from + 16) == ':' &&
+        b(from + 19) == 'Z') {
       var ok = true
       def d(i: Int): Int = {
-        val c = iso.charAt(i)
+        val c = b(from + i)
         if (c < '0' || c > '9') { ok = false; 0 } else c - '0'
       }
       val y = d(0) * 1000 + d(1) * 100 + d(2) * 10 + d(3)
@@ -542,80 +576,78 @@ object XmlFields {
       // end-of-day, which Instant.parse ACCEPTS): defer to the
       // formatter rather than guess
     }
-    try Some(java.time.Instant.from(isoFmt.parse(iso))).map(t => t.getEpochSecond * 1000000L + t.getNano / 1000L)
+    try Some(java.time.Instant.from(isoFmt.parse(decode(b, from, until))))
+      .map(t => t.getEpochSecond * 1000000L + t.getNano / 1000L)
     catch { case _: Exception => None }
   }
 
-  /** Parse a page header fragment: bytes from `<page>` up to (not
+  /** Parse a page header: b[from, until) runs from `<page>` up to (not
     * including) the first `<revision` (reference record layout,
-    * `StreamWikiDumpInputFormat.java:42-121`). */
-  def parsePageHeader(header: String): PageInfo = {
-    val title = tagText(header, "title").getOrElse("")
-    val ns = tagText(header, "ns").flatMap(v => v.trim.toIntOption)
+    * `StreamWikiDumpInputFormat.java:42-121`). `headerRaw` is that
+    * range decoded. */
+  def parsePageHeader(b: Array[Byte], from: Int, until: Int): PageInfo = {
+    val title = text(b, from, until, "title").getOrElse("")
+    val ns = longElem(b, from, until, "ns").filter(v => v.toInt == v).map(_.toInt)
     // page id: first <id> AFTER </title> (titles can't contain tags —
     // entity-escaped — so the first <id> in the header is the page id).
-    val pageId = tagText(header, "id").flatMap(_.trim.toLongOption).getOrElse(-1L)
-    val redirect = element(header, "redirect", 0).map { case (attrs, _, _) =>
-      attr(attrs, "title").getOrElse("")
-    }
-    PageInfo(pageId, title, ns, redirect, header)
+    val pageId = longElem(b, from, until, "id").getOrElse(-1L)
+    val re = element(b, from, until, "redirect")
+    val redirect = if (re == null) None
+      else Some(attr(b, re.attrFrom, re.attrUntil, "title").getOrElse(""))
+    PageInfo(pageId, title, ns, redirect, new String(b, from, until - from, StandardCharsets.UTF_8))
   }
 
-  /** Parse one `<revision ...>...</revision>` fragment. `meta` gates
-    * the optional metadata extractions: every disabled field skips its
-    * substring search and per-field allocation — the nested-pruning
-    * analog of the reference's F3 header/body projection
-    * (`StreamWikiDumpInputFormat.java:412-420`), but at single-field
-    * granularity.
+  /** Parse one revision from b[from, until), `<revision` through
+    * `</revision>`; its `<text>` body is empty when the reader did not
+    * capture it. `meta` gates the optional metadata fields: a disabled
+    * one skips its search and decode — the nested-pruning analog of
+    * the reference's F3 header/body projection
+    * (`StreamWikiDumpInputFormat.java:412-420`), per field.
     *
-    * Metadata fields are searched in the fragment HEAD only (bytes
-    * before `<text`): the export format is an XSD `sequence` placing
-    * id/parentid/timestamp/contributor/minor/comment/model/format
-    * before the text element (evidenced throughout the reference's
-    * fixtures, e.g. `fileformat.rst` examples), and the body is
-    * entity-escaped so a literal `<text` cannot occur inside it.
-    * Without the bound, every ABSENT field (comment/model/format on
-    * most revisions, `<minor/>` three ways) costs a full scan of the
-    * text body — ~10KB of dead scanning per 2KB revision. Only `sha1`
-    * (which follows the text element) is searched after it. */
-  def parseRevision(rev: String, meta: RevMetaFields = RevMetaFields.All): Revision = {
-    val textStart = rev.indexOf("<text")
-    val head = if (textStart < 0) rev else rev.substring(0, textStart)
-    val revId = tagText(head, "id").flatMap(_.trim.toLongOption).getOrElse(-1L)
-    val parentId = tagText(head, "parentid").flatMap(_.trim.toLongOption)
-    val ts = tagText(head, "timestamp").flatMap(parseTimestampUs)
-    val contributor = if (!meta.contributor) None
-    else element(head, "contributor", 0).map { case (attrs, content, _) =>
-      if (attr(attrs, "deleted").contains("deleted"))
-        Contributor(None, None, None, deleted = true)
-      else Contributor(
-        tagText(content, "id").flatMap(_.trim.toLongOption),
-        tagText(content, "username"),
-        tagText(content, "ip"),
-        deleted = false)
+    * Metadata is searched in the HEAD only (bytes before `<text`): the
+    * export format's XSD `sequence` puts id, parentid, timestamp,
+    * contributor, minor, comment, model and format before the text
+    * element (e.g. the reference's `fileformat.rst` examples), and the
+    * entity-escaped body cannot hold a literal `<text`. So an ABSENT
+    * field never scans the body; only `sha1`, which follows the text
+    * element, is searched after it. A deleted text is a null `textU8`. */
+  def parseRevision(b: Array[Byte], from: Int, until: Int,
+      meta: RevMetaFields = RevMetaFields.All): Revision = {
+    val textStart = indexOf(b, from, until, "<text")
+    val head = if (textStart < 0) until else textStart
+    val revId = longElem(b, from, head, "id").getOrElse(-1L)
+    val parentId = longElem(b, from, head, "parentid")
+    val tsEl = element(b, from, head, "timestamp")
+    val ts = if (tsEl == null) None else parseTimestampUs(b, tsEl.contentFrom, tsEl.contentUntil)
+    val contributor = if (!meta.contributor) None else {
+      val c = element(b, from, head, "contributor")
+      if (c == null) None
+      else if (deleted(b, c)) Some(Contributor(None, None, None, deleted = true))
+      else Some(Contributor(
+        longElem(b, c.contentFrom, c.contentUntil, "id"),
+        text(b, c.contentFrom, c.contentUntil, "username"),
+        text(b, c.contentFrom, c.contentUntil, "ip"),
+        deleted = false))
     }
-    val minor = meta.minor &&
-      (head.contains("<minor/>") || head.contains("<minor />") || head.contains("<minor></minor>"))
-    val comment = if (!meta.comment) None
-    else element(head, "comment", 0).flatMap { case (attrs, content, _) =>
-      if (attr(attrs, "deleted").contains("deleted")) None else Some(unescape(content))
+    val minor = meta.minor && (indexOf(b, from, head, "<minor/>") >= 0 ||
+      indexOf(b, from, head, "<minor />") >= 0 || indexOf(b, from, head, "<minor></minor>") >= 0)
+    val comment = if (!meta.comment) None else {
+      val c = element(b, from, head, "comment")
+      if (c == null || deleted(b, c)) None else Some(decode(b, c.contentFrom, c.contentUntil))
     }
-    val model = if (meta.model) tagText(head, "model") else None
-    val format = if (meta.format) tagText(head, "format") else None
-    val textEl = if (textStart < 0) None else element(rev, "text", textStart)
-    val text = textEl.flatMap { case (attrs, content, _) =>
-      if (attr(attrs, "deleted").contains("deleted")) None else Some(unescape(content))
+    val model = if (meta.model) text(b, from, head, "model") else None
+    val format = if (meta.format) text(b, from, head, "format") else None
+    val t = if (textStart < 0) null else element(b, textStart, until, "text")
+    val textU8 =
+      if (t == null || deleted(b, t)) null else unescapeToU8(b, t.contentFrom, t.contentUntil)
+    val bytes = if (!meta.bytes || t == null) None else {
+      val r = attrRange(b, t.attrFrom, t.attrUntil, "bytes")
+      if (r < 0) None else long(b, (r >>> 32).toInt, r.toInt, trim = false)
     }
-    val bytes = if (!meta.bytes) None
-    else textEl.flatMap { case (attrs, _, _) => attr(attrs, "bytes").flatMap(_.toLongOption) }
     val sha1 = if (!meta.sha1) None
-    else textEl match {
-      case Some((_, _, after)) => tagText(rev, "sha1", after)
-      case None => tagText(rev, "sha1", 0)
-    }
+      else text(b, if (t == null) from else t.after, until, "sha1")
     Revision(revId, parentId, ts, contributor, minor, comment, model, format,
-      text.map(org.apache.spark.unsafe.types.UTF8String.fromString).orNull,
-      sha1, bytes, None)
+      textU8, sha1, bytes, None)
   }
 }
 
@@ -655,7 +687,7 @@ object PageRecordIterator {
   private val GT = ">".getBytes(StandardCharsets.UTF_8)
 
   /** Growable capture buffer with zero-copy access to its backing
-    * array — the byte path slices text bodies straight out of it. */
+    * array — every field is parsed straight out of it. */
   private[sources] final class ExposedBuf(cap: Int) extends java.io.ByteArrayOutputStream(cap) {
     def buffer: Array[Byte] = buf
     def length: Int = count
@@ -708,7 +740,7 @@ final class PageRecordIterator(
     * allocation-bound at 32 threads, and the per-revision
     * 1KB→fragment-size growth copies were pure garbage. Safe to share
     * between header and revision capture: calls are strictly
-    * sequential and only immutable Strings escape. */
+    * sequential and only decoded copies escape. */
   private val capBuf = new PageRecordIterator.ExposedBuf(1 << 16)
   private var page: PageInfo = _
   private var prev: Option[Revision] = None
@@ -729,34 +761,30 @@ final class PageRecordIterator(
       val pStart = scanner.matchStartPos
       if (!exclusiveStart && pStart >= ownEnd) return false
       if (owned(pStart)) {
-        // capture header up to first <revision> or </page>
+        // capture "<page>" and the header up to the first <revision> or </page>
         val cap = capBuf
         cap.reset()
+        cap.write(PAGE_BEGIN)
         val m = scanner.readUntil(Array(REV_BEGIN, PAGE_END), cap)
         if (m < 0) return false // truncated page: drop
-        if (m == 1) {
-          // revision-less page: emit nothing (reference emits per revision)
-        } else {
-          val header = "<page>" + new String(cap.buffer, 0, cap.length - REV_BEGIN.length, StandardCharsets.UTF_8)
-          val excluded = excludePagesWith.exists(p => p.matcher(header).find())
-          val parsed = if (excluded) null else XmlFields.parsePageHeader(header)
-          val titleDrop = parsed != null && titleFilter.exists(f => !f(parsed.title))
-          val idDrop = parsed != null && pageIdFilter.exists(f => !f(parsed.pageId))
+        if (m == 0) { // a revision-less page (m == 1) emits nothing, as in the reference
+          val parsed = XmlFields.parsePageHeader(cap.buffer, 0, cap.length - REV_BEGIN.length)
           // absent <ns> = NULL ns: fails every pushed predicate
-          val nsDrop = parsed != null && nsFilter.exists(f => !parsed.ns.exists(f))
-          if (!excluded && !titleDrop && !idDrop && !nsDrop) {
+          val keep = !excludePagesWith.exists(_.matcher(parsed.headerRaw).find()) &&
+            titleFilter.forall(_(parsed.title)) && pageIdFilter.forall(_(parsed.pageId)) &&
+            nsFilter.forall(f => parsed.ns.exists(f))
+          if (keep) {
             page = parsed
             prev = None
             revSeqNo = 0
             inPage = true
             pagesRead += 1
             return true
-          } else {
-            pagesSkipped += 1
-            // skip the rest of this page (text is entity-escaped, so a
-            // literal </page> cannot occur inside revision content)
-            if (scanner.readUntil(Array(PAGE_END), null) < 0) return false
           }
+          pagesSkipped += 1
+          // skip the rest of this page (text is entity-escaped, so a
+          // literal </page> cannot occur inside revision content)
+          if (scanner.readUntil(Array(PAGE_END), null) < 0) return false
         }
       } else if (exclusiveStart && pStart > ownEnd) {
         return false
@@ -775,45 +803,30 @@ final class PageRecordIterator(
     * are always captured; the body between them only when `keepRaw` or
     * `needText` asks for it — otherwise it is scanned uncaptured (it is
     * typically >90% of the bytes) and a literal `</text>` stands in for
-    * it. Field extraction parses head + tail as one empty-text fragment
-    * (~200B of metadata, `sha1` included); a captured body is attached
-    * by byte-level entity decode straight from the buffer (entity-free
-    * bodies are one copyOfRange). Revisions with no `<text>` element or
-    * a self-closing one are parsed whole. `raw` is the whole capture. */
+    * it, so the text reads as empty. Every field is then parsed from
+    * the capture buffer in place ([[XmlFields.parseRevision]]); the
+    * body, when captured, is decoded straight from it. `raw` is the
+    * whole capture. */
   private def readRevision(): Option[Revision] = {
     val cap = capBuf
     cap.reset()
     // seed the buffer with the already-consumed "<revision" so the
-    // fragment decodes without a concat
+    // capture is the whole element
     cap.write(REV_BEGIN)
     val m = scanner.readUntil(Array(REV_END, TEXT_BEGIN), cap)
     if (m < 0) return None // truncated
-    var gtEnd = -1 // end of an open (not self-closing) <text ...> tag
-    var bodyEnd = -1
     if (m == 1) {
       if (scanner.readUntil(Array(GT), cap) < 0) return None
-      if (cap.buffer(cap.length - 2) != '/') {
-        gtEnd = cap.length
+      if (cap.buffer(cap.length - 2) != '/') { // an open, not self-closing, <text ...>
         val keepBody = keepRaw || needText
         if (scanner.readUntil(Array(TEXT_END), if (keepBody) cap else null) < 0) return None
         if (!keepBody) cap.write(TEXT_END)
-        bodyEnd = cap.length - TEXT_END.length
       }
       if (scanner.readUntil(Array(REV_END), cap) < 0) return None
     }
-    val buf = cap.buffer
-    val size = cap.length
-    val frag =
-      if (gtEnd < 0) new String(buf, 0, size, StandardCharsets.UTF_8)
-      else new String(buf, 0, gtEnd, StandardCharsets.UTF_8) +
-        new String(buf, bodyEnd, size - bodyEnd, StandardCharsets.UTF_8)
-    val parsed = XmlFields.parseRevision(frag, meta)
-    // deleted text (textU8 null) and empty bodies keep the parsed value
-    val withText =
-      if (parsed.textU8 == null || bodyEnd <= gtEnd) parsed
-      else parsed.copy(textU8 = XmlFields.unescapeToU8(buf, gtEnd, bodyEnd))
-    Some(if (keepRaw) withText.copy(raw = Some(new String(buf, 0, size, StandardCharsets.UTF_8)))
-      else withText)
+    val parsed = XmlFields.parseRevision(cap.buffer, 0, cap.length, meta)
+    Some(if (keepRaw) parsed.copy(raw = Some(new String(cap.buffer, 0, cap.length, StandardCharsets.UTF_8)))
+      else parsed)
   }
 
   private def advance(): Unit = {

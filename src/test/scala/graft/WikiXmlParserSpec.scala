@@ -14,6 +14,15 @@ class WikiXmlParserSpec extends AnyFunSuite {
   def fixtureBytes: Array[Byte] =
     java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(fixturePath))
 
+  private def u8(s: String): Array[Byte] = s.getBytes(StandardCharsets.UTF_8)
+  /** The byte parsers over a whole String's UTF-8 bytes. */
+  private def unescape(s: String): String = { val b = u8(s); XmlFields.unescapeToU8(b, 0, b.length).toString }
+  private def attr(s: String, name: String): Option[String] = { val b = u8(s); XmlFields.attr(b, 0, b.length, name) }
+  private def parseRevision(s: String, meta: RevMetaFields = RevMetaFields.All): Revision = {
+    val b = u8(s)
+    XmlFields.parseRevision(b, 0, b.length, meta)
+  }
+
   def parseAll(bytes: Array[Byte], start: Long = 0, end: Long = Long.MaxValue,
                exclude: Option[Pattern] = None, keepRaw: Boolean = false,
                needText: Boolean = true): List[RevisionPair] = {
@@ -79,7 +88,8 @@ class WikiXmlParserSpec extends AnyFunSuite {
         f"T${rnd.nextInt(24)}%02d:${rnd.nextInt(60)}%02d:${rnd.nextInt(60)}%02d" + "Z"
     }
     cases.foreach { iso =>
-      assert(XmlFields.parseTimestampUs(iso) == reference(iso), s"diverges on '$iso'")
+      val b = u8(iso)
+      assert(XmlFields.parseTimestampUs(b, 0, b.length) == reference(iso), s"diverges on '$iso'")
     }
   }
 
@@ -89,13 +99,13 @@ class WikiXmlParserSpec extends AnyFunSuite {
       "<contributor><username>U</username><id>3</id></contributor><minor/>" +
       "<comment>c</comment><model>wikitext</model><format>text/x-wiki</format>" +
       "<text bytes=\"5\" xml:space=\"preserve\">hello</text><sha1>abc</sha1></revision>"
-    val full = XmlFields.parseRevision(frag)
+    val full = parseRevision(frag)
     assert(full.contributor.isDefined && full.minor && full.comment.isDefined &&
       full.model.isDefined && full.format.isDefined && full.sha1.isDefined &&
       full.bytes.isDefined)
     val none = RevMetaFields(contributor = false, minor = false, comment = false,
       model = false, format = false, sha1 = false, bytes = false)
-    val pruned = XmlFields.parseRevision(frag, none)
+    val pruned = parseRevision(frag, none)
     assert(pruned.contributor.isEmpty && !pruned.minor && pruned.comment.isEmpty &&
       pruned.model.isEmpty && pruned.format.isEmpty && pruned.sha1.isEmpty &&
       pruned.bytes.isEmpty)
@@ -103,10 +113,10 @@ class WikiXmlParserSpec extends AnyFunSuite {
     assert(pruned.revId == full.revId && pruned.parentId == full.parentId &&
       pruned.timestampUs == full.timestampUs && pruned.text == full.text)
     // single-field masks extract just that field
-    val onlyContrib = XmlFields.parseRevision(frag,
+    val onlyContrib = parseRevision(frag,
       none.copy(contributor = true))
     assert(onlyContrib.contributor == full.contributor && onlyContrib.model.isEmpty)
-    val onlySha = XmlFields.parseRevision(frag, none.copy(sha1 = true))
+    val onlySha = parseRevision(frag, none.copy(sha1 = true))
     assert(onlySha.sha1 == full.sha1 && onlySha.contributor.isEmpty)
   }
 
@@ -200,26 +210,34 @@ class WikiXmlParserSpec extends AnyFunSuite {
   test("attr never matches a name embedded in a preceding attribute's value") {
     // values legally contain spaces, '=', and the other quote style —
     // a plain indexOf scan returned the embedded pseudo-value (ADVICE r13)
-    assert(XmlFields.attr("""alt="use title = 'x'" title="real"""", "title") == Some("real"))
-    assert(XmlFields.attr("""alt='t = "deleted" here' deleted="deleted"""", "deleted") == Some("deleted"))
+    assert(attr("""alt="use title = 'x'" title="real"""", "title") == Some("real"))
+    assert(attr("""alt='t = "deleted" here' deleted="deleted"""", "deleted") == Some("deleted"))
     // embedded-only occurrence: absent, not the embedded value
-    assert(XmlFields.attr("""alt="title = 'fake'"""", "title").isEmpty)
+    assert(attr("""alt="title = 'fake'"""", "title").isEmpty)
     // quote-style + whitespace tolerance unchanged
-    assert(XmlFields.attr("title = 'Else Where'", "title") == Some("Else Where"))
-    assert(XmlFields.attr("""bytes="5" xml:space="preserve"""", "bytes") == Some("5"))
+    assert(attr("title = 'Else Where'", "title") == Some("Else Where"))
+    assert(attr("""bytes="5" xml:space="preserve"""", "bytes") == Some("5"))
     // prefix names never match (title vs xtitle) and malformed is absent
-    assert(XmlFields.attr("""xtitle="no"""", "title").isEmpty)
-    assert(XmlFields.attr("title=", "title").isEmpty)
-    assert(XmlFields.attr("""title="unterminated""", "title").isEmpty)
-    assert(XmlFields.attr("standalone title=\"t\"", "title") == Some("t"))
+    assert(attr("""xtitle="no"""", "title").isEmpty)
+    assert(attr("title=", "title").isEmpty)
+    assert(attr("""title="unterminated""", "title").isEmpty)
+    assert(attr("standalone title=\"t\"", "title") == Some("t"))
   }
 
   test("unescape handles named and numeric entities") {
-    assert(XmlFields.unescape("a &amp; b &lt;c&gt; &quot;d&quot; &#65; &#x42;") == "a & b <c> \"d\" A B")
-    assert(XmlFields.unescape("no entities") == "no entities")
-    assert(XmlFields.unescape("dangling & amp") == "dangling & amp")
+    assert(unescape("a &amp; b &lt;c&gt; &quot;d&quot; &#65; &#x42;") == "a & b <c> \"d\" A B")
+    assert(unescape("no entities") == "no entities")
+    assert(unescape("dangling & amp") == "dangling & amp")
     // out-of-range numeric refs fall back to a literal '&', never throw
-    assert(XmlFields.unescape("bad &#1114112; ref") == "bad &#1114112; ref")
-    assert(XmlFields.unescape("bad &#x110000; ref") == "bad &#x110000; ref")
+    assert(unescape("bad &#1114112; ref") == "bad &#1114112; ref")
+    assert(unescape("bad &#x110000; ref") == "bad &#x110000; ref")
+    // a signed numeric reference is not XML (StAX rejects it): literal
+    assert(unescape("signed &#+12; ref") == "signed &#+12; ref")
+    // invalid UTF-8: entities are ASCII, so decoding after unescaping
+    // gives what decoding before it gives
+    val title = Array[Byte]('T', 0xc3.toByte, '&', 'a', 'm', 'p', ';', 0xff.toByte, 'x', 0xe6.toByte)
+    assert(XmlFields.unescapeToU8(title, 0, title.length).toString ==
+      new String(title, StandardCharsets.UTF_8).replace("&amp;", "&"))
+    assert(XmlFields.unescapeToU8(title, 0, title.length).toString == "T\uFFFD&\uFFFDx\uFFFD")
   }
 }
