@@ -126,20 +126,28 @@ class RepeatedSequencesSpec extends AnyFunSuite {
     }
   }
 
-  test("token functions reject a window n that is not a non-null literal >= 1; " +
+  test("token_windows rejects a window n that is not a non-null literal >= 1") {
+    val df = Seq((1L, "a b c")).toDF("doc_id", "text")
+    for (n <- Seq("0", "-1", "-2", "CAST(NULL AS INT)")) {
+      val e = intercept[org.apache.spark.sql.AnalysisException](
+        df.selectExpr(s"token_windows(text, $n) AS ws"))
+      assert(e.getMessage.contains("n >= 1"), s"n=$n: ${e.getMessage}")
+    }
+    assert(df.selectExpr("size(token_windows(text, 1))").head().getInt(0) == 3)
+  }
+
+  test("token_spans, token_chunks, shingles and cut_spans share the window n check; " +
       "cut_spans skips NULL starts") {
     val df = Seq((1L, "a b c")).toDF("doc_id", "text")
-    for (call <- Seq("token_windows(text, %s)", "token_spans(text, %s)", "token_chunks(text, %s)",
+    for (call <- Seq("token_spans(text, %s)", "token_chunks(text, %s)",
         "shingles(text, %s)", "cut_spans(text, array(0L), %s)");
         n <- Seq("0", "-1", "-2", "CAST(NULL AS INT)")) {
       val e = intercept[org.apache.spark.sql.AnalysisException](df.selectExpr(call.format(n)))
       assert(e.getMessage.contains("n >= 1"), s"${call.format(n)}: ${e.getMessage}")
     }
-    val ok = df.selectExpr("size(token_windows(text, 1))", "size(token_spans(text, 1))",
-      "size(token_chunks(text, 1))", "size(shingles(text, 1))",
-      "cut_spans(text, array(CAST(NULL AS BIGINT), 2L), 1)").head()
-    assert((ok.getInt(0), ok.getInt(1), ok.getInt(2), ok.getInt(3), ok.getString(4)) ==
-      ((3, 3, 3, 3, "a b")))
+    val ok = df.selectExpr("size(token_spans(text, 1))", "size(token_chunks(text, 1))",
+      "size(shingles(text, 1))", "cut_spans(text, array(CAST(NULL AS BIGINT), 2L), 1)").head()
+    assert((ok.getInt(0), ok.getInt(1), ok.getInt(2), ok.getString(3)) == ((3, 3, 3, "a b")))
   }
 
   test("empty and single-token documents do not break the scan") {
